@@ -103,16 +103,20 @@ object Bench {
 
     // one retry: these two rates are the round's headline comparison
     // against the reference baseline, and a single child crash should
-    // not publish them as zero
+    // not lose them; a rate still missing after it is listed under
+    // `failed`, never published as zero
+    val rateKeys = Seq("pipeline_rows_per_sec", "stream_rows_per_sec")
     val tput = {
       val first = runChild("--tput", "tput")
-      if (first.nonEmpty) first else runChild("--tput", "tput_retry")
+      if (rateKeys.forall(first.contains)) first
+      else first ++ runChild("--tput", "tput_retry")
     }
 
     val names = SparkEntry.queries.keys.toSeq.sorted
     val chunks = names.grouped(ChunkSize).toSeq
     val sweep = scala.collection.mutable.Map.empty[String, Double]
     val failed = scala.collection.mutable.ListBuffer.empty[String]
+    failed ++= rateKeys.filterNot(tput.contains)
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       val got = runChild(chunk.mkString(","), f"chunk$i%02d")
       sweep ++= got
@@ -211,7 +215,8 @@ object Bench {
     val failedJson =
       if (failed.isEmpty) ""
       else failed.map(n => s""""$n"""").mkString(""","failed":[""", ",", "]")
-    def scalar(k: String): Long = tput.getOrElse(k, 0.0).round
-    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${jmap(worst)},"sf":"$sfDir","n_queries":${results.size},"pipeline_rows_per_sec":${scalar("pipeline_rows_per_sec")},"stream_rows_per_sec":${scalar("stream_rows_per_sec")},"stream_steady_batches":${scalar("stream_steady_batches")},"telemetry":$teleSummary$failedJson,"detail":"target/bench_detail.json","detail_archive":"$archPath"}""")
+    val rates = (rateKeys :+ "stream_steady_batches").flatMap(k =>
+      tput.get(k).map(v => s""""$k":${v.round},""")).mkString
+    println(s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":${jmap(worst)},"sf":"$sfDir","n_queries":${results.size},$rates"telemetry":$teleSummary$failedJson,"detail":"target/bench_detail.json","detail_archive":"$archPath"}""")
   }
 }

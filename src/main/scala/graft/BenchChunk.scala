@@ -31,6 +31,16 @@ object BenchChunk {
       case _ => Double.NaN
     }
 
+  /** Run `body`, which writes its own result lines; on a throw, log
+    * it to stderr and write nothing, so the caller sees the result as
+    * missing rather than as a number.
+    */
+  private def attempt(what: String)(body: => Unit): Unit =
+    try body
+    catch { case t: Throwable =>
+      System.err.println(s"[bench-chunk] $what failed: $t")
+    }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, cpus, outFile, spec) = (args(0), args(1), args(2), args(3))
     val spark = graft.jobs.Jobs.localBuilder("graft-bench-chunk", cpus)
@@ -61,21 +71,25 @@ object BenchChunk {
       // the MEDIAN of runs 2–4. Max-of-N (the r07 estimator) keeps the
       // single most favorable run and is one-sided; the post-warmup
       // median is a two-sided steady-state estimate.
-      val runs = (1 to 4).map { _ =>
-        val t0 = System.nanoTime()
-        val rows =
-          try SparkEntry.queries("pipeline_score")(spark, sfDir).count()
-          catch { case _: Throwable => 0L }
-        rows / ((System.nanoTime() - t0) / 1e9)
+      // A rate that throws publishes NO line (never a 0 rows/s that
+      // reads as a measurement): Bench retries the child, then lists
+      // the missing rate under `failed`.
+      attempt("pipeline_rows_per_sec") {
+        val runs = (1 to 4).map { _ =>
+          val t0 = System.nanoTime()
+          val rows = SparkEntry.queries("pipeline_score")(spark, sfDir).count()
+          rows / ((System.nanoTime() - t0) / 1e9)
+        }
+        val tput = runs.drop(1).sorted.apply(1) // median of runs 2-4
+        out ++= f"pipeline_rows_per_sec\t$tput%.1f\n"
       }
-      val tput = runs.drop(1).sorted.apply(1) // median of runs 2-4
-      val (streamRate, streamBatches) =
-        try graft.streaming.StreamingJob.sustainedScoringRate(
-          spark, sfDir, "/tmp/graft_bench_stream")
-        catch { case _: Throwable => (0.0, 0) }
-      out ++= f"pipeline_rows_per_sec\t$tput%.1f\n"
-      out ++= f"stream_rows_per_sec\t$streamRate%.1f\n"
-      out ++= s"stream_steady_batches\t$streamBatches\n"
+      attempt("stream_rows_per_sec") {
+        val (streamRate, streamBatches) =
+          graft.streaming.StreamingJob.sustainedScoringRate(
+            spark, sfDir, "/tmp/graft_bench_stream")
+        out ++= f"stream_rows_per_sec\t$streamRate%.1f\n"
+        out ++= s"stream_steady_batches\t$streamBatches\n"
+      }
     } else {
       // one warm-up pass (session init, codegen, file listing) so the
       // chunk's first query doesn't absorb one-time costs
@@ -92,33 +106,38 @@ object BenchChunk {
       }.min
       out ++= f"#canary_a15\t$canary%.4f\n"
       for (name <- spec.split(',')) {
-        val fn = SparkEntry.queries(name)
         // min of two back-to-back runs — the same definition as the
         // TimeQueries standalone the judge compares against: the
         // first run absorbs per-query one-time costs (file listing of
         // tables the warm-up didn't touch, codegen of this query's
-        // expressions), the second is the steady-state cost
-        val t = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          try fn(spark, sfDir).count() catch { case _: Throwable => () }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // cleanup AFTER the clock stops, BEFORE the next run: a run
-          // must never execute under a predecessor's still-resident
-          // localCheckpoint blocks — but DESIGNED shared state stays.
-          // The dashboard queries deliberately share one persisted
-          // scored table (the reference dashboard reads a
-          // materialized table too; re-scoring per query is not the
-          // serving model, and TimeQueries — the standalone
-          // definition — keeps it as well). Dataset-cache RDDs are
-          // NAMED by the cache builder (abbreviated plan string);
-          // localCheckpoint block RDDs are anonymous — that is the
-          // discriminator.
-          spark.sparkContext.getPersistentRDDs.values
-            .filter(_.name == null)
-            .foreach(_.unpersist(true))
-          dt
-        }.min
-        out ++= f"$name\t$t%.4f\n"
+        // expressions), the second is the steady-state cost. A run
+        // that throws publishes no line for the query (never its
+        // time-to-throw): Bench re-runs it alone, then lists it under
+        // `failed`.
+        attempt(name) {
+          val fn = SparkEntry.queries(name)
+          val t = (1 to 2).map { _ =>
+            val t0 = System.nanoTime()
+            try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+            finally {
+              // cleanup AFTER the clock stops, BEFORE the next run: a
+              // run must never execute under a predecessor's
+              // still-resident localCheckpoint blocks — but DESIGNED
+              // shared state stays. The dashboard queries deliberately
+              // share one persisted scored table (the reference
+              // dashboard reads a materialized table too; re-scoring
+              // per query is not the serving model, and TimeQueries —
+              // the standalone definition — keeps it as well).
+              // Dataset-cache RDDs are NAMED by the cache builder
+              // (abbreviated plan string); localCheckpoint block RDDs
+              // are anonymous — that is the discriminator.
+              spark.sparkContext.getPersistentRDDs.values
+                .filter(_.name == null)
+                .foreach(_.unpersist(true))
+            }
+          }.min
+          out ++= f"$name\t$t%.4f\n"
+        }
       }
     }
     out ++= f"#chunk_wall\t${(System.nanoTime() - chunkT0) / 1e9}%.2f\n"

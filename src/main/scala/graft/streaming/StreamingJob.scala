@@ -33,6 +33,79 @@ object StreamingJob {
   private def startLocked(f: => StreamingQuery): StreamingQuery =
     confLock.synchronized(f)
 
+  /** The scratch directory of one streaming call, `$workDir-<pid>`,
+    * wiped on entry. The per-process suffix: a re-run in THIS process
+    * overwrites its own previous output, while another process (e.g.
+    * the bench running beside an oracle check) can never delete files
+    * this one is still lazily reading.
+    */
+  private def scratch(workDir: String): String = {
+    val dir = s"$workDir-${ProcessHandle.current().pid()}"
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    dir
+  }
+
+  /** Files an admission stream stages its arrivals as. */
+  private val StagedFiles = 4
+
+  /** Files admitted per trigger — the r9 admission-size default for
+    * chunking-invariant loops (per-doc/per-merge work against frozen
+    * or summed state): half the per-trigger fixed floor of one file
+    * per trigger, for an identical, oracle-pinned drained result.
+    * Loops whose drained rows depend on batch composition pass 1.
+    */
+  private val FilesPerTrigger = 2
+
+  /** Stage `input` as `files` parquet files under `$dir/in` and open
+    * them as a file stream admitting `perTrigger` files per trigger.
+    */
+  private def stage(input: DataFrame, dir: String, files: Int,
+                    perTrigger: Int): DataFrame = {
+    input.repartition(files).write.parquet(s"$dir/in")
+    input.sparkSession.readStream.schema(input.schema)
+      .option("maxFilesPerTrigger", perTrigger).parquet(s"$dir/in")
+  }
+
+  /** Run `stream` to its end through `perBatch` on every micro-batch
+    * (checkpoint `$dir/ckpt`, `AvailableNow`) and await it. Returns
+    * the terminated query for its progress.
+    */
+  private def drain(stream: DataFrame, dir: String)
+                   (perBatch: (DataFrame, Long) => Unit): StreamingQuery = {
+    val q = startLocked(stream.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch(perBatch)
+      .trigger(Trigger.AvailableNow())
+      .start())
+    q.awaitTermination()
+    q
+  }
+
+  /** The admission-stream skeleton: [[stage]] `input` and [[drain]]
+    * it through `perBatch`.
+    */
+  private def admit(input: DataFrame, dir: String, files: Int,
+                    perTrigger: Int)
+                   (perBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    drain(stage(input, dir, files, perTrigger), dir)(perBatch)
+
+  /** [[admit]] whose per-batch product lands in `$dir/out` as an
+    * idempotent `ingest=<batchId>` overwrite partition (the
+    * [[graft.io.IdempotentBatchSink]] pattern: an at-least-once
+    * redelivery replaces its own previous write). Returns the drained
+    * union, `ingest` dropped.
+    */
+  private def admitToOut(input: DataFrame, dir: String, files: Int,
+                         perTrigger: Int)
+                        (perBatch: DataFrame => DataFrame): DataFrame = {
+    admit(input, dir, files, perTrigger) { (batch, batchId) =>
+      perBatch(batch).write.mode("overwrite")
+        .parquet(s"$dir/out/ingest=$batchId")
+    }
+    input.sparkSession.read.parquet(s"$dir/out").drop("ingest")
+  }
+
   /** Run a streaming DataFrame to completion into a uniquely-named
     * memory sink (T3 append / complete), returning the result as a
     * self-contained local DataFrame. The memory sink's rows already
@@ -97,13 +170,8 @@ object StreamingJob {
     */
   def runToParquet(stream: DataFrame, workDir: String): DataFrame = {
     val spark = stream.sparkSession
-    // per-process suffix: a re-run in THIS process overwrites its own
-    // previous output, while another process (e.g. the bench running
-    // beside an oracle check) can never delete files this one is still
-    // lazily reading
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
+    val dir = scratch(workDir)
     val out = s"$dir/out"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     val q = startLocked(stream.writeStream.format("parquet")
       .option("path", out)
       .option("checkpointLocation", s"$dir/ckpt")
@@ -219,28 +287,20 @@ object StreamingJob {
     require(nFiles <= 64,
       s"nFiles=$nFiles exceeds the recentProgress retention window")
     import graft.etl.{ScoringPipeline, TestdataAdapter}
-    val in = s"$workDir/in"
-    val ckpt = s"$workDir/ckpt"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(workDir))
-    val ev = graft.Tables.events(spark, sfDir).repartition(nFiles)
-    ev.write.mode("overwrite").parquet(in)
+    val dir = scratch(workDir)
     // deliberately 1 file per trigger: this method MEASURES the
     // steady-state per-batch rate over many batches — batch size is
     // the experiment's controlled variable, not a floor to optimize
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(in)
+    val stream = stage(graft.Tables.events(spark, sfDir), dir, nFiles, 1)
+    // scored in the STREAMING plan, as a deployment runs it — scoring
+    // each batch inside foreachBatch instead would time a different
+    // (batch) plan
     val scored = ScoringPipeline.score(
       ScoringPipeline.enrich(TestdataAdapter.transactionsFromEvents(stream),
         TestdataAdapter.users(spark, sfDir),
         TestdataAdapter.regions(spark, sfDir)),
       TestdataAdapter.eventLimitArms)
-    val q = startLocked(scored.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .foreachBatch { (df: DataFrame, _: Long) => df.count(); () }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
+    val q = drain(scored, dir) { (df, _) => df.count(); () }
     val steady = q.recentProgress.filter(_.numInputRows > 0).drop(1)
     val rows = steady.map(_.numInputRows).sum
     val secs = steady
@@ -301,36 +361,24 @@ object StreamingJob {
   }
 
   /** Drive [[mergeIntoMv]] from a file stream over the events table
-    * (split into `nFiles` single-file micro-batches), then read the
-    * maintained view back. The driver-contract query on top checks the
-    * N-merge result against the one-pass batch oracle.
+    * (6 staged files, 2 per trigger: still a multi-merge exercise — 3
+    * merges — at half the per-trigger floor; the merged MV is a sum,
+    * invariant to chunking, oracle-pinned), then read the maintained
+    * view back. The driver-contract query on top checks the N-merge
+    * result against the one-pass batch oracle.
     */
   def incrementalMv(spark: SparkSession, sfDir: String,
-                    workDir: String, nFiles: Int = 6,
-                    filesPerTrigger: Int = 2): DataFrame = {
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    val in = s"$dir/in"
-    val mv = s"$dir/mv"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                    workDir: String): DataFrame = {
+    val dir = scratch(workDir)
     // only the columns the MV consumes: staging the wide events row
     // (the props JSON string dominates its bytes) tripled the cost of
     // an exercise that is about merge mechanics, not scan width
     val ev = graft.Tables.events(spark, sfDir)
-      .select(col("event_type"), col("value")).repartition(nFiles)
-    ev.write.mode("overwrite").parquet(in)
-    // 2 files per trigger (r9): still a multi-merge exercise (3
-    // merges over 6 files) at half the per-trigger floor; the merged
-    // MV is a sum, invariant to chunking, oracle-pinned
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(in)
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) => mergeIntoMv(batch, mv) }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    spark.read.parquet(mv).select("event_type", "n", "sum_value")
+      .select(col("event_type"), col("value"))
+    admit(ev, dir, 6, FilesPerTrigger) { (batch, _) =>
+      mergeIntoMv(batch, s"$dir/mv")
+    }
+    spark.read.parquet(s"$dir/mv").select("event_type", "n", "sum_value")
   }
 
   /** Streaming maintenance of the persisted near-dup band index
@@ -350,27 +398,16 @@ object StreamingJob {
                             id: String, text: String, n: Int,
                             threshold: Double, workDir: String,
                             nFiles: Int = 4): DataFrame = {
-    val s = corpus.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    corpus.repartition(nFiles).write.parquet(s"$dir/in")
-    // deliberately NOT on the r9 2-files-per-trigger default: this
-    // loop's output is (in_doc, corpus_doc) probe hits, whose
-    // ORIENTATION depends on batch composition (a same-batch pair
-    // emits both directions, a cross-batch pair only later→earlier) —
-    // re-chunking would change the drained rows the oracle pins
-    val stream = s.readStream.schema(corpus.schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Dedup.bandIndexIngestBatch(batch, id, text, n,
-          s"$dir/ix", batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
+    val dir = scratch(workDir)
+    // deliberately 1 file per trigger, not FilesPerTrigger: this loop's
+    // output is (in_doc, corpus_doc) probe hits, whose ORIENTATION
+    // depends on batch composition (a same-batch pair emits both
+    // directions, a cross-batch pair only later→earlier) — re-chunking
+    // would change the drained rows the oracle pins
+    admit(corpus, dir, nFiles, 1) { (batch, batchId) =>
+      graft.dedup.Dedup.bandIndexIngestBatch(batch, id, text, n,
+        s"$dir/ix", batchId)
+    }
     graft.dedup.Dedup.bandIndexProbe(probeDocs, id, text, n,
       s"$dir/ix", threshold)
   }
@@ -387,48 +424,33 @@ object StreamingJob {
     * Per-trigger cost: O(batch) + a groups-sized merge.
     */
   def streamDriftMonitor(spark: SparkSession, sfDir: String,
-                         workDir: String, nFiles: Int = 4,
-                         filesPerTrigger: Int = 2): DataFrame = {
+                         workDir: String): DataFrame = {
     import graft.functions.Drift
     val (lo, hi, nBins) = (0.0, 500.0, 10)
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = scratch(workDir)
     val mv = s"$dir/counts"
-    ev.filter(col("event_id") % 2 === 1)
-      .repartition(nFiles).write.parquet(s"$dir/in")
-    // 2 files per trigger — the r9 admission-size default for
-    // chunking-invariant loops (per-doc/per-merge work against frozen
-    // or summed state): half the per-trigger fixed floor, identical
-    // drained result, oracle-pinned
-    val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val partial = Drift.binCounts(batch, "event_type", "value",
-          lo, hi, nBins)
-        val existing =
-          if (new java.io.File(mv).exists())
-            batch.sparkSession.read.parquet(mv)
-              .join(partial.select(col("g")).distinct(), Seq("g"),
-                "left_semi")
-              .select(col("g"), col("bin"), col("n"))
-          else partial.limit(0)
-        val merged = existing.unionByName(partial)
-          .groupBy(col("g"), col("bin")).agg(sum(col("n")).as("n"))
-          .localCheckpoint(true)
-        merged.write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("g").parquet(mv)
-        merged.unpersist()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
+    admit(ev.filter(col("event_id") % 2 === 1), dir, StagedFiles,
+        FilesPerTrigger) { (batch, _) =>
+      val partial = Drift.binCounts(batch, "event_type", "value",
+        lo, hi, nBins)
+      val existing =
+        if (new java.io.File(mv).exists())
+          batch.sparkSession.read.parquet(mv)
+            .join(partial.select(col("g")).distinct(), Seq("g"),
+              "left_semi")
+            .select(col("g"), col("bin"), col("n"))
+        else partial.limit(0)
+      val merged = existing.unionByName(partial)
+        .groupBy(col("g"), col("bin")).agg(sum(col("n")).as("n"))
+        .localCheckpoint(true)
+      merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("g").parquet(mv)
+      merged.unpersist()
+      ()
+    }
     Drift.psiOfCounts(
       Drift.binCounts(ev.filter(col("event_id") % 2 === 0),
         "event_type", "value", lo, hi, nBins),
@@ -450,90 +472,40 @@ object StreamingJob {
     * at-least-once-safe: re-ingest overwrites its own partition,
     * re-probe re-emits the same edges, and label merging is a
     * fixpoint under duplicate edges.
+    *
+    * Label merging runs as a serialized background fold off the
+    * trigger's critical path ([[maintain]] over the `labels_queue`
+    * [[FoldQueue]]): ingest and edge discovery are the
+    * latency-critical admission work, while the label table is an
+    * eventually-consistent derived view. Coalescing folds are exact —
+    * the final labeling is a pure function of the union edge set, and
+    * component merging is order-independent — so recovery
+    * ([[recoverPendingLabelMerges]]) needs no coordination with live
+    * batches beyond the scheduler's single-writer serialization. In
+    * THIS harness the work dir starts empty, so recovery is a
+    * deployment-mode entry point, exercised by the crash-injection
+    * specs, not called here.
+    *
+    * `filesPerTrigger` stays a parameter: drained labels are identical
+    * under any chunking (the labeling is a pure function of the union
+    * edge set), and the chunking-invariance spec pins that by draining
+    * at 1 and at the default 2. At 2 files per trigger only ~2
+    * triggers arrive, so a fold starts as soon as the fold thread is
+    * idle (minPending 1) rather than waiting for a pair that may only
+    * show up at drain time; at 1 file per trigger folds wait for a
+    * pair.
     */
   def streamLabelMaintenance(docs: DataFrame, id: String, text: String,
                              n: Int, threshold: Double, workDir: String,
-                             nFiles: Int = 4, nBuckets: Int = 16,
-                             filesPerTrigger: Int = 2): DataFrame = {
+                             nBuckets: Int = 16,
+                             filesPerTrigger: Int = FilesPerTrigger): DataFrame = {
     val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    docs.repartition(nFiles).write.parquet(s"$dir/in")
-    // the keeper twin's admission-size discipline (r9): per trigger
-    // this loop pays a fixed floor — signature pass, two index
-    // writes, the queue commit — so the 2-files-per-trigger default
-    // halves the floor count for byte-identical drained state (the
-    // labeling is a pure function of the union edge set, and the
-    // spec pins drained ≡ scratch under any chunking). Callers that
-    // want to exercise per-trigger admission cadence pass 1.
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    // Label merging runs as a SERIALIZED BACKGROUND fold, off the
-    // trigger's critical path: ingest and edge discovery are the
-    // latency-critical admission work, while the label table is an
-    // eventually-consistent derived view — exactly how a production
-    // maintenance loop schedules it. Correctness:
-    //  · the trigger writes its edge set DURABLY to
-    //    `labels_queue/batch=<id>` (idempotent overwrite) against
-    //    exactly the index state its own ingest produced, BEFORE the
-    //    batch commits — so a crash between commit and fold loses
-    //    nothing: [[recoverPendingLabelMerges]] folds any unmarked
-    //    queue partition on restart (component merging is
-    //    order-independent — the union graph's components don't
-    //    depend on edge arrival order — so recovery needs no
-    //    coordination with live batches beyond the single-writer
-    //    serialization the scheduler provides). In THIS harness the
-    //    work dir starts empty, so recovery is a deployment-mode
-    //    entry point, exercised directly by the crash-injection
-    //    specs, not called here;
-    //  · folds execute one at a time, COALESCED ([[FoldScheduler]]):
-    //    each fold takes every `_SUCCESS`-committed, unmarked queue
-    //    partition at once — exact, because the final labeling is a
-    //    pure function of the union edge set — and marks them
-    //    `_MERGED` only after the labels write lands;
-    //  · the drain runs one last fold for any coalesced-away batch,
-    //    awaits it, and a fold failure fails the query.
-    // At-least-once replay: a redelivered batch overwrites its own
-    // queue partition and labelsMerge is a fixpoint under duplicates.
-    // minPending=1 at the 2-files-per-trigger cadence (the s30
-    // setting): only ~nFiles/2 triggers arrive, so fold as soon as
-    // the fold thread is idle rather than waiting for a pair that
-    // may only show up at drain time
-    val folder = new FoldScheduler(() => { foldLabelQueue(s, dir, nBuckets); () },
-      () => pendingLabelParts(dir).size,
-      minPending = if (filesPerTrigger >= 2) 1 else 2)
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        folder.failIfBroken()
-        // fused ingest+probe: one signature pass per trigger serves
-        // both index writes and the probe — see
-        // Dedup.bandIndexIngestProbeBatch
-        val part = s"$dir/labels_queue/batch=$batchId"
-        // cast to long at the WRITE (the keeper twin's discipline):
-        // the fold reads the queue with a hard BIGINT schema, and an
-        // int32 id column would otherwise commit INT32 parquet the
-        // vectorized reader refuses to widen; a value that does NOT
-        // cast fails the trigger loudly (longIdOrFail) instead of
-        // nulling into a row the fold would silently drop
-        graft.dedup.Dedup.bandIndexIngestProbeBatch(batch,
-            id, text, n, s"$dir/ix", batchId, threshold)
-          .filter(col("in_doc") =!= col("corpus_doc"))
-          .select(longIdOrFail(least(col("in_doc"), col("corpus_doc")),
-              "label-maintenance edge").as("a"),
-            longIdOrFail(greatest(col("in_doc"), col("corpus_doc")),
-              "label-maintenance edge").as("b"))
-          .distinct()
-          .write.mode("overwrite").parquet(part)
-        folder.submit()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    try q.awaitTermination()
-    catch { case t: Throwable => folder.abort(); throw t }
-    folder.drain()
+    val dir = scratch(workDir)
+    maintain(docs, dir, filesPerTrigger, labelQueue(s, dir, nBuckets),
+        minPending = if (filesPerTrigger >= 2) 1 else 2) { (batch, batchId) =>
+      edgesOf(batch, id, text, n, threshold, s"$dir/ix", batchId,
+        "label-maintenance edge")
+    }
     // a corpus with NO near-dup pairs drains without labelsMerge ever
     // creating the table (empty edge sets return before the write) —
     // "no labels" is the answer there, not a missing-path error (the
@@ -554,6 +526,130 @@ object StreamingJob {
       raise_error(concat(lit(s"$ctx: id does not cast to BIGINT: "),
         coalesce(c.cast("string"), lit("NULL")))).cast("long"))
 
+  /** A micro-batch's near-dup edges as distinct (a < b) BIGINT pairs:
+    * one fused ingest+probe signature pass
+    * ([[graft.dedup.Dedup.bandIndexIngestProbeBatch]]) serves both
+    * index writes and edge discovery. The ids are cast at the WRITE:
+    * the fold reads its queue with a hard BIGINT schema, and an int32
+    * id column would otherwise commit INT32 parquet the vectorized
+    * reader refuses to widen.
+    */
+  private def edgesOf(batch: DataFrame, id: String, text: String, n: Int,
+                      threshold: Double, ix: String, batchId: Long,
+                      ctx: String): DataFrame =
+    graft.dedup.Dedup.bandIndexIngestProbeBatch(batch, id, text, n, ix,
+        batchId, threshold)
+      .filter(col("in_doc") =!= col("corpus_doc"))
+      .select(longIdOrFail(least(col("in_doc"), col("corpus_doc")), ctx)
+          .as("a"),
+        longIdOrFail(greatest(col("in_doc"), col("corpus_doc")), ctx)
+          .as("b"))
+      .distinct()
+
+  /** A maintenance loop's durable fold queue: each trigger commits its
+    * rows to `<root>/<prefix><batchId>` (idempotent overwrite) BEFORE
+    * its batch commits, so a crash between commit and fold loses
+    * nothing. [[fold]] takes EVERY committed-but-unmerged batch at
+    * once, reads them as ONE multi-path scan with the explicit
+    * `schema`, hands that to `merge`, and only then marks them
+    * `_MERGED`. Eligible = the committer's `_SUCCESS` exists and
+    * `_MERGED` does not: a torn, never-committed batch is skipped — its
+    * trigger never committed either, so the stream redelivers over
+    * it — and folding (or failing on) its files would be wrong twice
+    * over. A fold finding nothing pending is a no-op; `merge` must be
+    * a fixpoint under refolding (a crash between the merge landing and
+    * the marker refolds the same batch). Serialized by the caller's
+    * [[FoldScheduler]]; the fold's jobs carry the description `desc`.
+    */
+  private final class FoldQueue(s: SparkSession, root: String,
+                                prefix: String, schema: String,
+                                desc: String)(merge: DataFrame => Unit) {
+    def part(batchId: Long): String = s"$root/$prefix$batchId"
+
+    /** Committed (`_SUCCESS`), unmerged batch dirs, in batch order. */
+    def pending: Seq[java.io.File] = {
+      val q = new java.io.File(root)
+      if (!q.isDirectory) Seq.empty
+      else q.listFiles().toSeq
+        .filter(f => f.isDirectory && f.getName.startsWith(prefix))
+        .filter(f => new java.io.File(f, "_SUCCESS").exists() &&
+          !new java.io.File(f, "_MERGED").exists())
+        .sortBy(_.getName.stripPrefix(prefix).toLong)
+    }
+
+    /** Fold every pending batch; returns how many it folded. */
+    def fold(): Int = withJobDescription(s, desc) {
+      val ps = pending
+      if (ps.nonEmpty) {
+        merge(s.read.schema(schema).parquet(ps.map(_.getPath): _*))
+        ps.foreach(p => new java.io.File(p, "_MERGED").createNewFile())
+      }
+      ps.size
+    }
+  }
+
+  /** The label loop's queue: edge sets at `labels_queue/batch=<id>`,
+    * folded by ONE [[graft.dedup.Dedup.labelsMerge]] over their union.
+    * pairsPinned: the queue partitions ARE durable materialized edge
+    * state — consumers re-scan a tiny parquet leaf.
+    */
+  private def labelQueue(s: SparkSession, dir: String,
+                         nBuckets: Int): FoldQueue =
+    new FoldQueue(s, s"$dir/labels_queue", "batch=", "a BIGINT, b BIGINT",
+        "label-fold")(edges =>
+      graft.dedup.Dedup.labelsMerge(s"$dir/labels", edges, "a", "b",
+        nBuckets, pairsPinned = true))
+
+  /** The keeper loop's queue: at `queue/b<id>`, each batch's edges AND
+    * its delta's (doc, q) rows as ONE union-schema parquet commit (edge
+    * rows carry null doc/q, delta rows null a/b — split back by null
+    * pattern), folded by ONE [[graft.dedup.Dedup.curationMerge]].
+    */
+  private def keeperQueue(s: SparkSession, dir: String,
+                          nBuckets: Int): FoldQueue =
+    new FoldQueue(s, s"$dir/queue", "b",
+        "a BIGINT, b BIGINT, doc BIGINT, q DOUBLE", "keeper-fold")(rows =>
+      graft.dedup.Dedup.curationMerge(s"$dir/cur",
+        rows.filter(col("a").isNotNull).select(col("a"), col("b")),
+        rows.filter(col("doc").isNotNull).select(col("doc"), col("q")),
+        "doc", "q", "a", "b", nBuckets, pairsPinned = true))
+
+  /** Drive a maintenance loop: [[admit]] `docs`, and on every trigger
+    * fail fast on an earlier fold error, commit `queueRows` to the
+    * batch's `queue` part, and offer the background fold. Folds run
+    * one at a time, COALESCED ([[FoldScheduler]]); the drain runs one
+    * last fold for any coalesced-away batch, awaits it, and a fold
+    * failure fails the call. At-least-once replay: a redelivered batch
+    * overwrites its own queue part, and every fold is a fixpoint under
+    * duplicates.
+    */
+  private def maintain(docs: DataFrame, dir: String, perTrigger: Int,
+                       queue: FoldQueue, minPending: Int)
+                      (queueRows: (DataFrame, Long) => DataFrame): Unit = {
+    val folder = new FoldScheduler(() => { queue.fold(); () },
+      () => queue.pending.size, minPending)
+    try admit(docs, dir, StagedFiles, perTrigger) { (batch, batchId) =>
+      folder.failIfBroken()
+      queueRows(batch, batchId).write.mode("overwrite")
+        .parquet(queue.part(batchId))
+      folder.submit()
+    } catch { case t: Throwable => folder.abort(); throw t }
+    folder.drain()
+  }
+
+  /** Scope a thread-local job description: label this block's jobs in
+    * the UI / job profiles, then RESTORE — the description is caller-
+    * thread state, and the recovery entry points run on whatever
+    * thread called them (leaving it set would mislabel every later
+    * job on that thread).
+    */
+  private def withJobDescription[T](s: SparkSession, desc: String)
+                                   (body: => T): T = {
+    val before = s.sparkContext.getLocalProperty("spark.job.description")
+    s.sparkContext.setJobDescription(desc)
+    try body finally s.sparkContext.setJobDescription(before)
+  }
+
   /** Serialized background-fold scheduler shared by the maintenance
     * loops: a fold starts only when NO fold is running (a trigger
     * arriving mid-fold skips its submit) AND at least `minPending`
@@ -564,7 +660,7 @@ object StreamingJob {
     * as often for byte-identical results. Safe, because a fold lists
     * the durable queue AT RUN TIME (so the next fold, or the drain's
     * unconditional final fold, covers every skipped batch), and
-    * exact, because the folds coalesce (see the callers' proofs).
+    * exact, because the folds coalesce (see [[FoldQueue]]).
     * The fold rate thereby adapts to fold cost and batch size —
     * triggers outpacing the fold grow the per-fold batch count, not
     * a task backlog — the backpressure a production compaction loop
@@ -639,23 +735,21 @@ object StreamingJob {
     * affected keeper row is recomputed from its member rows.
     *
     * The fold runs as a SERIALIZED BACKGROUND task off the trigger's
-    * critical path (the s18 schedule: the keeper table is a derived
-    * view, admission latency tracks ingest+probe), with one upgrade:
-    * each fold takes EVERY pending queue batch at once. Coalescing is
+    * critical path (the s18 schedule, [[maintain]]): the keeper table
+    * is a derived view, admission latency tracks ingest+probe. Each
+    * fold takes EVERY pending queue batch at once. Coalescing is
     * EXACT, not approximate — the final labeling is a pure function of
-    * the union edge set (component merging is order-independent), and
-    * the keeper fold recomputes affected components from member rows
-    * with every coalesced delta's q in hand — so folding batches
-    * {1,2,3} together lands byte-identical state to folding them one
-    * by one. Durability mirrors s18: each trigger writes its edge set
-    * AND its delta's (doc, q) rows to `queue/b<id>` as ONE
-    * union-schema parquet commit BEFORE the batch commits — the
-    * committer's `_SUCCESS` is the completeness marker (one atomic
-    * commit replaced the r7 two-write + `_READY` protocol: a
-    * coalesced fold can never list a half-committed batch because
-    * the batch IS one commit). A fold marks its batches `_MERGED`
-    * only after the merge lands; [[recoverPendingKeeperMerges]]
-    * refolds unmarked batches (idempotent fixpoint).
+    * the union edge set, and the keeper fold recomputes affected
+    * components from member rows with every coalesced delta's q in
+    * hand — so folding batches {1,2,3} together lands byte-identical
+    * state to folding them one by one. Each trigger commits its edges
+    * and its delta's (doc, q) rows as ONE parquet commit, so the
+    * committer's `_SUCCESS` is the completeness marker: a coalesced
+    * fold can never list a half-committed batch.
+    * [[recoverPendingKeeperMerges]] refolds unmarked batches
+    * (idempotent fixpoint). Two files per trigger with minPending 1:
+    * only ~2 batches arrive, so each folds as soon as the fold thread
+    * is idle and the fold genuinely races the next trigger.
     *
     * Ids must be integral (the [[graft.dedup.Dedup
     * .connectedComponents]] contract this composes with): the queue
@@ -665,69 +759,21 @@ object StreamingJob {
     */
   def streamKeeperMaintenance(docs: DataFrame, id: String, text: String,
                               n: Int, threshold: Double, workDir: String,
-                              nFiles: Int = 4,
-                              nBuckets: Int = 16,
-                              filesPerTrigger: Int = 2): DataFrame = {
+                              nBuckets: Int = 16): DataFrame = {
     val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    docs.repartition(nFiles).write.parquet(s"$dir/in")
-    // filesPerTrigger is Spark's own admission-size knob
-    // (maxFilesPerTrigger): per trigger this loop pays a fixed floor —
-    // signature pass, two index writes, the queue commit — so batch
-    // size trades admission latency against per-doc cost. Both
-    // maintenance loops default to 2 files per trigger (r9: s18
-    // adopted this loop's cadence; its per-trigger admission story
-    // is spec-pinned at filesPerTrigger=1 instead of paid for in
-    // every bench sweep). Drained state is identical under any
-    // chunking (spec-pinned: the oracle is the scratch recompute).
-    val stream = s.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    // minPending=1: at the 2-files-per-trigger cadence there are only
-    // ~nFiles/2 batches — fold each as soon as the fold thread is
-    // idle, so the fold genuinely races the next trigger (since r9
-    // the label loop runs the identical cadence and threshold; at a
-    // 1-file cadence both fall back to the pair threshold)
-    val folder = new FoldScheduler(() => { foldKeeperQueue(s, dir, nBuckets); () },
-      () => pendingKeeperParts(dir).size, minPending = 1)
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        folder.failIfBroken()
-        // one signature pass serves index writes and edge discovery;
-        // edges and the (doc, q) delta land as ONE union-schema
-        // parquet commit (edge rows carry null doc/q, delta rows null
-        // a/b) — one write job where r7 spent two plus a hand-rolled
-        // `_READY` marker, and the committer's atomic `_SUCCESS` now
-        // IS the fold-eligibility gate
-        val part = s"$dir/queue/b$batchId"
-        val edges = graft.dedup.Dedup.bandIndexIngestProbeBatch(batch,
-            id, text, n, s"$dir/ix", batchId, threshold)
-          .filter(col("in_doc") =!= col("corpus_doc"))
-          .select(longIdOrFail(least(col("in_doc"), col("corpus_doc")),
-              "keeper-maintenance edge").as("a"),
-            longIdOrFail(greatest(col("in_doc"), col("corpus_doc")),
-              "keeper-maintenance edge").as("b"))
-          .distinct()
-          .select(col("a"), col("b"), lit(null).cast("long").as("doc"),
-            lit(null).cast("double").as("q"))
-        // longIdOrFail: a doc id that does not cast would otherwise
-        // null out and be dropped by the fold's doc.isNotNull filter —
-        // a document silently missing from keeper state
-        val delta = batch.select(lit(null).cast("long").as("a"),
-          lit(null).cast("long").as("b"),
-          longIdOrFail(col(id), "keeper-maintenance delta").as("doc"),
-          round(graft.text.Text.qualityScore(col(text)), 6).as("q"))
-        edges.unionByName(delta).write.mode("overwrite").parquet(part)
-        folder.submit()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    try q.awaitTermination()
-    catch { case t: Throwable => folder.abort(); throw t }
-    folder.drain()
+    val dir = scratch(workDir)
+    maintain(docs, dir, FilesPerTrigger, keeperQueue(s, dir, nBuckets),
+        minPending = 1) { (batch, batchId) =>
+      val edges = edgesOf(batch, id, text, n, threshold, s"$dir/ix",
+          batchId, "keeper-maintenance edge")
+        .select(col("a"), col("b"), lit(null).cast("long").as("doc"),
+          lit(null).cast("double").as("q"))
+      val delta = batch.select(lit(null).cast("long").as("a"),
+        lit(null).cast("long").as("b"),
+        longIdOrFail(col(id), "keeper-maintenance delta").as("doc"),
+        round(graft.text.Text.qualityScore(col(text)), 6).as("q"))
+      edges.unionByName(delta)
+    }
     // explicit schema: an all-empty stream leaves a keeper table with
     // zero part files, where "no keepers" is the answer, not an
     // inference error
@@ -738,64 +784,6 @@ object StreamingJob {
         col("n_members"))
   }
 
-  /** Fold EVERY committed-but-unmerged keeper-queue batch in one
-    * [[graft.dedup.Dedup.curationMerge]] (exact — see
-    * [[streamKeeperMaintenance]]), then mark them `_MERGED`. Eligible
-    * = the committer's `_SUCCESS` exists (a torn, never-committed
-    * batch is skipped: its trigger never committed either, so the
-    * stream redelivers over it) and `_MERGED` does not. All pending
-    * batches are read as ONE multi-path scan with an explicit schema
-    * (a union-schema parquet dir holds edge rows and delta rows —
-    * split back by null pattern). Serialized by the caller's
-    * [[FoldScheduler]]; a fold finding nothing pending is a no-op.
-    * Returns how many batches it folded.
-    */
-  /** Committed (`_SUCCESS`), unmerged keeper-queue batch dirs. */
-  private def pendingKeeperParts(dir: String): Seq[java.io.File] = {
-    val qd = new java.io.File(s"$dir/queue")
-    if (!qd.exists()) return Seq.empty
-    qd.listFiles().toSeq.filter(_.isDirectory)
-      .filter(d => new java.io.File(d, "_SUCCESS").exists() &&
-        !new java.io.File(d, "_MERGED").exists())
-      .sortBy(_.getName)
-  }
-
-  private def foldKeeperQueue(s: SparkSession, dir: String,
-                              nBuckets: Int): Int =
-    withJobDescription(s, "keeper-fold") {
-      foldKeeperQueueInner(s, dir, nBuckets)
-    }
-
-  /** Scope a thread-local job description: label this block's jobs in
-    * the UI / job profiles, then RESTORE — the description is caller-
-    * thread state, and the recovery entry points run on whatever
-    * thread called them (leaving it set would mislabel every later
-    * job on that thread).
-    */
-  private def withJobDescription[T](s: SparkSession, desc: String)
-                                   (body: => T): T = {
-    val before = s.sparkContext.getLocalProperty("spark.job.description")
-    s.sparkContext.setJobDescription(desc)
-    try body finally s.sparkContext.setJobDescription(before)
-  }
-
-  private def foldKeeperQueueInner(s: SparkSession, dir: String,
-                                   nBuckets: Int): Int = {
-    val pending = pendingKeeperParts(dir)
-    if (pending.isEmpty) return 0
-    val rows = s.read.schema("a BIGINT, b BIGINT, doc BIGINT, q DOUBLE")
-      .parquet(pending.map(_.getPath).toSeq: _*)
-    // pairsPinned: the queue IS durable materialized edge state — its
-    // consumers re-scan a tiny parquet leaf (cheaper than a whole
-    // re-checkpoint pass per fold)
-    graft.dedup.Dedup.curationMerge(s"$dir/cur",
-      rows.filter(col("a").isNotNull).select(col("a"), col("b")),
-      rows.filter(col("doc").isNotNull).select(col("doc"), col("q")),
-      "doc", "q", "a", "b", nBuckets, pairsPinned = true)
-    pending.foreach(d => new java.io.File(d, "_MERGED").createNewFile())
-    pending.length
-  }
-
   /** Crash recovery for the keeper maintenance loop: fold every
     * committed, unmarked `queue/b<id>` batch (a crash between queue
     * commit and `_MERGED` leaves exactly these) into the curation
@@ -803,54 +791,11 @@ object StreamingJob {
     * .curationMerge]] recomputes touched components from member rows,
     * so refolding an already-half-applied batch lands the same bytes.
     * Returns how many batches were recovered; safe on a fresh or
-    * absent queue. Crash-injection spec: StreamingSpec.
+    * absent queue. Crash-injection spec: DedupAnnSpec.
     */
   def recoverPendingKeeperMerges(s: SparkSession, dir: String,
                                  nBuckets: Int): Int =
-    foldKeeperQueue(s, dir, nBuckets)
-
-  /** Fold every committed-but-unmerged label-queue partition in ONE
-    * [[graft.dedup.Dedup.labelsMerge]] over the union edge set —
-    * exact, because the merged labeling is a pure function of the
-    * union graph (edge arrival order is irrelevant to connected
-    * components) — then mark them all `_MERGED`. `_SUCCESS` gates on
-    * the WRITE having committed: a crash mid-write leaves a partial
-    * partition whose batch never committed either — the stream will
-    * redeliver and overwrite it, so folding (or failing on) the torn
-    * files here would be wrong twice over. Returns the number of
-    * partitions folded.
-    */
-  /** Committed (`_SUCCESS`), unmerged label-queue partition dirs. */
-  private def pendingLabelParts(dir: String): Seq[java.io.File] = {
-    val queue = new java.io.File(s"$dir/labels_queue")
-    if (!queue.isDirectory) return Seq.empty
-    queue.listFiles().toSeq
-      .filter(f => f.isDirectory && f.getName.startsWith("batch="))
-      .filter(f => new java.io.File(f, "_SUCCESS").exists())
-      .filterNot(f => new java.io.File(f, "_MERGED").exists())
-      .sortBy(_.getName.stripPrefix("batch=").toLong)
-  }
-
-  private def foldLabelQueue(s: SparkSession, dir: String,
-                             nBuckets: Int): Int =
-    withJobDescription(s, "label-fold") {
-      foldLabelQueueInner(s, dir, nBuckets)
-    }
-
-  private def foldLabelQueueInner(s: SparkSession, dir: String,
-                                  nBuckets: Int): Int = {
-    val pending = pendingLabelParts(dir)
-    if (pending.isEmpty) return 0
-    // pairsPinned: the queue partitions ARE durable materialized edge
-    // state — consumers re-scan a tiny parquet leaf
-    graft.dedup.Dedup.labelsMerge(s"$dir/labels",
-      s.read.schema("a BIGINT, b BIGINT")
-        .parquet(pending.map(_.getPath): _*),
-      "a", "b", nBuckets, pairsPinned = true)
-    pending.foreach(p => java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(p.getPath, "_MERGED"), ""))
-    pending.size
-  }
+    keeperQueue(s, dir, nBuckets).fold()
 
   /** Crash recovery for the async label fold: fold every committed
     * edge-queue partition that has no `_MERGED` marker. Returns how
@@ -858,7 +803,7 @@ object StreamingJob {
     */
   def recoverPendingLabelMerges(s: SparkSession, dir: String,
                                 nBuckets: Int): Int =
-    foldLabelQueue(s, dir, nBuckets)
+    labelQueue(s, dir, nBuckets).fold()
 
   /** Streaming ANN-join admission — the vector twin of
     * [[streamBandIndexIngest]]'s probe side, closing the same loop the
@@ -869,21 +814,16 @@ object StreamingJob {
     * [[graft.similarity.Ann.ivfTopKFromIndex]]. Stream–static and
     * stateless: a micro-batch pays its own map-only cell assignment
     * plus a cell-partition-pruned read of its probed cells — zero
-    * corpus-side compute, zero streaming state. Results land in
-    * per-batch `ingest=<batchId>` partitions with overwrite (the
-    * [[graft.io.IdempotentBatchSink]] pattern), so an at-least-once
-    * redelivery replaces its own previous write. Per-query top-k is
+    * corpus-side compute, zero streaming state. Per-query top-k is
     * independent across queries, so the streamed union over batches
     * equals the one-shot batch probe — which is what the oracle replays.
     */
   def streamAnnIndexProbe(corpus: DataFrame, delta: DataFrame,
                           queries: DataFrame, id: String, vec: String,
                           k: Int, nProbe: Int, nCells: Int,
-                          workDir: String, nFiles: Int = 4,
-                          filesPerTrigger: Int = 2): DataFrame = {
+                          workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = scratch(workDir)
     // the index is FROZEN for the whole probe stream — centroids come
     // straight from the build (appends never change them), and the
     // cell listing is resolved once (partition discovery is a driver
@@ -892,22 +832,11 @@ object StreamingJob {
       .ivfIndexBuild(corpus, id, vec, nCells, s"$dir/ix")
     graft.similarity.Ann.ivfIndexAppend(delta, id, vec, s"$dir/ix")
     val assigned = graft.similarity.Ann.indexAssigned(s, s"$dir/ix")
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.similarity.Ann.ivfTopKFromIndex(batch, id, vec,
-            s"$dir/ix", k, nProbe, cents = Some(cents),
-            assigned = Some(assigned), pruneCells = true)
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    admitToOut(queries, dir, StagedFiles, FilesPerTrigger) { batch =>
+      graft.similarity.Ann.ivfTopKFromIndex(batch, id, vec,
+        s"$dir/ix", k, nProbe, cents = Some(cents),
+        assigned = Some(assigned), pruneCells = true)
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -959,8 +888,7 @@ object StreamingJob {
   def streamStateInspection(keyed: Dataset[TxKeyed],
                             workDir: String): DataFrame = {
     val s = keyed.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = scratch(workDir)
     val q = startLocked(runningUserTotals(keyed).toDF().writeStream
       .format("noop")
       .outputMode("update")
@@ -1193,11 +1121,9 @@ object StreamingJob {
     */
   def streamMltProbe(corpus: DataFrame, delta: DataFrame,
                      queries: DataFrame, id: String, text: String,
-                     k: Int, workDir: String, nFiles: Int = 4,
-                     filesPerTrigger: Int = 2): DataFrame = {
+                     k: Int, workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = scratch(workDir)
     graft.text.Bm25.indexBuild(corpus, id, text, s"$dir/ix")
     graft.text.Bm25.indexAppend(delta, id, text, s"$dir/ix")
     // the index is FROZEN for the whole probe stream (built+appended
@@ -1208,31 +1134,19 @@ object StreamingJob {
     // hit memory instead of paying two parquet scans
     val stats = graft.text.Bm25.readStats(s, s"$dir/ix")
     val postings = s.read.parquet(s"$dir/ix/postings").cache()
-    postings.count()
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    // 2 files per trigger — the maintenance loops' r9 admission-size
-    // default: the per-trigger fixed floor halves for an identical
-    // drained union (per-query probes are independent)
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    // finally: a failed stream must not leak the pinned postings into
+    // a long-lived shared session's cache
+    try {
+      postings.count()
+      admitToOut(queries, dir, StagedFiles, FilesPerTrigger) { batch =>
         // localized probe: the micro-batch query side is broadcast by
         // contract, so its term set / bucket list / fan-out side fold
         // to LocalRelations — see moreLikeThisFromIndex(localizeProbe)
         graft.text.Bm25.moreLikeThisFromIndex(s, batch, id, text,
-            s"$dir/ix", k, stats = Some(stats), localizeProbe = true,
-            postings = Some(postings))
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
+          s"$dir/ix", k, stats = Some(stats), localizeProbe = true,
+          postings = Some(postings))
       }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    // finally: a failed trigger must not leak the pinned postings
-    // into a long-lived shared session's cache
-    try q.awaitTermination() finally postings.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    } finally postings.unpersist()
   }
 
   /** Streaming NOVELTY probe over the stored gram index — the
@@ -1247,27 +1161,14 @@ object StreamingJob {
     */
   def streamNoveltyProbe(corpus: DataFrame, queries: DataFrame,
                          id: String, text: String, n: Int,
-                         workDir: String, nFiles: Int = 4,
-                         filesPerTrigger: Int = 2): DataFrame = {
+                         workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = scratch(workDir)
     graft.dedup.Boilerplate.gramIndexBuild(corpus, id, text, n, s"$dir/ix")
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Boilerplate.noveltyFromIndex(s, batch, id, text, n,
-            s"$dir/ix")
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
-      }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    admitToOut(queries, dir, StagedFiles, FilesPerTrigger) { batch =>
+      graft.dedup.Boilerplate.noveltyFromIndex(s, batch, id, text, n,
+        s"$dir/ix")
+    }
   }
 
   /** Streaming EPOCH MATERIALIZATION — the sampling recipe's
@@ -1283,33 +1184,26 @@ object StreamingJob {
     * the shared `sample_source_epochs` oracle replays.
     */
   def streamEpochMaterialize(docs: DataFrame, id: String,
-                             sliceCol: String, workDir: String,
-                             nFiles: Int = 4,
-                             filesPerTrigger: Int = 2): DataFrame = {
-    val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                             sliceCol: String, workDir: String): DataFrame = {
+    val dir = scratch(workDir)
     val counts = docs.groupBy(col(sliceCol)).agg(count(lit(1)).as("n_l"))
     val eps = counts
       .crossJoin(broadcast(counts.agg(max(col("n_l")).as("n_max"))))
       .select(col(sliceCol).as("__slice"),
         sqrt(col("n_max").cast("double") / col("n_l")).as("e"))
       .cache()
-    eps.count() // frozen for the stream's life
-    val in = docs.select(col(id), col(sliceCol))
-    in.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(in.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val u = graft.functions.Binning.unitHash(col(id))
-    val out = stream.join(broadcast(eps), col(sliceCol) === col("__slice"))
-      .withColumn("n_copies",
-        floor(col("e")).cast("long") +
-          when(u < col("e") - floor(col("e")), 1L).otherwise(0L))
-      .select(col(id), col(sliceCol),
-        explode(sequence(lit(1L), col("n_copies"))).as("epoch_idx"))
-    val res = runToMemory(out)
-    eps.unpersist()
-    res
+    try {
+      eps.count() // frozen for the stream's life
+      val stream = stage(docs.select(col(id), col(sliceCol)), dir,
+        StagedFiles, FilesPerTrigger)
+      val u = graft.functions.Binning.unitHash(col(id))
+      runToMemory(stream.join(broadcast(eps), col(sliceCol) === col("__slice"))
+        .withColumn("n_copies",
+          floor(col("e")).cast("long") +
+            when(u < col("e") - floor(col("e")), 1L).otherwise(0L))
+        .select(col(id), col(sliceCol),
+          explode(sequence(lit(1L), col("n_copies"))).as("epoch_idx")))
+    } finally eps.unpersist()
   }
 
   /** Streaming HYBRID retrieval probe — the fusion of
@@ -1332,6 +1226,13 @@ object StreamingJob {
     * zero streaming state, so the floor amortizes at real batch
     * sizes exactly as the single-leg probes do.
     *
+    * `filesPerTrigger` stays a parameter: per trigger this probe pays
+    * a fixed floor — the lex leg's term collect + pruned-postings
+    * broadcast, the vector leg's query broadcast, one fused output
+    * commit — so the default 2 halves the floor count for an identical
+    * drained union, and the chunking-invariance spec pins that by
+    * draining at 1 and at 2.
+    *
     * `ivfLeg = Some((nCells, nProbe))` (r10) swaps the vector leg's
     * brute-force broadcast cosine — the one per-trigger cost above
     * that stays CORPUS-proportional — for a probe of a persisted IVF
@@ -1347,12 +1248,11 @@ object StreamingJob {
     */
   def streamHybridProbe(docs: DataFrame, emb: DataFrame, id: String,
                         text: String, vec: String, split: Int, k: Int,
-                        workDir: String, nFiles: Int = 4,
-                        filesPerTrigger: Int = 2,
+                        workDir: String,
+                        filesPerTrigger: Int = FilesPerTrigger,
                         ivfLeg: Option[(Int, Int)] = None): DataFrame = {
     val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = scratch(workDir)
     graft.text.Bm25.indexBuild(docs.filter(col(id) >= split), id, text,
       s"$dir/ix")
     // both legs are FROZEN for the whole probe stream: stats read
@@ -1364,51 +1264,35 @@ object StreamingJob {
     // micro-batch re-probes them, none should re-read parquet. One
     // materialization job covers each; per-trigger the lex leg's two
     // postings consumers and the vector leg's corpus side then run
-    // from memory.
+    // from memory. Brute force pins the corpus embeddings; the IVF leg
+    // pins nothing corpus-sized.
     val postings = s.read.parquet(s"$dir/ix/postings").cache()
-    postings.count()
-    // vector leg: brute force pins the corpus embeddings in cache and
-    // scans them per trigger; the IVF leg builds the persisted index
-    // once (centroids a collected constant) and per trigger reads ONLY
-    // the probed cell partitions — nothing corpus-sized is pinned or
-    // scanned per batch
-    val (vecTopK, pinnedCorpus) = ivfLeg match {
-      case None =>
-        val corpusEmb = emb.filter(col("vec_id") >= split).cache()
-        corpusEmb.count()
-        ((q: DataFrame) => graft.similarity.Ann
-          .bruteForceTopK(q, corpusEmb, "vec_id", vec, k),
-          Some(corpusEmb))
-      case Some((nCells, nProbe)) =>
-        // centroids come straight from the build (frozen for the
-        // stream's life), cell listing resolved once: no trigger pays
-        // centroid re-collection or partition discovery (driver jobs
-        // at real cell counts)
-        val cents = graft.similarity.Ann.ivfIndexBuild(
-          emb.filter(col("vec_id") >= split), "vec_id", vec, nCells,
-          s"$dir/ivf")
-        val assigned = graft.similarity.Ann.indexAssigned(s, s"$dir/ivf")
-        ((q: DataFrame) => graft.similarity.Ann.ivfTopKFromIndex(
-          q, "vec_id", vec, s"$dir/ivf", k, nProbe, cents = Some(cents),
-          assigned = Some(assigned), pruneCells = true),
-          None)
-    }
-    val queries = docs.filter(col(id) < split)
-      .join(emb.select(col("vec_id").as(id), col(vec)), id)
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    // 2 files per trigger (the maintenance loops' r9 admission-size
-    // default): per trigger this probe pays a fixed floor — the lex
-    // leg's term collect + pruned-postings broadcast, the vector
-    // leg's query broadcast, one fused output commit — so halving
-    // the trigger count halves the floor for an identical drained
-    // union (per-query fusion is independent; spec-pinned vs the
-    // one-shot batch fusion under both cadences)
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val corpusEmb = emb.filter(col("vec_id") >= split)
+    val pinned =
+      postings +: (if (ivfLeg.isEmpty) Seq(corpusEmb.cache()) else Nil)
+    // finally: a failed stream must not leak the pinned static legs
+    // into a long-lived shared session's cache
+    try {
+      pinned.foreach(_.count())
+      val vecTopK: DataFrame => DataFrame = ivfLeg match {
+        case None => q => graft.similarity.Ann
+          .bruteForceTopK(q, corpusEmb, "vec_id", vec, k)
+        case Some((nCells, nProbe)) =>
+          // the IVF leg builds the persisted index once (centroids a
+          // collected constant, cell listing resolved once) and per
+          // trigger reads ONLY the probed cell partitions: no trigger
+          // pays centroid re-collection or partition discovery (driver
+          // jobs at real cell counts)
+          val cents = graft.similarity.Ann.ivfIndexBuild(
+            corpusEmb, "vec_id", vec, nCells, s"$dir/ivf")
+          val assigned = graft.similarity.Ann.indexAssigned(s, s"$dir/ivf")
+          q => graft.similarity.Ann.ivfTopKFromIndex(
+            q, "vec_id", vec, s"$dir/ivf", k, nProbe, cents = Some(cents),
+            assigned = Some(assigned), pruneCells = true)
+      }
+      val queries = docs.filter(col(id) < split)
+        .join(emb.select(col("vec_id").as(id), col(vec)), id)
+      admitToOut(queries, dir, StagedFiles, filesPerTrigger) { batch =>
         // ONE micro-batch source scan per trigger: both legs BROADCAST
         // the query batch (driver-memory-bounded by design — that is
         // the probe contract), so collect it once and derive each leg
@@ -1428,15 +1312,8 @@ object StreamingJob {
         val v = vecTopK(local.select(col(id).as("vec_id"), col(vec)))
           .select(col("qid"), col("vid").as("doc"), col("rank"))
         graft.text.Retrieval.rrfFuse(lex, v, k)
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    // finally: a failed trigger must not leak the pinned static legs
-    // into a long-lived shared session's cache
-    try q.awaitTermination()
-    finally { postings.unpersist(); pinnedCorpus.foreach(_.unpersist()) }
-    s.read.parquet(s"$dir/out").drop("ingest")
+    } finally pinned.foreach(_.unpersist())
   }
 
   /** Streaming boilerplate-strip admission — the cleaning stage of
@@ -1452,33 +1329,19 @@ object StreamingJob {
     * what the oracle replays.
     */
   def streamBoilerStrip(docs: DataFrame, id: String, text: String,
-                        n: Int, minDf: Int, split: Int, workDir: String,
-                        nFiles: Int = 4,
-                        filesPerTrigger: Int = 2): DataFrame = {
-    val s = docs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                        n: Int, minDf: Int, split: Int,
+                        workDir: String): DataFrame = {
+    val dir = scratch(workDir)
     val boiler = graft.dedup.Dedup.commonNgrams(
         docs.filter(col(id) >= split), id, text, n, minDf)
       .select(col("ngram")).cache()
-    boiler.count()
-    val queries = docs.filter(col(id) < split)
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.dedup.Boilerplate
-          .stripWithBoiler(batch, id, text, n, boiler)
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
+    try {
+      boiler.count()
+      admitToOut(docs.filter(col(id) < split), dir, StagedFiles,
+          FilesPerTrigger) { batch =>
+        graft.dedup.Boilerplate.stripWithBoiler(batch, id, text, n, boiler)
       }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    boiler.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    } finally boiler.unpersist()
   }
 
   /** Streaming perplexity admission — the LM member of the admission
@@ -1496,37 +1359,23 @@ object StreamingJob {
     */
   def streamPerplexityGate(ref: DataFrame, arriving: DataFrame,
                            id: String, text: String, threshold: Double,
-                           workDir: String, nFiles: Int = 4,
-                           filesPerTrigger: Int = 2): DataFrame = {
-    val s = ref.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                           workDir: String): DataFrame = {
+    val dir = scratch(workDir)
     val bigrams = graft.text.LangModel.bigramCounts(ref, text).cache()
     // the ONE shared definition of the context totals (streamPplBuckets
     // and the batch scorer use it too) — a hand-rolled twin here could
     // silently diverge if the helper ever changes
     val c1 = graft.text.LangModel.derivedContextTotals(bigrams).cache()
-    c1.count()
-    val v = graft.text.LangModel.vocabSize(ref, text)
-    val queries = arriving
-    queries.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(queries.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    try {
+      c1.count()
+      val v = graft.text.LangModel.vocabSize(ref, text)
+      admitToOut(arriving, dir, StagedFiles, FilesPerTrigger) { batch =>
         graft.text.LangModel
           .perplexity(batch, id, text, bigrams, v, threshold,
             contextTotals = Some(c1))
           .filter(col("admit"))
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    bigrams.unpersist(); c1.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    } finally { bigrams.unpersist(); c1.unpersist() }
   }
 
   /** Streaming language-ID — classify at arrival rate: every
@@ -1541,26 +1390,15 @@ object StreamingJob {
     */
   def streamLangidClassify(staticDocs: DataFrame, arriving: DataFrame,
                            id: String, text: String, langCol: String,
-                           langs: Seq[String], workDir: String,
-                           nFiles: Int = 4,
-                           filesPerTrigger: Int = 2): DataFrame = {
-    val s = staticDocs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                           langs: Seq[String],
+                           workDir: String): DataFrame = {
+    val dir = scratch(workDir)
     val models = graft.text.LangClassifier
-      .fit(staticDocs, text, langCol, langs).map { m =>
-        val bg = m.bigrams.cache()
-        val c1 = m.c1.cache()
-        c1.count()
-        m.copy(bigrams = bg, c1 = c1)
-      }
-    arriving.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(arriving.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .fit(staticDocs, text, langCol, langs)
+      .map(m => m.copy(bigrams = m.bigrams.cache(), c1 = m.c1.cache()))
+    try {
+      models.foreach(_.c1.count())
+      admitToOut(arriving, dir, StagedFiles, FilesPerTrigger) { batch =>
         graft.text.LangClassifier.classify(batch, id, text, models)
           .join(batch.select(col(id).as("doc_id"),
             col(langCol).as("lang")), Seq("doc_id"))
@@ -1568,13 +1406,8 @@ object StreamingJob {
             col("pred").as("pred_lang"),
             when(col("pred").isNotNull, col("pred") === col("lang"))
               .as("correct"))
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    models.foreach { m => m.bigrams.unpersist(); m.c1.unpersist(); () }
-    s.read.parquet(s"$dir/out").drop("ingest")
+    } finally models.foreach { m => m.bigrams.unpersist(); m.c1.unpersist() }
   }
 
   /** Streaming CCNet bucket labeling — calibrate once, label at
@@ -1593,43 +1426,29 @@ object StreamingJob {
     */
   def streamPplBuckets(ref: DataFrame, calibration: DataFrame,
                        arriving: DataFrame, id: String, text: String,
-                       threshold: Double, workDir: String,
-                       nFiles: Int = 4,
-                       filesPerTrigger: Int = 2): DataFrame = {
-    val s = ref.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+                       threshold: Double, workDir: String): DataFrame = {
+    val dir = scratch(workDir)
     val bigrams = graft.text.LangModel.bigramCounts(ref, text).cache()
     val c1 = graft.text.LangModel.derivedContextTotals(bigrams).cache()
-    c1.count()
-    val v = graft.text.LangModel.vocabSize(ref, text)
-    def scoredWithChars(docs: DataFrame): DataFrame =
-      graft.text.LangModel
-        .perplexity(docs, id, text, bigrams, v, threshold,
-          contextTotals = Some(c1))
-        .join(docs.select(col(id).as("doc_id"),
-          length(col(text)).cast("long").as("chars")), Seq("doc_id"))
-    val (b1, b2) = graft.text.PplBuckets.cutoffs(
-      graft.text.PplBuckets.binned(scoredWithChars(calibration)), "chars")
-    arriving.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(arriving.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    try {
+      c1.count()
+      val v = graft.text.LangModel.vocabSize(ref, text)
+      def scoredWithChars(docs: DataFrame): DataFrame =
+        graft.text.LangModel
+          .perplexity(docs, id, text, bigrams, v, threshold,
+            contextTotals = Some(c1))
+          .join(docs.select(col(id).as("doc_id"),
+            length(col(text)).cast("long").as("chars")), Seq("doc_id"))
+      val (b1, b2) = graft.text.PplBuckets.cutoffs(
+        graft.text.PplBuckets.binned(scoredWithChars(calibration)), "chars")
+      admitToOut(arriving, dir, StagedFiles, FilesPerTrigger) { batch =>
         graft.text.PplBuckets.binned(scoredWithChars(batch))
           .withColumn("bucket",
             graft.text.PplBuckets.label(col("bin"), b1, b2))
           .select(col("doc_id"), col("nll"), col("bin"), col("chars"),
             col("bucket"))
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    bigrams.unpersist(); c1.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    } finally { bigrams.unpersist(); c1.unpersist() }
   }
 
   /** Streaming DSIR admission — the importance-weight gate run at
@@ -1649,33 +1468,19 @@ object StreamingJob {
     */
   def streamDsirAdmission(staticDocs: DataFrame, arriving: DataFrame,
                           id: String, text: String, targetLang: String,
-                          threshold: Double, workDir: String,
-                          nFiles: Int = 4,
-                          filesPerTrigger: Int = 2): DataFrame = {
-    val s = staticDocs.sparkSession
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    val tgt = staticDocs.filter(col("lang") === targetLang)
-    val tc = graft.text.Dsir.featureCounts(tgt, id, text).cache()
+                          threshold: Double, workDir: String): DataFrame = {
+    val dir = scratch(workDir)
+    val tc = graft.text.Dsir.featureCounts(
+      staticDocs.filter(col("lang") === targetLang), id, text).cache()
     val sc = graft.text.Dsir.featureCounts(staticDocs, id, text).cache()
-    val tTot = graft.text.Dsir.featureTotal(tc)
-    val sTot = graft.text.Dsir.featureTotal(sc)
-    arriving.repartition(nFiles).write.parquet(s"$dir/in")
-    val stream = s.readStream.schema(arriving.schema)
-      .option("maxFilesPerTrigger", filesPerTrigger).parquet(s"$dir/in")
-    val q = startLocked(stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$dir/ckpt")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    try {
+      val tTot = graft.text.Dsir.featureTotal(tc)
+      val sTot = graft.text.Dsir.featureTotal(sc)
+      admitToOut(arriving, dir, StagedFiles, FilesPerTrigger) { batch =>
         graft.text.Dsir.weights(batch, id, text, tc, tTot, sc, sTot)
           .filter(col("logratio") > threshold)
-          .write.mode("overwrite").parquet(s"$dir/out/ingest=$batchId")
       }
-      .trigger(Trigger.AvailableNow())
-      .start())
-    q.awaitTermination()
-    tc.unpersist(); sc.unpersist()
-    s.read.parquet(s"$dir/out").drop("ingest")
+    } finally { tc.unpersist(); sc.unpersist() }
   }
 
   case class ShardDoc(shard: Int, doc_id: Long, n_tokens: Int)

@@ -44,7 +44,10 @@ final class ProgressRecorder(capacity: Int = 10000)
       Option(p.name).getOrElse(p.id.toString), p.batchId,
       p.numInputRows, finite(p.inputRowsPerSecond),
       finite(p.processedRowsPerSecond),
-      p.durationMs.asScala.values.map(_.longValue).sum,
+      // triggerExecution already contains every other phase, so it is
+      // the batch's duration; summing the map would count it twice
+      Option(p.durationMs.get("triggerExecution")).map(_.longValue)
+        .getOrElse(0L),
       p.stateOperators.map(_.numRowsTotal).sum))
     while (buf.size > capacity) buf.poll()
   }

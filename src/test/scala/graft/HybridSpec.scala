@@ -241,6 +241,24 @@ class HybridSpec extends SparkSpec {
       batch.exceptAll(streamed).isEmpty)
   }
 
+  test("a failing boiler-strip stream releases its pinned boiler set") {
+    val split = graft.text.HybridQueries.Split
+    // one arriving doc (below the split) fails when its text is read;
+    // the static corpus the boiler set is mined from stays clean
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+      .withColumn("text", when(col("doc_id") === split - 1,
+        raise_error(lit("injected arrival failure")))
+        .otherwise(col("text")))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception] {
+      graft.streaming.StreamingJob.streamBoilerStrip(
+        docs, "doc_id", "text", n = 3, minDf = 3, split,
+        "/tmp/graft_s25_fail_spec")
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before,
+      "a failed stream must not leave its static leg cached")
+  }
+
   test("gram index grown by append mines the one-shot boiler set") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val ix = s"/tmp/graft_gramix_spec-${ProcessHandle.current().pid()}"

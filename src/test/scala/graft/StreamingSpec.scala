@@ -200,6 +200,17 @@ class StreamingSpec extends SparkSpec {
       }
       assert(Set((0L, 3L), (1L, 1L)).subsetOf(got),
         s"expected both batches recorded, got $got")
+      // a batch's duration is its triggerExecution, which already
+      // contains every other durationMs phase
+      val trigger = q.recentProgress.filter(_.numInputRows > 0)
+        .map(p => p.batchId -> p.durationMs.get("triggerExecution").longValue)
+        .toMap
+      val recorded = rec.snapshot(spark)
+        .filter(col("query") === "telemetry_probe" && col("inputRows") > 0)
+        .select("batchId", "batchDurationMs").as[(Long, Long)]
+        .collect().toMap
+      assert(trigger.keySet == Set(0L, 1L) && recorded == trigger,
+        s"batchDurationMs $recorded, triggerExecution $trigger")
     } finally rec.detach(spark)
   }
 
