@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
+import graft.io.PersistedTable
 
 /** Substring-level boilerplate REMOVAL — the consumer of
   * [[Dedup.commonNgrams]]'s repeated-span signal. Mining tells you a
@@ -85,30 +86,15 @@ object Boilerplate {
   def gramIndexBuild(docs: DataFrame, id: String, text: String, n: Int,
                      dir: String): Unit = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    writeGramPartials(gramPartials(docs, id, text, n), dir, "overwrite")
+    PersistedTable.write(gramPartials(docs, id, text, n), "bucket",
+      GramBuckets, dir, PersistedTable.Overwrite)
   }
 
   /** O(delta): the new docs' gram partials appended as-is. */
   def gramIndexAppend(delta: DataFrame, id: String, text: String,
                       n: Int, dir: String): Unit =
-    writeGramPartials(gramPartials(delta, id, text, n), dir, "append")
-
-  /** One-file-per-bucket partitioned write (the writePostings/IVF
-    * layout discipline): without the narrow repartition on the
-    * partition column, every aggregate task fans into every bucket —
-    * at small widths that is GramBuckets SEQUENTIAL file creations
-    * from one task (~0.1 CPU-s each on this FS), at scale it is
-    * tasks × buckets small files. The exchange carries the already-
-    * aggregated (ngram, df) rows, bucket-keyed, so it is uniform.
-    */
-  private def writeGramPartials(partials: DataFrame, dir: String,
-                                mode: String): Unit =
-    // EXPLICIT partition count: a keyed repartition without one is
-    // AQE-coalescible, and at small byte sizes AQE folds the write
-    // back into ONE task — GramBuckets sequential file creations, the
-    // exact floor this exchange exists to parallelize
-    partials.repartition(GramBuckets, col("bucket"))
-      .write.mode(mode).partitionBy("bucket").parquet(dir)
+    PersistedTable.write(gramPartials(delta, id, text, n), "bucket",
+      GramBuckets, dir, PersistedTable.Append)
 
   private val GramBuckets = 64
 

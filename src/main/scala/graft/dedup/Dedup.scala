@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.io.PersistedTable
 
 /** Near-duplicate detection for document corpora, four ways:
   *
@@ -549,8 +550,8 @@ object Dedup {
     * planning cost grows with file count, not row count). Rows are
     * conserved exactly (validated before the swap) and probe results
     * are unchanged — MinHash has no trained state, so compaction is
-    * pure layout. Crash-safe via the same staged-rename swap as
-    * [[graft.similarity.Ann.ivfIndexRefresh]]. Run it with the
+    * pure layout. Crash-safe: each table is staged as `<name>_staged`
+    * and swapped in by [[PersistedTable.replace]]. Run it with the
     * ingesting stream stopped: folding live batch partitions away
     * would make an at-least-once REPLAY of those batches append
     * duplicates instead of idempotently overwriting.
@@ -582,27 +583,18 @@ object Dedup {
     def wrSh(): Unit = shingles.drop("ingest").coalesce(8)
       .write.mode("overwrite")
       .parquet(s"$dir/shingles_staged/ingest=$BatchIngestId")
-    // one task per band → one file per band partition
-    def wrBd(): Unit = bands.drop("ingest").repartition(nBands, col("band"))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$dir/bands_staged/ingest=$BatchIngestId")
+    def wrBd(): Unit = PersistedTable.write(bands.drop("ingest"), "band",
+      nBands, s"$dir/bands_staged/ingest=$BatchIngestId",
+      PersistedTable.Overwrite)
     val ec = scala.concurrent.ExecutionContext.global
     Seq(scala.concurrent.Future(wrSh())(ec),
       scala.concurrent.Future(wrBd())(ec))
       .foreach(scala.concurrent.Await
         .result(_, scala.concurrent.duration.Duration.Inf))
-    def swap(name: String): Unit = {
-      val staged = new java.io.File(s"$dir/${name}_staged")
-      val live = new java.io.File(s"$dir/$name")
-      val aside = new java.io.File(s"$dir/${name}_old")
-      org.apache.commons.io.FileUtils.deleteQuietly(aside)
-      require(live.renameTo(aside), s"rename $live -> $aside failed")
-      if (!staged.renameTo(live)) {
-        aside.renameTo(live)
-        sys.error(s"rename $staged -> $live failed; rolled back")
-      }
-      org.apache.commons.io.FileUtils.deleteQuietly(aside)
-    }
+    def swap(name: String): Unit = PersistedTable.replace(
+      new java.io.File(s"$dir/$name"),
+      new java.io.File(s"$dir/${name}_staged"),
+      new java.io.File(s"$dir/${name}_old"))
     // row conservation still validated against the STAGED FILES (the
     // parquet round-trip itself), in one job instead of two
     val stagedCounts = s.read.parquet(s"$dir/shingles_staged")
@@ -1098,18 +1090,12 @@ object Dedup {
       else lab.withColumn("bucket", bucketOf(col("doc"))).limit(0))
       .join(touched, Seq("component"), "left_anti")
       .select(col("doc"), col("component"), col("bucket"))
-    // one file per rewritten bucket (r11): the un-repartitioned write
-    // fanned (input tasks × affected buckets) small files per merge —
-    // and every LATER fold re-scans that accumulation, so fold scans
-    // grew with fold count. Explicit count: AQE must not fold the
-    // write back into one task (sequential file creations).
-    keep.union(relabeled
-        .select(col("doc"), col("component"), bucketOf(col("doc")).as("bucket")))
-      .repartition(nBuckets, col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket")
-      .parquet(dir)
+    // one file per rewritten bucket: every LATER fold re-scans the
+    // affected buckets, so a fan-out of small files here would make
+    // fold scans grow with fold count
+    PersistedTable.write(keep.union(relabeled
+        .select(col("doc"), col("component"), bucketOf(col("doc")).as("bucket"))),
+      "bucket", nBuckets, dir, PersistedTable.ReplaceBuckets(buckets))
   }
 
   /** One delta merge of the WHOLE curation state — labels, per-doc
@@ -1233,19 +1219,13 @@ object Dedup {
     // --- state table rewrite ---
     val replacedDocs = relabeled.select(col("doc"))
       .union(delta.select(col("doc"))).distinct()
-    // one file per rewritten bucket (r11, the writeLabelsPruned
-    // discipline): the un-repartitioned write fanned (input tasks ×
-    // affected buckets) small files per fold, and every later fold's
-    // bucket-pruned scans re-read that accumulation
-    stored.join(broadcast(replacedDocs), Seq("doc"), "left_anti")
-      .union(members.select(col("doc"), col("component"), col("q")))
-      .union(singles.select(col("doc"), col("doc").as("component"),
-        col("q")))
-      .withColumn("bucket", bucketOf(col("doc")))
-      .repartition(nBuckets, col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(stDir)
+    PersistedTable.write(
+      stored.join(broadcast(replacedDocs), Seq("doc"), "left_anti")
+        .union(members.select(col("doc"), col("component"), col("q")))
+        .union(singles.select(col("doc"), col("doc").as("component"),
+          col("q")))
+        .withColumn("bucket", bucketOf(col("doc"))),
+      "bucket", nBuckets, stDir, PersistedTable.ReplaceBuckets(buckets))
     // --- keepers: recompute affected components from member rows ---
     val merged = members.groupBy(col("component"))
       .agg(max(struct(col("q"), (-col("doc")).as("nid"))).as("m"),
@@ -1273,31 +1253,11 @@ object Dedup {
       .join(broadcast(superseded), Seq("component"), "left_anti")
     val out = kKeep
       .union(newRows.withColumn("bucket", bucketOf(col("component"))))
-    // the written-bucket set rides the write job itself as an observed
-    // metric (r11) — the previous localCheckpoint + distinct-collect
-    // spent two whole driver actions per fold on a set the write
-    // already computes. The in-job self-read of kDir under a dynamic
-    // overwrite is the established labelsMerge pattern (staging +
-    // end-of-job commit), so dropping the checkpoint is safe.
-    val obs = org.apache.spark.sql.Observation()
-    out.observe(obs, collect_set(col("bucket")).as("written"))
-      .repartition(nBuckets, col("bucket"))
-      .write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("bucket").parquet(kDir)
-    // blocking get (no listener race), tolerant lookup: when the
-    // optimizer proves the write empty, PropagateEmptyRelation prunes
-    // the CollectMetrics node and the observed map comes back EMPTY —
-    // there "nothing written" is exactly right (zero rows anywhere,
-    // so every affected bucket is stale)
-    val written = obs.get.get("written") match {
-      case Some(a: Seq[_]) => a.map(_.asInstanceOf[Int]).toSet
-      case _ => Set.empty[Int]
-    }
-    buckets.filterNot(written).foreach { b =>
-      org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(s"$kDir/bucket=$b"))
-    }
+    // the in-job self-read of kDir under a dynamic overwrite is the
+    // labelsMerge pattern (staging + end-of-job commit), so the keep
+    // side needs no checkpoint
+    PersistedTable.write(out, "bucket", nBuckets, kDir,
+      PersistedTable.ReplaceBuckets(buckets))
   }
 
   /** Materialized byte size of a localCheckpoint'd dataset, straight

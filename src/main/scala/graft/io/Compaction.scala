@@ -17,28 +17,17 @@ import org.apache.spark.sql.SparkSession
   * row-reordering, so the rewrite cost is one read + one write of the
   * data regardless of cluster size. (Splitting oversized files, the
   * rare other direction, needs `repartition`'s shuffle — out of scope
-  * here.) The new files land in a sibling temp dir first, are
-  * VALIDATED (row-count readback — a zero-column parquet count, so
-  * footer-weight, not a data scan), and replace the input via two
-  * renames: old→aside, tmp→live. The data therefore exists complete
-  * on disk at every instant — a crash mid-swap is recoverable from
-  * the `.compact.old` / `.compact.tmp` siblings — though a concurrent
-  * reader can hit a brief not-found window between the renames
-  * (single-writer, scheduled-maintenance semantics; a transactional
-  * table format's OPTIMIZE is the concurrent-reader answer, same
-  * shape).
+  * here.) The output is validated and swapped in by
+  * [[PersistedTable.rewrite]]: complete on disk at every instant, a
+  * crash mid-swap recoverable from the `.compact.old` / `.compact.tmp`
+  * siblings (single-writer, scheduled-maintenance semantics; a
+  * transactional table format's OPTIMIZE is the concurrent-reader
+  * answer, same shape).
   */
 object Compaction {
 
   final case class Report(filesBefore: Int, filesAfter: Int,
                           bytes: Long, rows: Long)
-
-  private def parquetFiles(dir: File): Seq[File] = {
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-    walk(dir)
-  }
 
   /** @param targetBytes desired output file size (compressed-at-rest
     *                    estimate from the current files' sizes).
@@ -47,41 +36,10 @@ object Compaction {
               targetBytes: Long = 128L * 1024 * 1024): Report = {
     require(targetBytes > 0, "targetBytes must be positive")
     val dir = new File(path)
-    require(dir.isDirectory, s"$path is not a directory")
-    val before = parquetFiles(dir)
+    val before = PersistedTable.parquetFiles(dir)
     val bytes = before.map(_.length()).sum
     val nOut = math.max(1, math.ceil(bytes.toDouble / targetBytes).toInt)
-    val tmp = new File(dir.getParentFile, dir.getName + ".compact.tmp")
-    val aside = new File(dir.getParentFile, dir.getName + ".compact.old")
-    org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    org.apache.commons.io.FileUtils.deleteQuietly(aside)
-    // row count rides the write as an observed metric — no second
-    // scan of the output just to fill the report
-    val obs = new org.apache.spark.sql.Observation()
-    spark.read.parquet(path)
-      .coalesce(nOut)
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(tmp.getPath)
-    val rows = obs.get("rows").asInstanceOf[Long]
-    // validate the OUTPUT before anything touches the original: a
-    // zero-column parquet count reads footers/page headers, not data,
-    // so this is cheap insurance against a corrupt/truncated write
-    val outRows = spark.read.parquet(tmp.getPath).count()
-    require(outRows == rows,
-      s"compacted output has $outRows rows, input had $rows — aborting swap")
-    // two renames, never a delete-then-rename: if the swap dies
-    // between them the data still exists (at the .compact.old path)
-    // instead of being gone — the recoverable failure mode
-    require(dir.renameTo(aside), s"rename $path -> ${aside.getPath} failed")
-    if (!tmp.renameTo(dir)) {
-      val rolledBack = aside.renameTo(dir)
-      throw new IllegalStateException(
-        s"rename ${tmp.getPath} -> $path failed; " +
-          (if (rolledBack) "original restored"
-           else s"ROLLBACK ALSO FAILED — data is at ${aside.getPath}"))
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(aside)
-    Report(before.size, parquetFiles(dir).size, bytes, rows)
+    val rows = PersistedTable.rewrite(spark, dir, ".compact")(_.coalesce(nOut))
+    Report(before.size, PersistedTable.parquetFiles(dir).size, bytes, rows)
   }
 }

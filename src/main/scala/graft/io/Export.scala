@@ -69,14 +69,7 @@ object Export {
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy("shard")
       .parquet(path)
-    val files = listParquet(new File(path)).size
+    val files = PersistedTable.parquetFiles(new File(path)).size
     Report(nShards, obs.get("rows").asInstanceOf[Long], files)
-  }
-
-  private def listParquet(dir: File): Seq[File] = {
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-      else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
-    walk(dir)
   }
 }

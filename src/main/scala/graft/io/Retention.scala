@@ -3,7 +3,6 @@ package graft.io
 import java.io.File
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Retention deletion for parquet table directories — the reference's
   * F6 (its Postgres sink prunes old rows with a scheduled DELETE;
@@ -24,10 +23,11 @@ import org.apache.spark.sql.functions._
   *  - [[expireRows]] is the fallback when expiry does not align with
   *    the layout (no partition column, or a predicate on a
   *    non-partition column): one filtered read + write of the
-  *    SURVIVING rows with the same validated temp-dir swap as
-  *    [[Compaction.compact]] — crash-recoverable at every instant,
-  *    cost proportional to retained data. If retention runs often,
-  *    this is the signal to fix the layout, not the tool.
+  *    SURVIVING rows through [[PersistedTable.rewrite]], the
+  *    validated swap [[Compaction.compact]] uses — crash-recoverable
+  *    at every instant, cost proportional to retained data. If
+  *    retention runs often, this is the signal to fix the layout, not
+  *    the tool.
   */
 object Retention {
 
@@ -65,37 +65,16 @@ object Retention {
     Report(doomed.size, files, bytes)
   }
 
-  /** Rewrite `path` keeping only rows where `keep` holds, via the
-    * validated temp-dir swap (see [[Compaction.compact]] for the
-    * crash-recovery contract). Returns (rowsKept, rowsDropped).
+  /** Rewrite `path` keeping only rows where `keep` holds, via
+    * [[PersistedTable.rewrite]] (crash leftovers: `.retention.tmp` /
+    * `.retention.old`). Returns (rowsKept, rowsDropped).
     */
   def expireRows(spark: SparkSession, path: String,
                  keep: org.apache.spark.sql.Column): (Long, Long) = {
     val dir = new File(path)
     require(dir.isDirectory, s"$path is not a directory")
-    val tmp = new File(dir.getParentFile, dir.getName + ".retention.tmp")
-    val aside = new File(dir.getParentFile, dir.getName + ".retention.old")
-    org.apache.commons.io.FileUtils.deleteQuietly(tmp)
-    org.apache.commons.io.FileUtils.deleteQuietly(aside)
     val total = spark.read.parquet(path).count()
-    val obs = new org.apache.spark.sql.Observation()
-    spark.read.parquet(path)
-      .filter(keep)
-      .observe(obs, count(lit(1)).as("rows"))
-      .write.mode("overwrite").parquet(tmp.getPath)
-    val kept = obs.get("rows").asInstanceOf[Long]
-    val outRows = spark.read.parquet(tmp.getPath).count()
-    require(outRows == kept,
-      s"retention output has $outRows rows, expected $kept — aborting swap")
-    require(dir.renameTo(aside), s"rename $path -> ${aside.getPath} failed")
-    if (!tmp.renameTo(dir)) {
-      val rolledBack = aside.renameTo(dir)
-      throw new IllegalStateException(
-        s"rename ${tmp.getPath} -> $path failed; " +
-          (if (rolledBack) "original restored"
-           else s"ROLLBACK ALSO FAILED — data is at ${aside.getPath}"))
-    }
-    org.apache.commons.io.FileUtils.deleteDirectory(aside)
+    val kept = PersistedTable.rewrite(spark, dir, ".retention")(_.filter(keep))
     (kept, total - kept)
   }
 }

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.PersistedTable
 import scala.util.Random
 
 /** Similarity search over an embedding column (`array<float>`):
@@ -420,20 +421,12 @@ object Ann {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
     writeCentroids(s, cents, s"$dir/centroids")
     // partitioned BY cell: a cell probe is a partition-pruned read —
-    // `cell=K/` directories, the layout dividend on the index table.
-    // repartition ON the partition column first (r10): without it
-    // every write task fans out into every cell — nCells × tasks
-    // small files, and at 10× corpus with 10× cells the PROBE wall
-    // grew 2.3× from file listing alone (measured; the probed data
-    // volume was constant). One corpus-sized shuffle at build time
-    // buys one file per cell — the standard partitioned-write
-    // discipline, and the build is the amortized one-time cost here.
-    // explicit partition count (r11): keyed repartition without one is
-    // AQE-coalescible — at small byte sizes the write folds back into
-    // ONE task and creates all nCells partition files sequentially
-    c.withColumn("cell", cellOf(cents, col("v")))
-      .repartition(cents.length, col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/assigned")
+    // `cell=K/` directories, the layout dividend on the index table,
+    // one file per cell: with nCells × tasks small files, at 10× corpus
+    // with 10× cells the PROBE wall grew 2.3× from file listing alone
+    // (measured; the probed data volume was constant)
+    PersistedTable.write(c.withColumn("cell", cellOf(cents, col("v"))),
+      "cell", cents.length, s"$dir/assigned", PersistedTable.Overwrite)
     cents
   }
 
@@ -488,13 +481,10 @@ object Ann {
     val stagedRoot = s"$dir/epoch_$nextEpoch"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(stagedRoot))
     writeCentroids(s, cents, s"$stagedRoot/centroids")
-    // same repartition-on-cell discipline as the build: the refresh is
-    // ALSO the layout-recovery op that folds an append history's
-    // accumulated small files back to one file per cell
-    live.withColumn("cell", cellOf(cents, col("v")))
-      .repartition(cents.length, col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$stagedRoot/assigned")
+    // the refresh is ALSO the layout-recovery op: one file per cell,
+    // whatever the append history left
+    PersistedTable.write(live.withColumn("cell", cellOf(cents, col("v"))),
+      "cell", cents.length, s"$stagedRoot/assigned", PersistedTable.Overwrite)
     val tmp = java.nio.file.Paths.get(dir, "CURRENT_staged")
     java.nio.file.Files.writeString(tmp, s"epoch_$nextEpoch")
     java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, "CURRENT"),
@@ -518,16 +508,16 @@ object Ann {
     s.read.parquet(s"${ivfRoot(dir)}/centroids").orderBy(col("idx"))
       .collect().map(_.getSeq[Double](1)).toSeq
 
-  /** Ingest new vectors: assign against the STORED centroids, append.
-    * Existing index rows are never read or rewritten — delta cost
-    * only.
+  /** Ingest new vectors: assign against the STORED centroids, append
+    * at most one file per cell. Existing index rows are never read or
+    * rewritten — delta cost only.
     */
   def ivfIndexAppend(delta: DataFrame, id: String, vec: String,
                      dir: String): Unit = {
     val cents = readCentroids(delta.sparkSession, dir)
-    prepared(delta, id, vec).withColumn("cell", cellOf(cents, col("v")))
-      .write.mode("append").partitionBy("cell")
-      .parquet(s"${ivfRoot(dir)}/assigned")
+    PersistedTable.write(
+      prepared(delta, id, vec).withColumn("cell", cellOf(cents, col("v"))),
+      "cell", cents.length, s"${ivfRoot(dir)}/assigned", PersistedTable.Append)
   }
 
   /** Read a stored index's centroid table once — for callers probing

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.io.PersistedTable
 
 /** BM25 retrieval over the corpus: score documents against a query-term
   * set through an inverted-index join, top-k per term through the native
@@ -100,45 +101,27 @@ object Bm25 {
     val staged = s"$dir/stats_staged"
     Seq(merged).toDF("n_docs", "total_dl")
       .coalesce(1).write.mode("overwrite").parquet(staged)
-    val live = new java.io.File(s"$dir/stats")
-    val aside = new java.io.File(s"$dir/stats_old")
-    org.apache.commons.io.FileUtils.deleteQuietly(aside)
-    if (live.exists()) require(live.renameTo(aside))
-    if (!new java.io.File(staged).renameTo(live)) {
-      // roll the aside copy back so a failed swap leaves the index
-      // with its previous (readable) stats rather than none at all —
-      // same recovery contract as bandIndexCompact/ivfIndexRefresh
-      if (aside.exists()) aside.renameTo(live)
-      sys.error(s"stats swap at $dir failed; previous stats restored")
-    }
-    org.apache.commons.io.FileUtils.deleteQuietly(aside)
+    PersistedTable.replace(new java.io.File(s"$dir/stats"),
+      new java.io.File(staged), new java.io.File(s"$dir/stats_old"))
   }
 
-  /** Write postings one-file-per-bucket: with the map-only postings
-    * (r10) there is no exchange left before the partitioned write, so
-    * every scan task would otherwise fan out into every bucket —
-    * tasks × buckets small files (the ivfIndexBuild lesson). One
-    * narrow shuffle of the already-counted (term, doc) rows restores
-    * the layout discipline; it carries fewer, pre-aggregated rows
-    * than the explode-then-GROUP BY exchange it replaced.
+  /** Postings are written one file per bucket: with the map-only
+    * postings (r10) there is no exchange left before the partitioned
+    * write, so the writer's keyed exchange carries the already-counted
+    * (term, doc) rows — fewer rows than the explode-then-GROUP BY
+    * exchange it replaced.
     */
   private def writePostings(post: DataFrame, dir: String,
-                            mode: String): Unit =
-    // EXPLICIT partition count (r11): a keyed repartition without one
-    // is AQE-coalescible, and at small byte sizes AQE folds the write
-    // back into ONE task — IndexBuckets sequential file creations
-    // (~0.1 CPU-s each on this FS), the exact floor this exchange
-    // exists to parallelize
-    post.repartition(IndexBuckets, col("bucket"))
-      .write.mode(mode).partitionBy("bucket")
-      .parquet(s"$dir/postings")
+                            mode: PersistedTable.Mode): Unit =
+    PersistedTable.write(post, "bucket", IndexBuckets,
+      s"$dir/postings", mode)
 
   def indexBuild(docs: DataFrame, idCol: String, textCol: String,
                  dir: String): Unit = {
     org.apache.commons.io.FileUtils
       .deleteQuietly(new java.io.File(dir))
     writePostings(bucketed(postings(docs, idCol, textCol)), dir,
-      "overwrite")
+      PersistedTable.Overwrite)
     writeStats(docs, textCol, dir, "overwrite")
   }
 
@@ -150,7 +133,7 @@ object Bm25 {
   def indexAppend(delta: DataFrame, idCol: String, textCol: String,
                   dir: String): Unit = {
     writePostings(bucketed(postings(delta, idCol, textCol)), dir,
-      "append")
+      PersistedTable.Append)
     writeStats(delta, textCol, dir, "append")
   }
 

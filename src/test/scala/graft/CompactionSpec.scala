@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.io.Compaction
+import graft.io.{Compaction, PersistedTable}
 
 /** Compaction semantics: fewer files, identical rows, no shuffle in
   * the rewrite plan, sane file-count targeting.
@@ -52,5 +52,19 @@ class CompactionSpec extends SparkSpec {
     val plan = spark.read.parquet(dir).coalesce(1)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan)
+  }
+
+  test("a failed swap restores the original and leaves no aside behind") {
+    val live = new java.io.File(freshDir())
+    (1L to 100L).toDF("id").repartition(3).write.parquet(live.getPath)
+    val original = live.list().toSet
+    val staged = new java.io.File(live.getParentFile, "t.missing")
+    val aside = new java.io.File(live.getParentFile, "t.aside")
+    val e = intercept[IllegalStateException](
+      PersistedTable.replace(live, staged, aside))
+    assert(e.getMessage.contains("original restored"), e.getMessage)
+    assert(live.list().toSet == original)
+    assert(spark.read.parquet(live.getPath).count() == 100L)
+    assert(!aside.exists())
   }
 }

@@ -113,4 +113,25 @@ class IvfRefreshSpec extends SparkSpec {
       s"refresh should not worsen the hot cell: before=$before after=$after")
     assert(Ann.indexSelfCheck(spark, ix).as[(Long, Long)].head()._2 == 0L)
   }
+
+  test("an append adds at most one file per cell, whatever the delta's split count") {
+    val ix = freshIndex()
+    def filesPerCell(): Map[String, Int] =
+      new java.io.File(s"${Ann.ivfRoot(ix)}/assigned").listFiles().toSeq
+        .filter(_.getName.startsWith("cell="))
+        .map(d => d.getName -> d.list().count(_.endsWith(".parquet"))).toMap
+    val before = filesPerCell()
+    // re-id'd corpus vectors spread over several cells, and each of the
+    // delta's four splits holds vectors of most of them
+    val delta = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .filter(col("vec_id") < 64)
+      .withColumn("vec_id", col("vec_id") + 100000L)
+      .repartition(4)
+    Ann.ivfIndexAppend(delta, "vec_id", "embedding", ix)
+    val gained = filesPerCell().map { case (c, n) => c -> (n - before.getOrElse(c, 0)) }
+    assert(gained.count(_._2 > 0) > 1, s"the delta should span cells: $gained")
+    assert(gained.values.forall(_ <= 1), s"parquet files gained per cell: $gained")
+    assert(Ann.indexSelfCheck(spark, ix).as[(Long, Long)].head() ==
+      ((assignments(ix).size.toLong, 0L)))
+  }
 }
