@@ -86,7 +86,7 @@ object BenchChunk {
       attempt("stream_rows_per_sec") {
         val (streamRate, streamBatches) =
           graft.streaming.StreamingJob.sustainedScoringRate(
-            spark, sfDir, "/tmp/graft_bench_stream")
+            spark, sfDir, graft.io.Scratch.dir("bench_stream"))
         out ++= f"stream_rows_per_sec\t$streamRate%.1f\n"
         out ++= s"stream_steady_batches\t$streamBatches\n"
       }

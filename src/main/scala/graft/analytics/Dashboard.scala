@@ -58,15 +58,20 @@ object Dashboard {
       round(nanToNull(stddev_samp(col("valor_transacao"))), 4).as("valor_std"))
 
   /** P18/W2 — z-score of value vs the payer's own distribution, as window
-    * exprs attached to every row (no agg+re-join needed).
+    * exprs attached to every row (no agg+re-join needed). SQL semantics
+    * at the edges: a payer whose values are all equal (std 0) gets NULL,
+    * as `x / 0.0` does in SQL, not an ANSI divide-by-zero; a negative z
+    * that rounds to zero stays -0.0, which a decimal `round` drops.
     */
   def zScorePerRow(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("id_usuario_pagador"))
     val mu = avg(col("valor_transacao")).over(w)
     val sd = nanToNull(stddev_samp(col("valor_transacao")).over(w))
+    val z = (col("valor_transacao") - mu) / when(sd =!= 0.0, sd)
+    val r = round(z, 4)
     scored.select(
       col("id_transacao"),
-      round((col("valor_transacao") - mu) / sd, 4).as("z_score"))
+      when(r === 0.0, r * signum(z)).otherwise(r).as("z_score"))
   }
 
   /** A5 — mean time-score and approval rate per hour (dashboard.py:498). */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.io.Scratch
 import graft.functions.Skew
 
 /** Relational operator surface beyond the reference's inventory, all
@@ -289,22 +290,23 @@ object RelationalOpsQueries {
     // about results (bucket count stays a layout knob: any number
     // divides the key space losslessly).
     "layout_bucketed_join" -> ((s, dir) => {
-      val wh = "/tmp/graft_warehouse"
-      def writeBucketed(df: DataFrame, table: String, key: String): Unit = {
-        s.sql(s"DROP TABLE IF EXISTS $table")
-        df.write.mode("overwrite")
+      // per-invocation tables: a second invocation must not replace the
+      // tables this one's lazy frame still reads
+      val wh = Scratch.dir("bucketed_join")
+      val id = wh.substring(wh.lastIndexOf('-') + 1)
+      def writeBucketed(df: DataFrame, table: String, key: String): DataFrame = {
+        df.write
           .option("path", s"$wh/$table")
           .bucketBy(8, key).sortBy(key)
           .format("parquet").saveAsTable(table)
+        s.table(table)
       }
-      writeBucketed(Tables.orders(s, dir)
+      val o = writeBucketed(Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderpriority")),
-        "graft_orders_bkt", "o_orderkey")
-      writeBucketed(Tables.lineitem(s, dir)
+        s"graft_orders_bkt_$id", "o_orderkey")
+      val li = writeBucketed(Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount")),
-        "graft_lineitem_bkt", "l_orderkey")
-      val o = s.table("graft_orders_bkt")
-      val li = s.table("graft_lineitem_bkt")
+        s"graft_lineitem_bkt_$id", "l_orderkey")
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"),
@@ -329,9 +331,7 @@ object RelationalOpsQueries {
     // so the whole row is oracle-checkable. Integer checksum, not a
     // double sum: file-grouped FP addition would reassociate.
     "layout_range_manifest" -> ((s, dir) => {
-      val out = s"/tmp/graft_layout_range-${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils
-        .deleteQuietly(new java.io.File(out))
+      val out = Scratch.dir("layout_range")
       Tables.events(s, dir)
         .select(col("event_id"), col("user_id"), col("ts"))
         .repartitionByRange(8, col("ts"))

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.io.Scratch
 
 /** Driver-contract registrations for near-dup detection over
   * `documents`. The exact n-gram Jaccard query and the MinHash-LSH
@@ -105,18 +106,13 @@ object DedupQueries {
     "dedup_novelty_persisted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val b = graft.functions.Binning.knuthBucket(col("doc_id"))
-      val ix = s"/tmp/graft_novelty_ix-${ProcessHandle.current().pid()}"
+      val ix = Scratch.dir("novelty_ix")
       Boilerplate.gramIndexBuild(
         docs.filter(b < 80 && col("doc_id") < 250), "doc_id", "text",
         n = 5, ix)
       Boilerplate.gramIndexAppend(
         docs.filter(b < 80 && col("doc_id") >= 250), "doc_id", "text",
         n = 5, ix)
-      // the probe plan reads the index lazily, so the scratch dir is
-      // reclaimed at JVM exit rather than leaked one-per-process
-      // (an eager checkpoint-then-delete was a measured ~0.6 s loss)
-      org.apache.commons.io.FileUtils
-        .forceDeleteOnExit(new java.io.File(ix))
       Boilerplate.noveltyFromIndex(s, docs.filter(b >= 90),
         "doc_id", "text", n = 5, ix)
     }),
@@ -141,8 +137,7 @@ object DedupQueries {
     // Jaccard oracle) returns. Compaction is pure layout.
     "dedup_index_compacted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val ix = s"/tmp/graft_band_compact-${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ix))
+      val ix = Scratch.dir("band_compact")
       Dedup.bandIndexBuild(docs.filter(col("doc_id") >= 300),
         "doc_id", "text", N, ix)
       Dedup.bandIndexIngestBatch(
@@ -159,8 +154,7 @@ object DedupQueries {
     }),
     "dedup_index_persisted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val ix = s"/tmp/graft_band_index-${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ix))
+      val ix = Scratch.dir("band_index")
       Dedup.bandIndexBuild(docs.filter(col("doc_id") >= 300),
         "doc_id", "text", N, ix)
       Dedup.bandIndexAppend(

@@ -55,7 +55,7 @@ object Jobs {
       // catalog writes (bucketed tables) must never land in the
       // process cwd; external-path tables put their DATA where the
       // caller says, this pins the catalog default too
-      .config("spark.sql.warehouse.dir", "/tmp/graft_warehouse")
+      .config("spark.sql.warehouse.dir", graft.io.Scratch.dir("warehouse"))
 
   /** Streaming scoring job: decoded transaction stream → enrich →
     * score → shape → foreachBatch fan-out (facts + scores + keyed

@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.io.Scratch
 
 /** Driver-contract registrations for similarity search over the
   * `embeddings` table. ALL variants are oracle-checked — including the
@@ -122,8 +123,7 @@ object AnnQueries {
     "pipeline_index_maintenance" -> ((s, dir) => {
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
-      val ix = s"/tmp/graft_ivf_maint-${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ix))
+      val ix = Scratch.dir("ivf_maint")
       Ann.ivfIndexBuild(emb.filter(col("vec_id") >= 100),
         "vec_id", "embedding", nCells = 16, ix)
       def cellHist(): Map[Int, Long] =
@@ -165,8 +165,7 @@ object AnnQueries {
     // ann_ivf_kmeans_topk.
     "ann_ivf_refresh" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val ix = s"/tmp/graft_ivf_refresh-${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ix))
+      val ix = Scratch.dir("ivf_refresh")
       Ann.ivfIndexBuild(emb, "vec_id", "embedding", nCells = 16, ix)
       Ann.ivfIndexRefresh(s, ix, iters = 3)
       val q = emb.filter(col("vec_id") < NQueries)
@@ -186,8 +185,7 @@ object AnnQueries {
     }),
     "ann_ivf_persisted" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      val ix = s"/tmp/graft_ivf_index-${ProcessHandle.current().pid()}"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ix))
+      val ix = Scratch.dir("ivf_index")
       // append assigns against the same frozen centroids the build
       // returned, so the probe can reuse them without a re-read
       val cents = Ann.ivfIndexBuild(emb.filter(col("vec_id") >= 100),

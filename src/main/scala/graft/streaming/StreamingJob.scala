@@ -7,6 +7,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
+import graft.io.Scratch
+
 /** Structured-Streaming surface of the engine (SURVEY.md §2.8–§2.9).
   *
   * The scoring stages ([[graft.etl.ScoringPipeline]]) are pure
@@ -32,18 +34,6 @@ object StreamingJob {
   private val confLock = new Object
   private def startLocked(f: => StreamingQuery): StreamingQuery =
     confLock.synchronized(f)
-
-  /** The scratch directory of one streaming call, `$workDir-<pid>`,
-    * wiped on entry. The per-process suffix: a re-run in THIS process
-    * overwrites its own previous output, while another process (e.g.
-    * the bench running beside an oracle check) can never delete files
-    * this one is still lazily reading.
-    */
-  private def scratch(workDir: String): String = {
-    val dir = s"$workDir-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    dir
-  }
 
   /** Files an admission stream stages its arrivals as. */
   private val StagedFiles = 4
@@ -170,7 +160,7 @@ object StreamingJob {
     */
   def runToParquet(stream: DataFrame, workDir: String): DataFrame = {
     val spark = stream.sparkSession
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val out = s"$dir/out"
     val q = startLocked(stream.writeStream.format("parquet")
       .option("path", out)
@@ -287,7 +277,7 @@ object StreamingJob {
     require(nFiles <= 64,
       s"nFiles=$nFiles exceeds the recentProgress retention window")
     import graft.etl.{ScoringPipeline, TestdataAdapter}
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     // deliberately 1 file per trigger: this method MEASURES the
     // steady-state per-batch rate over many batches — batch size is
     // the experiment's controlled variable, not a floor to optimize
@@ -369,7 +359,7 @@ object StreamingJob {
     */
   def incrementalMv(spark: SparkSession, sfDir: String,
                     workDir: String): DataFrame = {
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     // only the columns the MV consumes: staging the wide events row
     // (the props JSON string dominates its bytes) tripled the cost of
     // an exercise that is about merge mechanics, not scan width
@@ -398,7 +388,7 @@ object StreamingJob {
                             id: String, text: String, n: Int,
                             threshold: Double, workDir: String,
                             nFiles: Int = 4): DataFrame = {
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     // deliberately 1 file per trigger, not FilesPerTrigger: this loop's
     // output is (in_doc, corpus_doc) probe hits, whose ORIENTATION
     // depends on batch composition (a same-batch pair emits both
@@ -429,7 +419,7 @@ object StreamingJob {
     val (lo, hi, nBins) = (0.0, 500.0, 10)
     val ev = graft.Tables.events(spark, sfDir)
       .select(col("event_id"), col("event_type"), col("value"))
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val mv = s"$dir/counts"
     admit(ev.filter(col("event_id") % 2 === 1), dir, StagedFiles,
         FilesPerTrigger) { (batch, _) =>
@@ -500,7 +490,7 @@ object StreamingJob {
                              nBuckets: Int = 16,
                              filesPerTrigger: Int = FilesPerTrigger): DataFrame = {
     val s = docs.sparkSession
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     maintain(docs, dir, filesPerTrigger, labelQueue(s, dir, nBuckets),
         minPending = if (filesPerTrigger >= 2) 1 else 2) { (batch, batchId) =>
       edgesOf(batch, id, text, n, threshold, s"$dir/ix", batchId,
@@ -761,7 +751,7 @@ object StreamingJob {
                               n: Int, threshold: Double, workDir: String,
                               nBuckets: Int = 16): DataFrame = {
     val s = docs.sparkSession
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     maintain(docs, dir, FilesPerTrigger, keeperQueue(s, dir, nBuckets),
         minPending = 1) { (batch, batchId) =>
       val edges = edgesOf(batch, id, text, n, threshold, s"$dir/ix",
@@ -823,7 +813,7 @@ object StreamingJob {
                           k: Int, nProbe: Int, nCells: Int,
                           workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     // the index is FROZEN for the whole probe stream — centroids come
     // straight from the build (appends never change them), and the
     // cell listing is resolved once (partition discovery is a driver
@@ -888,7 +878,7 @@ object StreamingJob {
   def streamStateInspection(keyed: Dataset[TxKeyed],
                             workDir: String): DataFrame = {
     val s = keyed.sparkSession
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val q = startLocked(runningUserTotals(keyed).toDF().writeStream
       .format("noop")
       .outputMode("update")
@@ -1123,7 +1113,7 @@ object StreamingJob {
                      queries: DataFrame, id: String, text: String,
                      k: Int, workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     graft.text.Bm25.indexBuild(corpus, id, text, s"$dir/ix")
     graft.text.Bm25.indexAppend(delta, id, text, s"$dir/ix")
     // the index is FROZEN for the whole probe stream (built+appended
@@ -1163,7 +1153,7 @@ object StreamingJob {
                          id: String, text: String, n: Int,
                          workDir: String): DataFrame = {
     val s = corpus.sparkSession
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     graft.dedup.Boilerplate.gramIndexBuild(corpus, id, text, n, s"$dir/ix")
     admitToOut(queries, dir, StagedFiles, FilesPerTrigger) { batch =>
       graft.dedup.Boilerplate.noveltyFromIndex(s, batch, id, text, n,
@@ -1185,7 +1175,7 @@ object StreamingJob {
     */
   def streamEpochMaterialize(docs: DataFrame, id: String,
                              sliceCol: String, workDir: String): DataFrame = {
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val counts = docs.groupBy(col(sliceCol)).agg(count(lit(1)).as("n_l"))
     val eps = counts
       .crossJoin(broadcast(counts.agg(max(col("n_l")).as("n_max"))))
@@ -1252,7 +1242,7 @@ object StreamingJob {
                         filesPerTrigger: Int = FilesPerTrigger,
                         ivfLeg: Option[(Int, Int)] = None): DataFrame = {
     val s = docs.sparkSession
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     graft.text.Bm25.indexBuild(docs.filter(col(id) >= split), id, text,
       s"$dir/ix")
     // both legs are FROZEN for the whole probe stream: stats read
@@ -1331,7 +1321,7 @@ object StreamingJob {
   def streamBoilerStrip(docs: DataFrame, id: String, text: String,
                         n: Int, minDf: Int, split: Int,
                         workDir: String): DataFrame = {
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val boiler = graft.dedup.Dedup.commonNgrams(
         docs.filter(col(id) >= split), id, text, n, minDf)
       .select(col("ngram")).cache()
@@ -1360,7 +1350,7 @@ object StreamingJob {
   def streamPerplexityGate(ref: DataFrame, arriving: DataFrame,
                            id: String, text: String, threshold: Double,
                            workDir: String): DataFrame = {
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val bigrams = graft.text.LangModel.bigramCounts(ref, text).cache()
     // the ONE shared definition of the context totals (streamPplBuckets
     // and the batch scorer use it too) — a hand-rolled twin here could
@@ -1392,7 +1382,7 @@ object StreamingJob {
                            id: String, text: String, langCol: String,
                            langs: Seq[String],
                            workDir: String): DataFrame = {
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val models = graft.text.LangClassifier
       .fit(staticDocs, text, langCol, langs)
       .map(m => m.copy(bigrams = m.bigrams.cache(), c1 = m.c1.cache()))
@@ -1427,7 +1417,7 @@ object StreamingJob {
   def streamPplBuckets(ref: DataFrame, calibration: DataFrame,
                        arriving: DataFrame, id: String, text: String,
                        threshold: Double, workDir: String): DataFrame = {
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val bigrams = graft.text.LangModel.bigramCounts(ref, text).cache()
     val c1 = graft.text.LangModel.derivedContextTotals(bigrams).cache()
     try {
@@ -1469,7 +1459,7 @@ object StreamingJob {
   def streamDsirAdmission(staticDocs: DataFrame, arriving: DataFrame,
                           id: String, text: String, targetLang: String,
                           threshold: Double, workDir: String): DataFrame = {
-    val dir = scratch(workDir)
+    val dir = Scratch.beside(workDir)
     val tc = graft.text.Dsir.featureCounts(
       staticDocs.filter(col("lang") === targetLang), id, text).cache()
     val sc = graft.text.Dsir.featureCounts(staticDocs, id, text).cache()

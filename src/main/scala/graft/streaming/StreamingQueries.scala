@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.Tables
 import graft.etl.{ScoringPipeline, TestdataAdapter}
+import graft.io.Scratch
 
 /** Driver-contract registrations exercising the streaming engine
   * (S4, T1–T3, W3) and the JSON decode path (P2) — each checked
@@ -35,9 +36,7 @@ object StreamingQueries {
       round(col("score_medio"), 6).as("score_medio"),
       col("score_aprovado"), col("saldo_aprovado"), col("limite_aprovado"),
       col("transacao_aprovada"))
-    // fixed dir: runToParquet clears it on entry, so reruns overwrite
-    // instead of accumulating sink output under /tmp
-    StreamingJob.runToParquet(shaped, "/tmp/graft_s4_sink")
+    StreamingJob.runToParquet(shaped, Scratch.dir("s4_sink"))
   }
 
   /** W3/T1: event-time tumbling-window aggregation on the stream,
@@ -308,7 +307,7 @@ object StreamingQueries {
         col("vec_id") < 100),
       emb.filter(col("vec_id") < graft.similarity.AnnQueries.NQueries),
       "vec_id", "embedding", graft.similarity.AnnQueries.K,
-      nProbe = 4, nCells = 16, "/tmp/graft_s17")
+      nProbe = 4, nCells = 16, Scratch.dir("s17"))
   }
 
   /** Streaming maintenance of the persisted band index: the doc_id
@@ -321,7 +320,7 @@ object StreamingQueries {
     val docs = Tables.documents(s, dir)
     StreamingJob.streamBandIndexIngest(
         docs.filter(col("doc_id") >= 200), docs.filter(col("doc_id") < 200),
-        "doc_id", "text", n = 3, threshold = 0.8, "/tmp/graft_s16")
+        "doc_id", "text", n = 3, threshold = 0.8, Scratch.dir("s16"))
       .select(col("in_doc"), col("corpus_doc"),
         round(col("jaccard"), 6).as("jaccard"))
   }
@@ -383,7 +382,7 @@ object StreamingQueries {
     // overwrite; DECIMAL sums make the N-merge result bit-equal the
     // oracle's one-pass GROUP BY regardless of merge order.
     "s12_incremental_mv" -> ((s, dir) =>
-      StreamingJob.incrementalMv(s, dir, "/tmp/graft_s12_mv")
+      StreamingJob.incrementalMv(s, dir, Scratch.dir("s12_mv"))
         .select(col("event_type"), col("n"),
           col("sum_value").cast("double").as("total_value"))),
     "s4_stream_pipeline" -> ((s, dir) => streamScore(s, dir)),
@@ -400,7 +399,7 @@ object StreamingQueries {
     // must equal the scratch connected-components recompute
     "s18_stream_label_maintenance" -> ((s, dir) =>
       StreamingJob.streamLabelMaintenance(Tables.documents(s, dir),
-        "doc_id", "text", n = 3, threshold = 0.8, "/tmp/graft_s18")),
+        "doc_id", "text", n = 3, threshold = 0.8, Scratch.dir("s18"))),
     // Streaming canonical-keeper maintenance: the s18 loop one derived
     // layer up — queued edge+delta batches fold (coalesced, off the
     // trigger path) into a doc-keyed state table and the keeper table,
@@ -408,13 +407,13 @@ object StreamingQueries {
     // full-corpus canonical selection
     "s30_stream_keeper_maintenance" -> ((s, dir) =>
       StreamingJob.streamKeeperMaintenance(Tables.documents(s, dir),
-        "doc_id", "text", n = 3, threshold = 0.8, "/tmp/graft_s30")),
+        "doc_id", "text", n = 3, threshold = 0.8, Scratch.dir("s30"))),
     // Streaming epoch materialization: per-lang factors frozen at
     // calibration, arrivals emit their copies map-only — drained
     // union ≡ the one-shot batch materialization (shared oracle)
     "s32_stream_epoch_materialize" -> ((s, dir) =>
       StreamingJob.streamEpochMaterialize(Tables.documents(s, dir),
-        "doc_id", "lang", "/tmp/graft_s32")),
+        "doc_id", "lang", Scratch.dir("s32"))),
     // Streaming novelty probe: gram index frozen on the train split,
     // held-out docs arrive as micro-batches, drained census ≡ the
     // one-shot batch census (shared dedup_novelty oracle)
@@ -422,14 +421,14 @@ object StreamingQueries {
       val docs = Tables.documents(s, dir)
       val b = graft.functions.Binning.knuthBucket(col("doc_id"))
       StreamingJob.streamNoveltyProbe(docs.filter(b < 80),
-        docs.filter(b >= 90), "doc_id", "text", n = 5, "/tmp/graft_s31")
+        docs.filter(b >= 90), "doc_id", "text", n = 5, Scratch.dir("s31"))
     }),
     // Streaming drift monitor: current-slice histogram maintained
     // incrementally (long counts ⇒ N-batch merge == one pass), PSI vs
     // the static reference after drain — same answer, same oracle, as
     // the one-shot batch gate
     "s19_stream_drift_monitor" -> ((s, dir) =>
-      StreamingJob.streamDriftMonitor(s, dir, "/tmp/graft_s19")),
+      StreamingJob.streamDriftMonitor(s, dir, Scratch.dir("s19"))),
     "s15_stream_semantic_admission" -> ((s, dir) =>
       streamSemanticAdmission(s, dir)),
     // Streaming model-gated admission: the hashed-linear quality
@@ -456,7 +455,7 @@ object StreamingQueries {
         docs.filter(col("doc_id") >= split && col("doc_id") < 300),
         docs.filter(col("doc_id") < split),
         "doc_id", "text", graft.text.PackingQueries.MltK,
-        "/tmp/graft_s22")
+        Scratch.dir("s22"))
         .select(col("qid"), col("doc_id").as("cdoc"), col("score"),
           col("n_shared"), col("rank"))
     }),
@@ -484,7 +483,7 @@ object StreamingQueries {
       StreamingJob.streamLangidClassify(
         graft.text.LmQueries.refSplit(docs),
         graft.text.LmQueries.holdoutSplit(docs), "doc_id", "text",
-        "lang", graft.text.LmQueries.IdLangs, "/tmp/graft_s29")
+        "lang", graft.text.LmQueries.IdLangs, Scratch.dir("s29"))
     }),
     // Streaming CCNet bucketing: LM + tertile cutoffs frozen from the
     // one-time calibration, arrivals scored + labeled map-only — the
@@ -494,13 +493,13 @@ object StreamingQueries {
       val ho = graft.text.LmQueries.holdoutSplit(docs)
       StreamingJob.streamPplBuckets(
         graft.text.LmQueries.refSplit(docs), ho, ho, "doc_id", "text",
-        graft.text.LmQueries.NllThreshold, "/tmp/graft_s28")
+        graft.text.LmQueries.NllThreshold, Scratch.dir("s28"))
     }),
     "s27_stream_dsir_admission" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       StreamingJob.streamDsirAdmission(docs, docs, "doc_id", "text",
         graft.text.LmQueries.TargetLang, graft.text.LmQueries.DsirGate,
-        "/tmp/graft_s27")
+        Scratch.dir("s27"))
         .select(col("doc_id"), col("n_bigrams"), col("w_q"),
           col("logratio"))
     }),
@@ -510,21 +509,21 @@ object StreamingQueries {
         graft.text.LmQueries.refSplit(docs),
         graft.text.LmQueries.holdoutSplit(docs),
         "doc_id", "text", graft.text.LmQueries.NllThreshold,
-        "/tmp/graft_s26")
+        Scratch.dir("s26"))
         .select(col("doc_id"), col("n_bigrams"), col("sum_lq"),
           col("nll"), col("admit"))
     }),
     "s25_stream_boiler_strip" -> ((s, dir) =>
       StreamingJob.streamBoilerStrip(Tables.documents(s, dir),
         "doc_id", "text", n = 3, minDf = 3,
-        split = graft.text.HybridQueries.Split, "/tmp/graft_s25")
+        split = graft.text.HybridQueries.Split, Scratch.dir("s25"))
         .select(col("doc"), col("n_tokens"), col("n_removed"),
           col("n_spans"), col("clean_text"))),
     "s24_stream_hybrid_probe" -> ((s, dir) =>
       StreamingJob.streamHybridProbe(Tables.documents(s, dir),
         Tables.embeddings(s, dir), "doc_id", "text", "embedding",
         graft.text.HybridQueries.Split, graft.text.HybridQueries.HK,
-        "/tmp/graft_s24")
+        Scratch.dir("s24"))
         .select(col("qid"), col("doc"), col("lex_rank"),
           col("vec_rank"), col("rrf"), col("rank"))),
     // The hybrid admission stream with the SCALE-SAFE vector leg
@@ -539,7 +538,7 @@ object StreamingQueries {
       StreamingJob.streamHybridProbe(Tables.documents(s, dir),
         Tables.embeddings(s, dir), "doc_id", "text", "embedding",
         graft.text.HybridQueries.Split, graft.text.HybridQueries.HK,
-        "/tmp/graft_s24b",
+        Scratch.dir("s24b"),
         ivfLeg = Some((graft.text.HybridQueries.IvfCells,
           graft.text.HybridQueries.IvfProbe)))
         .select(col("qid"), col("doc"), col("lex_rank"),
@@ -586,7 +585,7 @@ object StreamingQueries {
     // checks the checkpoint's contents, not the query output
     "s33_state_inspection" -> ((s, dir) =>
       StreamingJob.streamStateInspection(keyedTxStream(s, dir),
-        "/tmp/graft_s33")),
+        Scratch.dir("s33"))),
     "w3_stream_hourly_rollup" -> ((s, dir) => streamRollup(s, dir)),
     "w7_hopping_rollup" -> ((s, dir) => streamHopping(s, dir)),
     "s5_stream_stream_join" -> ((s, dir) => streamStreamJoin(s, dir)),

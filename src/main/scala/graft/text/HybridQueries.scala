@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.io.Scratch
 
 /** Driver-contract registrations for the round-7 retrieval/cleaning/
   * training extensions:
@@ -65,7 +66,7 @@ object HybridQueries {
     "tx_hybrid_rrf" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val emb = Tables.embeddings(s, dir)
-      val ix = s"/tmp/graft_hybrid_index-${ProcessHandle.current().pid()}"
+      val ix = Scratch.dir("hybrid_index")
       Bm25.indexBuild(docs.filter(col("doc_id") >= Split),
         "doc_id", "text", ix)
       // localized probe (r9): the query side is micro-batch-sized and
@@ -94,7 +95,7 @@ object HybridQueries {
     "tx_hybrid_rrf_ivf" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val emb = Tables.embeddings(s, dir)
-      val base = s"/tmp/graft_hybrid_ivf-${ProcessHandle.current().pid()}"
+      val base = Scratch.dir("hybrid_ivf")
       Bm25.indexBuild(docs.filter(col("doc_id") >= Split),
         "doc_id", "text", s"$base/bm")
       // build returns the centroid set it stored (frozen until a
@@ -126,7 +127,7 @@ object HybridQueries {
     // proving the partial-df fold (disjoint appends ⇒ sum = union df)
     "dedup_strip_incremental" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val ix = s"/tmp/graft_gramix-${ProcessHandle.current().pid()}"
+      val ix = Scratch.dir("gramix")
       graft.dedup.Boilerplate.gramIndexBuild(
         docs.filter(col("doc_id") >= 250), "doc_id", "text", NGram, ix)
       graft.dedup.Boilerplate.gramIndexAppend(
@@ -154,7 +155,7 @@ object HybridQueries {
     // one-Project scoring plan)
     "tx_quality_persisted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val m = s"/tmp/graft_qmodel-${ProcessHandle.current().pid()}"
+      val m = Scratch.dir("qmodel")
       val (w0, b0) = QualityModel.train(docs, "text", TrainSteps, TrainLr)
       QualityModel.saveModel(s, w0, b0, m)
       val (w, b) = QualityModel.loadModel(s, m)

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.io.Scratch
 
 /** Driver-contract registrations for the [[LangModel]] perplexity
   * family — CCNet-style LM quality filtering (train a bigram LM on a
@@ -59,8 +60,7 @@ object LmQueries {
     "tx_lm_persisted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
       val ref = refSplit(docs)
-      val mdir =
-        s"/tmp/graft_lm_model-${ProcessHandle.current().pid()}"
+      val mdir = Scratch.dir("lm_model")
       LangModel.save(LangModel.bigramCounts(ref, "text"),
         LangModel.vocabSize(ref, "text"), ref.count(), mdir)
       val (bigrams, v) = LangModel.load(s, mdir)

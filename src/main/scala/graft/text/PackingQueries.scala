@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.io.Scratch
 
 /** Driver-contract registrations for the assembly layer between a
   * curated corpus and a training run: sequence packing, token-budget
@@ -100,7 +101,7 @@ object PackingQueries {
     // stored-df derivation
     "tx_bm25_persisted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val ix = s"/tmp/graft_bm25_index-${ProcessHandle.current().pid()}"
+      val ix = Scratch.dir("bm25_index")
       Bm25.indexBuild(docs.filter(col("doc_id") < 400), "doc_id", "text", ix)
       Bm25.indexAppend(docs.filter(col("doc_id") >= 400), "doc_id", "text", ix)
       Bm25.topKFromIndex(s, Bm25.indexQueryTerms(s, ix, NTerms), ix, K)
@@ -114,7 +115,7 @@ object PackingQueries {
     // sum so both engines total exact 6-decimal values in any order
     "tx_mlt_topk" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val ix = s"/tmp/graft_mlt_index-${ProcessHandle.current().pid()}"
+      val ix = Scratch.dir("mlt_index")
       Bm25.indexBuild(docs.filter(col("doc_id") >= MltSplit),
         "doc_id", "text", ix)
       Bm25.moreLikeThisFromIndex(s,

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.io.Scratch
 
 /** Driver-contract registrations for the text-analysis operators over
   * the `documents` table, each with a DuckDB oracle that re-derives the
@@ -327,7 +328,7 @@ object TextQueries {
       val (merges, _) = Bpe.trainBatched(docs, "text", 16, batch = 4)
       require(merges.length == 16,
         s"tx_bpe_persisted: corpus exhausted merges at ${merges.length}/16")
-      val mdir = s"/tmp/graft_bpe_merges-${ProcessHandle.current().pid()}"
+      val mdir = Scratch.dir("bpe_merges")
       Bpe.saveMerges(s, merges, mdir)
       val loaded = Bpe.loadMerges(s, mdir)
       require(loaded == merges,

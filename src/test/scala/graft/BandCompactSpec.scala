@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
+import graft.io.Scratch
 
 /** Band-index compaction: layout-only — row conservation, probe
   * equality, file-count reduction, staging hygiene.
@@ -20,7 +21,7 @@ class BandCompactSpec extends SparkSpec {
   }
 
   test("compaction preserves rows and probe results, folds ingest partitions, bounds files") {
-    val ix = s"/tmp/graft_band_compact_spec_${System.nanoTime()}"
+    val ix = Scratch.dir("band_compact_spec")
     val docs = Tables.documents(spark, dir)
     Dedup.bandIndexBuild(docs.filter(col("doc_id") >= 60), "doc_id", "text", 3, ix)
     Dedup.bandIndexIngestBatch(

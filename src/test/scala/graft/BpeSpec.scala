@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.text.{Bpe, Text}
+import graft.io.Scratch
 
 /** BPE training correctness: the distributed trainer must equal a
   * plain-collections reference implementation of the same algorithm
@@ -312,7 +313,7 @@ class BpeSpec extends SparkSpec {
   test("merge table persists and loads rank-for-rank; empty/torn artifacts fail loudly") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val (merges, _) = Bpe.trainBatched(docs, "text", 10, batch = 4)
-    val dir = s"/tmp/graft_bpe_save_${System.nanoTime()}"
+    val dir = Scratch.dir("bpe_save")
     Bpe.saveMerges(spark, merges, dir)
     assert(Bpe.loadMerges(spark, dir) == merges)
     // encoding through the loaded artifact equals the in-session table
@@ -322,11 +323,11 @@ class BpeSpec extends SparkSpec {
       .filter(col("a") =!= col("b")).count()
     assert(diff == 0L)
     // an empty artifact refuses to encode-with-zero-merges silently
-    val empty = s"/tmp/graft_bpe_save_empty_${System.nanoTime()}"
+    val empty = Scratch.dir("bpe_save_empty")
     Bpe.saveMerges(spark, Seq.empty, empty)
     intercept[IllegalArgumentException](Bpe.loadMerges(spark, empty))
     // a rank gap (torn/mixed write) is rejected
-    val torn = s"/tmp/graft_bpe_save_torn_${System.nanoTime()}"
+    val torn = Scratch.dir("bpe_save_torn")
     Bpe.saveMerges(spark, merges.filter(_.rank != 3), torn)
     intercept[IllegalArgumentException](Bpe.loadMerges(spark, torn))
   }

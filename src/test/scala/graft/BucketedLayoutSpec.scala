@@ -5,7 +5,7 @@ import java.io.File
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.dedup.{Boilerplate, Dedup}
-import graft.io.PersistedTable
+import graft.io.{PersistedTable, Scratch}
 import graft.similarity.Ann
 import graft.text.Bm25
 
@@ -90,8 +90,7 @@ class BucketedLayoutSpec extends SparkSpec {
 
   cases.foreach { c =>
     test(s"${c.name} adds one file to each partition directory it writes") {
-      val ix = java.nio.file.Files.createTempDirectory("graft_layout")
-        .resolve("ix").toString
+      val ix = s"${Scratch.dir("layout")}/ix"
       c.setup(ix)
       val before = parquetPaths(ix)
       c.write(ix)

@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
-import graft.io.{Compaction, PersistedTable}
+import graft.io.{Compaction, PersistedTable, Scratch}
 
 /** Compaction semantics: fewer files, identical rows, no shuffle in
   * the rewrite plan, sane file-count targeting.
@@ -12,7 +10,7 @@ class CompactionSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir() =
-    Files.createTempDirectory("graft_compact").resolve("t").toString
+    s"${Scratch.dir("compact")}/t"
 
   test("compacts many small files into few; rows and values intact") {
     val dir = freshDir()

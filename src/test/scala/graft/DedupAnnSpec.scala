@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.dedup.Dedup
 import graft.functions.{TextHashing, VectorExprs}
 import graft.similarity.Ann
+import graft.io.Scratch
 
 /** Near-dup and similarity-search semantics on crafted corpora, plus
   * differential tests pinning the native kernels to their composable
@@ -257,7 +258,7 @@ class DedupAnnSpec extends SparkSpec {
 
   test("persisted IVF index: build + delta append answers identically to recompute") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val ix = java.nio.file.Files.createTempDirectory("graft_ivf_ix").toString
+    val ix = Scratch.dir("ivf_ix")
     Ann.ivfIndexBuild(emb.filter(col("vec_id") >= 100),
       "vec_id", "embedding", nCells = 8, ix)
     Ann.ivfIndexAppend(emb.filter(col("vec_id") >= 4 && col("vec_id") < 100),
@@ -289,7 +290,7 @@ class DedupAnnSpec extends SparkSpec {
 
   test("persisted band index: delta append == one-shot admission; old files untouched") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val ix = java.nio.file.Files.createTempDirectory("graft_band_ix").toString
+    val ix = Scratch.dir("band_ix")
     Dedup.bandIndexBuild(docs.filter(col("doc_id") >= 30),
       "doc_id", "text", 3, ix)
     def bandFiles(): Set[String] =
@@ -320,7 +321,7 @@ class DedupAnnSpec extends SparkSpec {
     // partition discovery ("conflicting directory structures") because
     // the two write paths parked at different partition depths
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val ix = java.nio.file.Files.createTempDirectory("graft_bi_mix").toString
+    val ix = Scratch.dir("bi_mix")
     Dedup.bandIndexBuild(docs.filter(col("doc_id") >= 30),
       "doc_id", "text", 3, ix)
     Dedup.bandIndexIngestBatch(
@@ -345,14 +346,14 @@ class DedupAnnSpec extends SparkSpec {
     val base = docs.filter(col("doc_id") >= 100)
     val batch = docs.filter(col("doc_id") < 100)
     // unfused reference: ingest, then probe the (self-inclusive) index
-    val ixA = java.nio.file.Files.createTempDirectory("graft_fuse_a").toString
+    val ixA = Scratch.dir("fuse_a")
     Dedup.bandIndexBuild(base, "doc_id", "text", 3, ixA)
     Dedup.bandIndexIngestBatch(batch, "doc_id", "text", 3, ixA, 0L)
     val unfused = Dedup.bandIndexProbe(batch, "doc_id", "text", 3, ixA, 0.5)
       .select("in_doc", "corpus_doc", "jaccard")
       .as[(Long, Long, Double)].collect().toSet
     // fused: one signature pass, same writes, same probe body
-    val ixB = java.nio.file.Files.createTempDirectory("graft_fuse_b").toString
+    val ixB = Scratch.dir("fuse_b")
     Dedup.bandIndexBuild(base, "doc_id", "text", 3, ixB)
     val fused = Dedup.bandIndexIngestProbeBatch(batch, "doc_id", "text",
         3, ixB, 0L, 0.5)
@@ -374,7 +375,7 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("async label fold: durable queue recovery folds unmarked partitions exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_lblq").toString
+    val dir = Scratch.dir("lblq")
     // seed a labels table from an initial edge set
     Dedup.labelsMerge(s"$dir/labels", Seq((1L, 2L), (3L, 4L)).toDF("a", "b"),
       "a", "b", nBuckets = 4)
@@ -406,7 +407,7 @@ class DedupAnnSpec extends SparkSpec {
 
   test("keeper fold crash windows: committed-unfolded batch recovers, " +
     "torn batch is skipped, marker loss refolds to the same bytes") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_kpq").toString
+    val dir = Scratch.dir("kpq")
     // queue wire format = what streamKeeperMaintenance's trigger
     // commits: ONE union-schema parquet per batch (edge rows carry
     // null doc/q; delta rows null a/b), _SUCCESS from the committer
@@ -836,10 +837,10 @@ class DedupAnnSpec extends SparkSpec {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val two = graft.streaming.StreamingJob.streamLabelMaintenance(
       docs, "doc_id", "text", n = 3, threshold = 0.8,
-      "/tmp/graft_s18_c2")
+      Scratch.dir("s18_c2"))
     val one = graft.streaming.StreamingJob.streamLabelMaintenance(
       docs, "doc_id", "text", n = 3, threshold = 0.8,
-      "/tmp/graft_s18_c1", filesPerTrigger = 1)
+      Scratch.dir("s18_c1"), filesPerTrigger = 1)
     val scratch = Dedup.connectedComponents(
       Dedup.minhashLshPairs(docs, "doc_id", "text", n = 3,
         threshold = 0.8), "doc_a", "doc_b")
@@ -851,8 +852,7 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("labelsMerge: only affected buckets rewritten; redelivery is a fixpoint") {
-    val dir = s"/tmp/graft_labels_spec-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = Scratch.dir("labels_spec")
     // nBuckets=4: cluster {1,2} lives in buckets 1,2; cluster {40,44}
     // entirely in bucket 0 — disjoint from anything the second merge
     // touches
@@ -882,8 +882,7 @@ class DedupAnnSpec extends SparkSpec {
 
   test("curationMerge: keeper rows move buckets on merge, untouched " +
     "buckets stay byte-identical, redelivery is a fixpoint") {
-    val dir = s"/tmp/graft_curation_spec-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = Scratch.dir("curation_spec")
     def merge(edges: Seq[(Long, Long)], delta: Seq[(Long, Double)]): Unit =
       Dedup.curationMerge(dir, edges.toDF("a", "b"), delta.toDF("doc", "q"),
         "doc", "q", "a", "b", nBuckets = 4)
@@ -926,8 +925,7 @@ class DedupAnnSpec extends SparkSpec {
     // merge commits state/keepers dirs holding only _SUCCESS, and the
     // next merge's reads must treat them as zero rows, not throw
     // schema-inference errors (explicit-schema reads, probed live)
-    val dir = s"/tmp/graft_empty_spec-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = Scratch.dir("empty_spec")
     def merge(edges: Seq[(Long, Long)], delta: Seq[(Long, Double)]): Unit =
       Dedup.curationMerge(dir, edges.toDF("a", "b"), delta.toDF("doc", "q"),
         "doc", "q", "a", "b", nBuckets = 4)
@@ -975,7 +973,7 @@ class DedupAnnSpec extends SparkSpec {
     // and the pruned probe returns the identical rows
     val emb = (0 until 640)
       .map(i => (i.toLong, v(i * 5 + 3).toArray)).toDF("vec_id", "embedding")
-    val ix = "/tmp/graft_spec_bigcells_ix"
+    val ix = Scratch.dir("spec_bigcells_ix")
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ix))
     Ann.ivfIndexBuild(emb.filter(col("vec_id") >= 40), "vec_id",
       "embedding", nCells = 300, ix)

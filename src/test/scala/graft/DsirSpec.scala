@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.text.Dsir
+import graft.io.Scratch
 
 /** DSIR importance resampling: weights replicated bigram-by-bigram
   * from first principles (Scala-side md5 + the smoothed multinomial
@@ -118,7 +119,7 @@ class DsirSpec extends SparkSpec {
     val streamed = graft.streaming.StreamingJob
       .streamDsirAdmission(staticDocs, mixedPool, "doc_id", "text",
         targetLang = "en", threshold = 0.0,
-        java.nio.file.Files.createTempDirectory("graft_s27t").toString)
+        Scratch.dir("s27t"))
       .collect().map(_.toSeq).toSet
     val tgtSlice = mixedPool.filter(col("doc_id") < 30)
     val (tc, tt) = fit(tgtSlice)

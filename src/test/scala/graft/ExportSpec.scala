@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
-import graft.io.Export
+import graft.io.{Export, Scratch}
 
 /** Sharded-export semantics: routing is a pure id function (misroute
   * = silent training-data corruption), re-writes are deterministic,
@@ -13,7 +11,7 @@ class ExportSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir() =
-    Files.createTempDirectory("graft_export").resolve("out").toString
+    s"${Scratch.dir("export")}/out"
 
   private def corpus = (1L to 8000L).map(i => (i, s"doc body $i")).toDF("doc_id", "text")
 

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.dedup.Boilerplate
 import graft.text.Retrieval
+import graft.io.Scratch
 
 /** Units for the round-7 retrieval/cleaning extensions: RRF fusion
   * against hand-computed scores, and boilerplate span-stripping edge
@@ -98,7 +99,7 @@ class HybridSpec extends SparkSpec {
         Tables.documents(spark, dir), Tables.embeddings(spark, dir),
         "doc_id", "text", "embedding",
         graft.text.HybridQueries.Split, graft.text.HybridQueries.HK,
-        "/tmp/graft_hybrid_spec")
+        Scratch.dir("hybrid_spec"))
       .select("qid", "doc", "lex_rank", "vec_rank", "rrf", "rank")
     val batch = graft.text.HybridQueries
       .queries("tx_hybrid_rrf")(spark, dir)
@@ -134,7 +135,7 @@ class HybridSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir)
     val split = graft.text.HybridQueries.Split
-    val ix = "/tmp/graft_mlt_localize_spec/ix"
+    val ix = s"${Scratch.dir("mlt_localize_spec")}/ix"
     graft.text.Bm25.indexBuild(docs.filter(col("doc_id") >= split),
       "doc_id", "text", ix)
     val q = docs.filter(col("doc_id") < split)
@@ -154,7 +155,7 @@ class HybridSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir)
     val split = graft.text.HybridQueries.Split
-    val ix = "/tmp/graft_mlt_cap_spec/ix"
+    val ix = s"${Scratch.dir("mlt_cap_spec")}/ix"
     graft.text.Bm25.indexBuild(docs.filter(col("doc_id") >= split),
       "doc_id", "text", ix)
     val q = docs.filter(col("doc_id") < split)
@@ -183,7 +184,7 @@ class HybridSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val docs = Tables.documents(spark, dir)
     val split = graft.text.HybridQueries.Split
-    val ix = "/tmp/graft_mlt_localize_plan/ix"
+    val ix = s"${Scratch.dir("mlt_localize_plan")}/ix"
     graft.text.Bm25.indexBuild(docs.filter(col("doc_id") >= split),
       "doc_id", "text", ix)
     val loc = graft.text.Bm25.moreLikeThisFromIndex(spark,
@@ -215,13 +216,13 @@ class HybridSpec extends SparkSpec {
     val one = graft.streaming.StreamingJob.streamHybridProbe(
         Tables.documents(spark, dir), Tables.embeddings(spark, dir),
         "doc_id", "text", "embedding", graft.text.HybridQueries.Split,
-        graft.text.HybridQueries.HK, "/tmp/graft_hybrid_c1",
+        graft.text.HybridQueries.HK, Scratch.dir("hybrid_c1"),
         filesPerTrigger = 1)
       .select("qid", "doc", "rrf", "rank")
     val two = graft.streaming.StreamingJob.streamHybridProbe(
         Tables.documents(spark, dir), Tables.embeddings(spark, dir),
         "doc_id", "text", "embedding", graft.text.HybridQueries.Split,
-        graft.text.HybridQueries.HK, "/tmp/graft_hybrid_c2")
+        graft.text.HybridQueries.HK, Scratch.dir("hybrid_c2"))
       .select("qid", "doc", "rrf", "rank")
     assert(one.exceptAll(two).isEmpty && two.exceptAll(one).isEmpty,
       "drained fusion must not depend on micro-batch chunking")
@@ -232,7 +233,7 @@ class HybridSpec extends SparkSpec {
     val split = graft.text.HybridQueries.Split
     val streamed = graft.streaming.StreamingJob.streamBoilerStrip(
       docs, "doc_id", "text", n = 3, minDf = 3, split,
-      "/tmp/graft_s25_spec")
+      Scratch.dir("s25_spec"))
     val batch = Boilerplate.stripWithBoiler(
       docs.filter(col("doc_id") < split), "doc_id", "text", 3,
       graft.dedup.Dedup.commonNgrams(
@@ -253,7 +254,7 @@ class HybridSpec extends SparkSpec {
     intercept[Exception] {
       graft.streaming.StreamingJob.streamBoilerStrip(
         docs, "doc_id", "text", n = 3, minDf = 3, split,
-        "/tmp/graft_s25_fail_spec")
+        Scratch.dir("s25_fail_spec"))
     }
     assert(spark.sparkContext.getPersistentRDDs.size == before,
       "a failed stream must not leave its static leg cached")
@@ -261,7 +262,7 @@ class HybridSpec extends SparkSpec {
 
   test("gram index grown by append mines the one-shot boiler set") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-    val ix = s"/tmp/graft_gramix_spec-${ProcessHandle.current().pid()}"
+    val ix = Scratch.dir("gramix_spec")
     Boilerplate.gramIndexBuild(docs.filter(col("doc_id") >= 250),
       "doc_id", "text", 5, ix)
     Boilerplate.gramIndexAppend(docs.filter(col("doc_id") < 250),
@@ -276,7 +277,7 @@ class HybridSpec extends SparkSpec {
 
   test("gram index built from an empty slice reads as an empty boiler set") {
     import spark.implicits._
-    val ix = s"/tmp/graft_gramix_empty-${ProcessHandle.current().pid()}"
+    val ix = Scratch.dir("gramix_empty")
     val empty = Seq.empty[(Long, String)].toDF("doc_id", "text")
     Boilerplate.gramIndexBuild(empty, "doc_id", "text", 5, ix)
     assert(Boilerplate.boilerFromIndex(spark, ix, 2).isEmpty)

@@ -13,7 +13,7 @@ class IoMultimodalSpec extends SparkSpec {
     // a long-lived sink accretes columns over its lifetime; files
     // written before a column existed must read as NULL for it, and
     // the footer-level merge must not rewrite or reorder old data
-    val dir = Files.createTempDirectory("graft_evolve").resolve("t").toString
+    val dir = s"${Scratch.dir("evolve")}/t"
     (1L to 100L).map(i => (i, s"v1_$i")).toDF("id", "a")
       .write.parquet(dir) // epoch 1: (id, a)
     (101L to 200L).map(i => (i, s"v2_$i", i * 10))
@@ -40,7 +40,7 @@ class IoMultimodalSpec extends SparkSpec {
     // FAILS the job (correctness first — a silent skip is data loss),
     // ignoreCorruptFiles=true is the explicit triage mode that reads
     // past it and keeps every healthy row
-    val dir = Files.createTempDirectory("graft_corrupt").resolve("t")
+    val dir = java.nio.file.Paths.get(Scratch.dir("corrupt"), "t")
     (1L to 100L).toDF("id").coalesce(1).write.parquet(dir.toString)
     Files.write(dir.resolve("part-zzz.parquet"),
       "not a parquet file".getBytes)
@@ -56,7 +56,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("CSV sink/source round-trip preserves rows (S3/O7)") {
-    val tmp = Files.createTempDirectory("graft_csv").toString
+    val tmp = Scratch.dir("csv")
     val df = Seq((1L, "a", 1.5), (2L, "b", -2.0)).toDF("id", "s", "v")
     CsvSink(s"$tmp/out").write(df)
     val back = CsvSource(s"$tmp/out").load(spark)
@@ -71,7 +71,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("JSON and ORC sink/source round-trips preserve rows and types") {
-    val tmp = Files.createTempDirectory("graft_fmt").toString
+    val tmp = Scratch.dir("fmt")
     val df = Seq((1L, "a", 1.5), (2L, "b", -2.0)).toDF("id", "s", "v")
     graft.io.JsonSink(s"$tmp/j").write(df)
     val j = graft.io.JsonSource(s"$tmp/j").load(spark)
@@ -86,7 +86,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("file-stream source reads a drop folder with declared schema (S4)") {
-    val tmp = Files.createTempDirectory("graft_drop").toString
+    val tmp = Scratch.dir("drop")
     Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
       .write.option("header", "true").csv(s"$tmp/in")
     val schema = StructType(Seq(StructField("id", LongType),
@@ -104,7 +104,7 @@ class IoMultimodalSpec extends SparkSpec {
   }
 
   test("idempotent batch sink: redelivered batch replaces, not appends") {
-    val tmp = Files.createTempDirectory("graft_idem").toString
+    val tmp = Scratch.dir("idem")
     val sink = IdempotentBatchSink(s"$tmp/t")
     val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     sink.write(b0, batchId = 0)

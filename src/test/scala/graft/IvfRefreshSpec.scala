@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.similarity.Ann
+import graft.io.Scratch
 
 /** IVF index refresh: warm-started Lloyd over the index's own vectors,
   * atomic staged swap, self-consistency of the rewritten tables.
@@ -10,7 +11,7 @@ class IvfRefreshSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshIndex(): String = {
-    val ix = s"/tmp/graft_ivf_refresh_spec_${System.nanoTime()}"
+    val ix = Scratch.dir("ivf_refresh_spec")
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
     Ann.ivfIndexBuild(emb, "vec_id", "embedding", nCells = 8, ix)
     ix

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.functions._
-import graft.io.{JdbcSink, JdbcSource}
+import graft.io.{JdbcSink, JdbcSource, Scratch}
 
 /** S2/O2–O3 executed hermetically: the JDBC scan + append paths
   * (io/Sources.scala) driven through embedded Derby — the JDBC engine
@@ -17,7 +17,8 @@ import graft.io.{JdbcSink, JdbcSource}
 class JdbcSpec extends SparkSpec {
   import spark.implicits._
 
-  private val home = Files.createTempDirectory("graft_derby").toString
+  private val home = Files.createDirectories(
+    java.nio.file.Paths.get(Scratch.dir("derby"))).toString
   // derby.log and the db directory both land under the temp home,
   // never the process cwd
   System.setProperty("derby.system.home", home)

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.etl.TestdataAdapter
 import graft.jobs.Jobs
 import graft.streaming.StreamingJob
+import graft.io.Scratch
 
 /** End-to-end integration: the full streaming job (file stream →
   * enrich → score → foreachBatch fan-out) over sf0.001 produces the
@@ -34,7 +34,7 @@ class JobsSpec extends SparkSpec {
   test("streaming job fan-out equals batch twin on sf0.001") {
     StreamingJob.KeyedStore.clear()
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_job").toString
+    val tmp = Scratch.dir("job")
 
     val q = Jobs.startStreamingScoring(
       TestdataAdapter.transactionsStream(spark, dir),

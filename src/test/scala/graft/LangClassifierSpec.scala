@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.text.LangClassifier
+import graft.io.Scratch
 
 /** Naive-Bayes language ID: separation on disjoint vocabularies,
   * deterministic tie-breaking, evidence-free totality, empty-fit
@@ -65,7 +66,7 @@ class LangClassifierSpec extends SparkSpec {
     val streamed = graft.streaming.StreamingJob
       .streamLangidClassify(train, arriving, "doc_id", "text", "lang",
         Seq("en", "de"),
-        java.nio.file.Files.createTempDirectory("graft_s29t").toString)
+        Scratch.dir("s29t"))
       .collect().map(_.toSeq).toSet
     val expected = LangClassifier.classify(arriving, "doc_id", "text",
         models)

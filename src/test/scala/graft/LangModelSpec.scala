@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.text.LangModel
+import graft.io.Scratch
 
 /** CCNet-style bigram-LM perplexity filtering: hand-computed backoff
   * arms, totality on degenerate docs, artifact lifecycle (incl. torn
@@ -69,8 +70,7 @@ class LangModelSpec extends SparkSpec {
   }
 
   test("artifact lifecycle: save → validated load → identical scores") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lm").toString
+    val dir = Scratch.dir("lm")
     val bigrams = LangModel.bigramCounts(ref, "text")
     val v = LangModel.vocabSize(ref, "text")
     LangModel.save(bigrams, v, 2L, dir)
@@ -85,8 +85,7 @@ class LangModelSpec extends SparkSpec {
   }
 
   test("torn artifact fails loudly: stale meta under rewritten counts") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_lm_torn").toString
+    val dir = Scratch.dir("lm_torn")
     LangModel.save(LangModel.bigramCounts(ref, "text"),
       LangModel.vocabSize(ref, "text"), 2L, dir)
     // a second writer died after rewriting the counts but before
@@ -115,7 +114,7 @@ class LangModelSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     val streamed = graft.streaming.StreamingJob
       .streamPerplexityGate(ref2, hold, "doc_id", "text", threshold,
-        java.nio.file.Files.createTempDirectory("graft_s26t").toString)
+        Scratch.dir("s26t"))
       .select(col("doc_id"), col("n_bigrams"), col("sum_lq"),
         col("nll"), col("admit"))
       .collect().map(_.toSeq).toSet

@@ -1,10 +1,9 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Layout
+import graft.io.Scratch
 
 /** Z-order layout semantics and the file-skipping payoff: the same
   * rows written z-clustered vs singly-sorted, probed with range
@@ -32,7 +31,7 @@ class LayoutSpec extends SparkSpec {
   test("range-partitioned layout: total order across files, ~1-file probes") {
     val ev = Tables.events(spark, "/root/testdata/sf0.01")
       .select(col("event_id"), col("user_id"), col("ts"))
-    val base = Files.createTempDirectory("graft_range").toString
+    val base = Scratch.dir("range")
     ev.repartitionByRange(8, col("ts")).sortWithinPartitions(col("ts"))
       .write.parquet(s"$base/range")
     // unclustered control: same rows, ts scattered across every file
@@ -63,7 +62,7 @@ class LayoutSpec extends SparkSpec {
     val ev = Tables.events(spark, "/root/testdata/sf0.01")
       .select(col("event_id"), col("user_id"), hour(col("ts")).as("hr"),
         col("value"))
-    val base = Files.createTempDirectory("graft_layout").toString
+    val base = Scratch.dir("layout")
     def write(df: DataFrame, name: String): String = {
       val p = s"$base/$name"
       df.repartition(1).write.option("maxRecordsPerFile", 500).parquet(p)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.text.{Bm25, Packing, Text}
 import graft.dedup.LineDedup
+import graft.io.Scratch
 
 /** Sequence packing / token-budget mixing / line dedup / BM25 — each
   * differentially against the naive single-partition formulation the
@@ -171,7 +172,7 @@ class PackingSpec extends SparkSpec {
 
   test("BM25 persisted index: append-grown probe equals from-scratch, bucket-pruned scan") {
     val d = Tables.documents(spark, "/root/testdata/sf0.001")
-    val ix = s"/tmp/graft_bm25_spec_${System.nanoTime()}"
+    val ix = Scratch.dir("bm25_spec")
     Bm25.indexBuild(d.filter(col("doc_id") < 250), "doc_id", "text", ix)
     Bm25.indexAppend(d.filter(col("doc_id") >= 250), "doc_id", "text", ix)
     val q = Bm25.indexQueryTerms(spark, ix, 5)
@@ -189,7 +190,7 @@ class PackingSpec extends SparkSpec {
   test("BM25 index: empty corpus builds zero stats, empty delta folds a no-op") {
     val d = docs((1L, "s", "spark engine"))
     val empty = d.filter(col("doc_id") < 0)
-    val ix = s"/tmp/graft_bm25_empty_${System.nanoTime()}"
+    val ix = Scratch.dir("bm25_empty")
     // an empty build must write (0, 0) stats — not NPE on a null sum
     Bm25.indexBuild(empty, "doc_id", "text", ix)
     val st0 = spark.read.parquet(s"$ix/stats").as[(Long, Long)].head()
@@ -212,7 +213,7 @@ class PackingSpec extends SparkSpec {
       (10L, "s", "spark catalyst engine"),             // shares 2 terms
       (11L, "s", "spark runtime"),                     // shares 1
       (12L, "s", "wholly unrelated words"))            // shares 0
-    val ix = s"/tmp/graft_mlt_spec_${System.nanoTime()}"
+    val ix = Scratch.dir("mlt_spec")
     Bm25.indexBuild(d.filter(col("doc_id") >= 10), "doc_id", "text", ix)
     val out = Bm25.moreLikeThisFromIndex(spark, d.filter(col("doc_id") === 1),
         "doc_id", "text", ix, k = 3)
@@ -229,8 +230,8 @@ class PackingSpec extends SparkSpec {
       d.filter(col("doc_id") >= 300),
       d.filter(col("doc_id") >= 100 && col("doc_id") < 300),
       d.filter(col("doc_id") < 100),
-      "doc_id", "text", k = 3, s"/tmp/graft_mlt_stream_${System.nanoTime()}")
-    val ix = s"/tmp/graft_mlt_batch_${System.nanoTime()}"
+      "doc_id", "text", k = 3, Scratch.dir("mlt_stream"))
+    val ix = Scratch.dir("mlt_batch")
     Bm25.indexBuild(d.filter(col("doc_id") >= 100), "doc_id", "text", ix)
     val batch = Bm25.moreLikeThisFromIndex(spark,
       d.filter(col("doc_id") < 100), "doc_id", "text", ix, k = 3)

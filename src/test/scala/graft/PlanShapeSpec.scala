@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.SparkPlan
 import graft.etl.{ScoringPipeline, TestdataAdapter}
+import graft.io.Scratch
 
 /** Regression guards for the physical-plan claims the scale story
   * rests on: the scoring pipeline must stay map-only (zero shuffles,
@@ -48,7 +49,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("partitioned layout prunes partitions at the scan") {
     import org.apache.spark.sql.functions._
-    val dir = s"/tmp/graft_part_spec_${System.nanoTime()}"
+    val dir = Scratch.dir("part_spec")
     Tables.events(spark, "/root/testdata/sf0.001")
       .withColumn("etype", col("event_type"))
       .write.partitionBy("etype").mode("overwrite").parquet(dir)
@@ -74,7 +75,7 @@ class PlanShapeSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.similarity.Ann
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val ix = s"/tmp/graft_planspec_ivf_${System.nanoTime()}"
+    val ix = Scratch.dir("planspec_ivf")
     Ann.ivfIndexBuild(emb.filter(col("vec_id") >= 8), "vec_id",
       "embedding", nCells = 8, ix)
     val probe = Ann.ivfTopKFromIndex(emb.filter(col("vec_id") < 2),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.text.PplBuckets
+import graft.io.Scratch
 
 /** CCNet perplexity bucketing: hand-computed cutoffs on synthetic
   * scored frames (isolating the new logic from the LM, which
@@ -84,7 +85,7 @@ class PplBucketsSpec extends SparkSpec {
     val arr = docs.filter(col("doc_id") % 4 === 0)
     val streamed = graft.streaming.StreamingJob
       .streamPplBuckets(ref, arr, arr, "doc_id", "text", threshold = 99.0,
-        java.nio.file.Files.createTempDirectory("graft_s28t").toString)
+        Scratch.dir("s28t"))
       .collect().map(_.toSeq).toSet
     val bigrams = graft.text.LangModel.bigramCounts(ref, "text")
     val v = graft.text.LangModel.vocabSize(ref, "text")

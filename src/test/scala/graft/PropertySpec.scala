@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.functions.{Binning, Scoring, TextHashing}
+import graft.io.Scratch
 
 /** Property-based tests (SURVEY.md §5) using raw ScalaCheck
   * generators: each property draws N deterministic samples (fixed
@@ -208,7 +209,7 @@ class PropertySpec extends SparkSpec {
     val df = docs.toDF("doc_id", "text")
     // split so mutations (ids 30..44) probe against their indexed
     // sources (ids 0..29), half arriving via the delta append
-    val ix = java.nio.file.Files.createTempDirectory("graft_bi_prop").toString
+    val ix = Scratch.dir("bi_prop")
     graft.dedup.Dedup.bandIndexBuild(
       df.filter(col("doc_id") < 15), "doc_id", "text", 3, ix)
     graft.dedup.Dedup.bandIndexAppend(
@@ -427,8 +428,7 @@ class PropertySpec extends SparkSpec {
         .as[(Long, Long, Double, Long)].collect().toSet
       assert(incr == scratch, s"canonicalAppend seed=$seed")
       // table merge, two deltas (old corpus bootstrap + the growth)
-      val dir = s"/tmp/graft_prop_cur-${ProcessHandle.current().pid()}-$seed"
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+      val dir = Scratch.dir("prop_cur")
       graft.dedup.Dedup.curationMerge(dir, oldEdges.toDF("a", "b"),
         oldDocs.toDF("doc", "q"), "doc", "q", "a", "b", nBuckets = 4)
       graft.dedup.Dedup.curationMerge(dir, newEdges.toDF("a", "b"),

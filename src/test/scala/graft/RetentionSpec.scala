@@ -1,10 +1,9 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import graft.io.Retention
+import graft.io.{Retention, Scratch}
 
 /** Retention semantics: expired partitions removed whole, surviving
   * partitions untouched (same files, not rewritten); the row-level
@@ -15,7 +14,7 @@ class RetentionSpec extends SparkSpec {
   import spark.implicits._
 
   private def freshDir() =
-    Files.createTempDirectory("graft_retention").resolve("t").toString
+    s"${Scratch.dir("retention")}/t"
 
   test("expirePartitions drops old partitions, never opens survivors") {
     val dir = freshDir()

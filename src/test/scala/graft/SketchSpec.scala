@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
+import graft.io.Scratch
 
 /** Sketch contracts behind SketchQueries' oracle booleans: exact-mode
   * boundaries, mergeability, and the frequent-items / count-min error
@@ -70,7 +71,7 @@ class SketchSpec extends SparkSpec {
   test("sketches survive parquet storage: stored partials merge losslessly") {
     // the stored-aggregate pattern: per-day sketches persisted once,
     // any later rollup merges summaries without rescanning facts
-    val dir = java.nio.file.Files.createTempDirectory("graft_sk").toString
+    val dir = Scratch.dir("sk")
     val df = (1L to 30000L).toDF("v")
       .withColumn("day", pmod(col("v"), lit(5)))
     df.groupBy("day")

@@ -3,20 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for all suites (sbt forks one test JVM). */
+/** Shared local session for all suites (sbt forks one test JVM): the
+  * production session config of [[graft.jobs.Jobs.localBuilder]], with
+  * its warehouse under the scratch owner like every other spec path.
+  */
 object TestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // exercise the Catalyst extension point for the native functions
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
+    val s = graft.jobs.Jobs.localBuilder("graft-tests", "4").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

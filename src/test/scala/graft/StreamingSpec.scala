@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.sql.Timestamp
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -9,6 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.etl.ScoringPipeline
 import graft.streaming.StreamingJob
 import graft.streaming.StreamingJob.TxKeyed
+import graft.io.Scratch
 
 /** Structured-Streaming semantics: micro-batch scoring parity with
   * batch, foreachBatch fan-out (O1–O5), stateful late-drop (T7), and
@@ -47,7 +47,7 @@ class StreamingSpec extends SparkSpec {
   test("foreachBatch fan-out writes facts, scores, keyed store, recency") {
     StreamingJob.KeyedStore.clear()
     implicit val ctx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_fanout").toString
+    val tmp = Scratch.dir("fanout")
     val ms = MemoryStream[(String, Timestamp, Double, Double, Double)]
     ms.addData(("x1", ts("2024-01-01 10:00:00"), 1.0, 0.0, 0.5),
       ("x2", ts("2024-01-01 11:00:00"), 2.0, 1.0, 0.5))
@@ -329,14 +329,14 @@ class StreamingSpec extends SparkSpec {
   test("sustained scoring rate: multi-batch run reports steady-state rows/s") {
     val (rate, batches) = StreamingJob.sustainedScoringRate(
       spark, "/root/testdata/sf0.001",
-      s"/tmp/graft_stream_spec_${System.nanoTime()}", nFiles = 3)
+      Scratch.dir("stream_spec"), nFiles = 3)
     assert(batches == 2, s"expected 2 steady batches, got $batches")
     assert(rate > 0, s"rate $rate")
   }
 
   test("checkpoint restart resumes exactly-once: no loss, no duplicates") {
     import org.apache.spark.sql.functions._
-    val work = s"/tmp/graft_restart_${System.nanoTime()}"
+    val work = Scratch.dir("restart")
     val (in, sink, ckpt) = (s"$work/in", s"$work/sink", s"$work/ckpt")
     val ev = Tables.events(spark, "/root/testdata/sf0.001")
       .select("event_id", "user_id", "value")
@@ -423,7 +423,7 @@ class StreamingSpec extends SparkSpec {
     // metrics) over the same lineage as the durable sink; both must
     // make progress and stop cleanly.
     implicit val ctx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_t6").toString
+    val tmp = Scratch.dir("t6")
     val ms = MemoryStream[(String, Timestamp, Double, Double, Double)]
     val df = ms.toDF().toDF("id_transacao", "data_horario", "t5_score",
       "t6_score", "t7_score")
@@ -450,7 +450,7 @@ class StreamingSpec extends SparkSpec {
     import graft.functions.Drift
     val dir = "/root/testdata/sf0.001"
     val got = StreamingJob.streamDriftMonitor(spark, dir,
-        "/tmp/graft_spec_s19")
+        Scratch.dir("spec_s19"))
       .collect().map(_.toSeq).toSet
     val ev = Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
@@ -470,8 +470,7 @@ class StreamingSpec extends SparkSpec {
     // subset of final state with component-wise ≤ totals.
     import spark.implicits._
     import graft.streaming.StreamingJob.TxKeyed
-    val dir = s"/tmp/graft_state_tt-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = Scratch.dir("state_tt")
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def tx(id: String, user: String, v: Double, ok: Boolean) =
       TxKeyed(id, user, t0, v, ok)
@@ -529,8 +528,7 @@ class StreamingSpec extends SparkSpec {
     // final state it surfaces from the default HDFS-backed provider.
     import spark.implicits._
     import graft.streaming.StreamingJob.TxKeyed
-    val dir = s"/tmp/graft_state_rocks-${ProcessHandle.current().pid()}"
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    val dir = Scratch.dir("state_rocks")
     val t0 = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def tx(id: String, user: String, v: Double, ok: Boolean) =
       TxKeyed(id, user, t0, v, ok)
@@ -580,7 +578,7 @@ class StreamingSpec extends SparkSpec {
     val e = intercept[Exception] {
       graft.streaming.StreamingJob.streamKeeperMaintenance(
         bad, "doc_id", "text", n = 3, threshold = 0.8,
-        "/tmp/graft_badid_spec")
+        Scratch.dir("badid_spec"))
     }
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
@@ -602,9 +600,9 @@ class StreamingSpec extends SparkSpec {
     val probe = docs.filter(col("doc_id") < 20)
     val streamed = StreamingJob.streamBandIndexIngest(corpus, probe,
         "doc_id", "text", 3, 0.5,
-        s"/tmp/graft_s16_spec_${System.nanoTime()}", nFiles = 3)
+        Scratch.dir("s16_spec"), nFiles = 3)
       .select("in_doc", "corpus_doc").as[(Long, Long)].collect().toSet
-    val ixOne = java.nio.file.Files.createTempDirectory("graft_bi_one").toString
+    val ixOne = Scratch.dir("bi_one")
     Dedup.bandIndexBuild(corpus, "doc_id", "text", 3, ixOne)
     val oneShot = Dedup.bandIndexProbe(probe, "doc_id", "text", 3, ixOne, 0.5)
       .select("in_doc", "corpus_doc").as[(Long, Long)].collect().toSet
@@ -613,7 +611,7 @@ class StreamingSpec extends SparkSpec {
     // at-least-once redelivery: re-ingesting the same batch id must
     // REPLACE the previous write — probe output (incl. duplicates)
     // identical before and after
-    val ixRe = java.nio.file.Files.createTempDirectory("graft_bi_re").toString
+    val ixRe = Scratch.dir("bi_re")
     Dedup.bandIndexIngestBatch(corpus, "doc_id", "text", 3, ixRe, batchId = 0L)
     val before = Dedup.bandIndexProbe(probe, "doc_id", "text", 3, ixRe, 0.5)
       .collect().toSeq
@@ -625,7 +623,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("mergeIntoMv: exact incremental merge, untouched partition files intact") {
-    val mv = s"${Files.createTempDirectory("graft_mv")}/mv"
+    val mv = s"${Scratch.dir("mv")}/mv"
     def fileNames(t: String): Set[String] =
       new java.io.File(s"$mv/event_type=$t").listFiles()
         .filter(_.getName.endsWith(".parquet")).map(_.getName).toSet

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.plans.TopKPlan
+import graft.io.Scratch
 
 /** The Catalyst plan-node formulation of per-key top-k must equal both
   * the window row_number formulation and the mapPartitions operator,
@@ -183,7 +184,7 @@ class TopKPlanSpec extends SparkSpec {
     val tbl = s"topk_bucketed_${System.nanoTime()}"
     try {
       events.write.bucketBy(4, "user_id").sortBy("user_id")
-        .option("path", s"/tmp/graft_$tbl").saveAsTable(tbl)
+        .option("path", Scratch.dir(tbl)).saveAsTable(tbl)
       val plan = TopKPlan.topKPerKey(spark.table(tbl), Seq("user_id"),
         Seq("value" -> false, "event_id" -> true), k = 2)
         .queryExecution.executedPlan.toString
