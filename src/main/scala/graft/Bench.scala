@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 /** Per-round benchmark orchestrator. Prints ONE compact JSON line (the
   * driver captures only a bounded tail of stdout): total seconds
   * across ALL registered queries + the DYNAMIC worst-[[HeadlineN]]
-  * per-query times. The full per-query map goes to
+  * per-query times. The full per-query map and [[Census]] go to
   * target/bench_detail.json AND to an append-only per-sweep archive
   * under bench_history/ (r10 — the target/ copy is destroyed by the
   * next sweep, so cross-round full-map diffs read the archive).
@@ -74,14 +74,19 @@ object Bench {
     // 249-260 s discrepancy needed a manual retime session)
     val telemetry =
       scala.collection.mutable.Map.empty[String, Map[String, Double]]
+    // census entries (query → JSON) per child tag; see `keep`
+    val censusByTag =
+      scala.collection.mutable.Map.empty[String, Map[String, String]]
 
     /** Fork one [[BenchChunk]]; returns its name→seconds map (empty on
-      * child death — caller decides the fallback). Telemetry keys are
-      * split off into [[telemetry]] under the child's tag.
+      * child death — caller decides the fallback). Telemetry keys and
+      * census entries go to [[telemetry]] and [[censusByTag]] by tag.
       */
     def runChild(spec: String, tag: String): Map[String, Double] = {
       val outFile = logsDir.resolve(s"$tag.tsv")
+      val censusFile = java.nio.file.Paths.get(BenchChunk.censusFile(outFile.toString))
       java.nio.file.Files.deleteIfExists(outFile)
+      java.nio.file.Files.deleteIfExists(censusFile)
       val cmd = (Seq(javaBin) ++ jvmArgs ++
         Seq("-cp", cp, "graft.BenchChunk", sfDir, cpus,
           outFile.toString, spec)).asJava
@@ -98,6 +103,9 @@ object Bench {
       val tele = all.collect { case (k, v) if k.startsWith("#") =>
         k.stripPrefix("#") -> v }
       if (tele.nonEmpty) telemetry(tag) = tele
+      if (java.nio.file.Files.exists(censusFile))
+        censusByTag(tag) = java.nio.file.Files.readAllLines(censusFile).asScala
+          .map { l => val a = l.split("\t", 2); a(0) -> a(1) }.toMap
       all.filterNot(_._1.startsWith("#"))
     }
 
@@ -115,17 +123,24 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq.sorted
     val chunks = names.grouped(ChunkSize).toSeq
     val sweep = scala.collection.mutable.Map.empty[String, Double]
+    val census = scala.collection.mutable.Map.empty[String, String]
+    /** Keep `t` for `n`, with the census of the child that timed it. */
+    def keep(n: String, t: Double, tag: String): Unit = {
+      sweep(n) = t
+      censusByTag.get(tag).flatMap(_.get(n)).foreach(census(n) = _)
+    }
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     failed ++= rateKeys.filterNot(tput.contains)
     chunks.zipWithIndex.foreach { case (chunk, i) =>
-      val got = runChild(chunk.mkString(","), f"chunk$i%02d")
-      sweep ++= got
+      val tag = f"chunk$i%02d"
+      val got = runChild(chunk.mkString(","), tag)
+      got.foreach { case (n, t) => keep(n, t, tag) }
       // a dead child loses its whole chunk's file — recover each
       // missing query in its own JVM so one crash can't blank 11
       // other queries' numbers
       chunk.filterNot(got.contains).foreach { n =>
         runChild(n, s"recover_$n").get(n) match {
-          case Some(t) => sweep(n) = t
+          case Some(t) => keep(n, t, s"recover_$n")
           case None => failed += n
         }
       }
@@ -134,7 +149,7 @@ object Bench {
     // the standalone definition
     sweep.filter(_._2 > RetimeThresholdSec).keys.toSeq.sorted.foreach { n =>
       runChild(n, s"retime_$n").get(n)
-        .foreach(t => sweep(n) = math.min(sweep(n), t))
+        .foreach(t => if (t < sweep(n)) keep(n, t, s"retime_$n"))
     }
 
     val results = sweep.toMap
@@ -194,8 +209,10 @@ object Bench {
     val detailTele = telemetry.toSeq.sortBy(_._1)
       .map { case (tag, t) => s""""$tag":${jtele(t)}""" }
       .mkString("{", ",", "}")
+    val detailCensus = census.toSeq.sortBy(_._1)
+      .map { case (n, c) => s""""$n":$c""" }.mkString("{", ",", "}")
     val detail =
-      s"""{"total":${r3(total)},"queries":${jmap(results.toSeq.sortBy(_._1))},"telemetry":$detailTele,"contended_chunks":$nContended,"sf":"$sfDir"}"""
+      s"""{"total":${r3(total)},"queries":${jmap(results.toSeq.sortBy(_._1))},"telemetry":$detailTele,"contended_chunks":$nContended,"census":$detailCensus,"sf":"$sfDir"}"""
     val detailPath = java.nio.file.Paths.get("target/bench_detail.json")
     java.nio.file.Files.writeString(detailPath, detail)
     // archive the FULL per-query map + telemetry per sweep (r10):

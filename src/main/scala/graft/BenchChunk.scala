@@ -2,7 +2,8 @@ package graft
 
 /** Child JVM for [[Bench]]: time a small set of registered queries —
   * or measure throughput with `--tput` — in a PRISTINE JVM + session,
-  * and write `name<TAB>seconds` lines to an output file.
+  * and write `name<TAB>seconds` lines to an output file; in query mode,
+  * also each query's [[Census]] as `name<TAB>json` to [[censusFile]].
   *
   * Why a separate process: the r06 judge falsified the fresh-SESSION
   * retime — recycling the SparkSession does not recycle the JVM, and
@@ -15,6 +16,9 @@ package graft
   * Usage: BenchChunk <sfDir> <cpus> <outFile> (<q1,q2,...> | --tput)
   */
 object BenchChunk {
+
+  /** Where the census entries of the chunk writing `outFile` go. */
+  def censusFile(outFile: String): String = s"$outFile.census"
 
   /** 1-minute load average, or NaN where /proc is unavailable. */
   private def load1(): Double =
@@ -47,6 +51,7 @@ object BenchChunk {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val out = new StringBuilder
+    val censusOut = new StringBuilder
     // Host telemetry (r9): every child self-reports the evidence needed
     // to adjudicate an environmentally inflated sweep FROM THE ARTIFACT
     // — the r8 driver sweep published 337 s against 249-260 s builder
@@ -105,20 +110,24 @@ object BenchChunk {
         (System.nanoTime() - t0) / 1e9
       }.min
       out ++= f"#canary_a15\t$canary%.4f\n"
+      // installed after the warm-up and canary: it sees only timed runs
+      val census = new Census(spark)
       for (name <- spec.split(',')) {
         // min of two back-to-back runs — the same definition as the
         // TimeQueries standalone the judge compares against: the
         // first run absorbs per-query one-time costs (file listing of
         // tables the warm-up didn't touch, codegen of this query's
-        // expressions), the second is the steady-state cost. A run
+        // expressions), the second is the steady-state cost. A run is
+        // the wrapper call plus its frame's count(), timed apart so the
+        // census can split eager from final work; its time is their
+        // sum, and the census reads fall outside both clocks. A run
         // that throws publishes no line for the query (never its
-        // time-to-throw): Bench re-runs it alone, then lists it under
-        // `failed`.
+        // time-to-throw) and no census entry: Bench re-runs it alone,
+        // then lists it under `failed`.
         attempt(name) {
           val fn = SparkEntry.queries(name)
-          val t = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          val runs = (1 to 2).map { _ =>
+            try census.run(fn(spark, sfDir))
             finally {
               // cleanup AFTER the clock stops, BEFORE the next run: a
               // run must never execute under a predecessor's
@@ -135,8 +144,9 @@ object BenchChunk {
                 .filter(_.name == null)
                 .foreach(_.unpersist(true))
             }
-          }.min
-          out ++= f"$name\t$t%.4f\n"
+          }
+          out ++= f"$name\t${runs.map(_.seconds).min}%.4f\n"
+          censusOut ++= s"$name\t${Census.json(runs)}\n"
         }
       }
     }
@@ -145,6 +155,8 @@ object BenchChunk {
     out ++= f"#load_after\t${load1()}%.2f\n"
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), out.toString)
+    if (censusOut.nonEmpty) java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(censusFile(outFile)), censusOut.toString)
     spark.stop()
     // a lingering non-daemon thread (streaming executors, JDBC) must
     // not hang the orchestrator's waitFor

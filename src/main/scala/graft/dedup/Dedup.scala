@@ -281,10 +281,6 @@ object Dedup {
       (1L + rnd.nextInt(Int.MaxValue - 1), rnd.nextInt(Int.MaxValue).toLong))
   }
 
-  def minhashSignatures(df: DataFrame, id: String, text: String, n: Int,
-                        numHashes: Int): DataFrame =
-    signatures(df, id, text, n, numHashes)
-
   private def signatures(df: DataFrame, id: String, text: String, n: Int,
                          numHashes: Int): DataFrame = {
     val ex = hashedShingles(df, id, text, n)

@@ -14,9 +14,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * concat_ws(' ', toks[i..i+n]))` + `array_distinct` + `xxhash64` —
   * is semantically identical but pays interpreted higher-order-function
   * overhead per shingle and materializes every shingle string; on a
-  * 5k-doc / 2M-shingle corpus that alone was ~22 s (measured,
-  * graft.tools.Profile). This kernel emits the sorted distinct 64-bit
-  * shingle hashes straight from the document in one JVM pass (~1 s).
+  * 5k-doc / 2M-shingle corpus that alone was ~22 s (measured in r4 by
+  * a stage profiler since replaced by the bench census). This kernel
+  * emits the sorted distinct 64-bit shingle hashes straight from the
+  * document in one JVM pass (~1 s).
   *
   * Jaccard similarity over hashed shingles equals Jaccard over string
   * shingles except for hash collisions (≈|shingles|²/2⁶⁴ — negligible),

@@ -109,6 +109,9 @@ object StreamingJob {
                   extraConfs: Map[String, String] = Map.empty): DataFrame = {
     val spark = stream.sparkSession
     val name = s"graft_mem_${sinkCounter.incrementAndGet()}"
+    // left to Spark, the checkpoint would be a `temporary-<uuid>`
+    // directory in java.io.tmpdir, kept behind whenever the query fails
+    val checkpoint = Scratch.dir(name)
     // Stateful operators open one state store per shuffle partition,
     // each with its own delta-file commit per micro-batch — at local
     // harness scale that fixed cost dominates (a 32-partition
@@ -136,6 +139,7 @@ object StreamingJob {
       try {
         stream.writeStream
           .format("memory").queryName(name).outputMode(mode)
+          .option("checkpointLocation", checkpoint)
           .trigger(Trigger.AvailableNow())
           .start()
       } finally prev.foreach {
@@ -1292,7 +1296,7 @@ object StreamingJob {
         // leg's broadcast(q) build stops re-scanning the source. Two
         // driver actions per trigger (this collect + the fused
         // commit) plus the lex leg's tokenize and pruned-df jobs —
-        // down from ~16 jobs/trigger (JobProfile r9, see SCALE.md).
+        // down from ~16 jobs/trigger (r9 job census, SCALE.md §4.1).
         val local = s.createDataFrame(
           java.util.Arrays.asList(batch.collect(): _*), batch.schema)
         val lex = graft.text.Bm25.moreLikeThisFromIndex(s, local, id,

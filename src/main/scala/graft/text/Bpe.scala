@@ -265,7 +265,7 @@ object Bpe {
     // job descriptions are thread-local state on the CALLER's thread —
     // restore on exit or every later job on this thread (the gate's
     // oracle dumps, the next query) is mislabeled "bpe-pass-N" in the
-    // UI and in JobProfile's attribution
+    // UI and in the bench census's longest-job sites
     val descBefore = session.sparkContext
       .getLocalProperty("spark.job.description")
     try trainPasses(session, units, merges, batch, checkpointEvery)

@@ -1,11 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the `private[sql]` Dataset constructor so the graft
   * library can materialize a DataFrame from a custom [[LogicalPlan]]
   * node (the (c)-tier extension path: logical node + planner strategy +
-  * physical exec). This is the standard technique Spark-extension
+  * physical exec), and into the `private[spark]` listener bus for
+  * [[graft.Census]]. This is the standard technique Spark-extension
   * libraries use — one object in `org.apache.spark.sql`, nothing else
   * reaches into internals.
   */
@@ -32,4 +34,11 @@ object GraftSqlBridge {
     */
   def reRoot(spark: SparkSession, df: DataFrame): DataFrame =
     ofRows(spark, df.queryExecution.logical)
+
+  /** Wait until the listener bus has delivered every event posted so
+    * far; false if `timeoutMs` passed first.
+    */
+  def drainListenerBus(sc: SparkContext, timeoutMs: Long): Boolean =
+    try { sc.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: java.util.concurrent.TimeoutException => false }
 }

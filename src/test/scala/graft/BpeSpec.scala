@@ -129,21 +129,18 @@ class BpeSpec extends SparkSpec {
     val words = docs
       .select(explode(Text.tokens(lower(col("text")))).as("w"))
       .groupBy("w").count().as[(String, Long)].collect().toMap
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobEnd(e: org.apache.spark.scheduler
-      .SparkListenerJobEnd): Unit = jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val (got, _) =
-      try Bpe.trainBatched(docs, "text", merges = 48, batch = 8)
-      finally {
-        // listener delivery is async: give the bus a beat to drain
-        // (an undercount would only make the ≤ assertion vacuous,
-        // never flaky-fail it)
-        Thread.sleep(500)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    // the census drains the listener bus before it reads, so the count
+    // is exact: an undercount would make the ≤ assertion vacuous
+    val census = new Census(spark)
+    val (got, jobs) =
+      try {
+        census.read()
+        val (ms, _) = Bpe.trainBatched(docs, "text", merges = 48, batch = 8)
+        val r = census.read()
+        assert(r.drained)
+        (ms, r("jobs"))
+      } finally census.close()
+    info(s"jobs: $jobs")
     assert(got.length == 48)
     assert(got.map(_.rank) == (1 to 48))
     // job count scales with the 6 PASSES, not the 48 merges — the
@@ -151,8 +148,8 @@ class BpeSpec extends SparkSpec {
     // runs it as ~3 stage-jobs) + one lineage checkpoint, plus the
     // initial vocab checkpoint. A sequential learner runs the same
     // ~4 jobs per MERGE — ≥ 150 here.
-    assert(jobs.get() <= 4 * 6 + 2,
-      s"expected ≤ ${4 * 6 + 2} jobs for 6 batched passes, saw ${jobs.get()}")
+    assert(jobs <= 4 * 6 + 2,
+      s"expected ≤ ${4 * 6 + 2} jobs for 6 batched passes, saw $jobs")
     // batch members never overlap: applying them in measured order is
     // exact, which the plain-collections reference differential pins
     val ref = referenceTrainBatched(words, 48, 8)

@@ -44,6 +44,23 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.exceptAll(batch).isEmpty && batch.exceptAll(streamed).isEmpty)
   }
 
+  test("runToMemory: a failing stream leaves no temporary checkpoint behind") {
+    implicit val ctx = spark.sqlContext
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def temporaries = Option(tmp.list()).toSet.flatten
+      .filter(_.startsWith("temporary-"))
+    val before = temporaries
+    val boom = udf { (x: Int) =>
+      if (x == 2) throw new IllegalStateException("boom")
+      x
+    }
+    val ms = MemoryStream[Int]
+    ms.addData(1, 2, 3)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      StreamingJob.runToMemory(ms.toDF().select(boom(col("value")).as("v"))))
+    assert(temporaries -- before == Set.empty)
+  }
+
   test("foreachBatch fan-out writes facts, scores, keyed store, recency") {
     StreamingJob.KeyedStore.clear()
     implicit val ctx = spark.sqlContext
