@@ -2,9 +2,10 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
-import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.{QueryExecution, SQLExecution}
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The per-query census [[BenchChunk]] writes for every timed run: what
@@ -23,6 +24,8 @@ final class Census(spark: SparkSession) extends SparkListener with QueryExecutio
   // guarded by `this`: listeners run on the bus thread, readings on the caller's
   private var now = Empty
   private val running = scala.collection.mutable.Map.empty[Int, (Long, String)]
+  // SQL execution id → its description (the action's call site), while it runs
+  private val executions = scala.collection.mutable.Map.empty[Long, String]
 
   private def add(kvs: (String, Long)*): Unit = synchronized {
     now = now.copy(counts = kvs.foldLeft(now.counts) { case (m, (k, v)) =>
@@ -30,14 +33,22 @@ final class Census(spark: SparkSession) extends SparkListener with QueryExecutio
   }
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-    // Bpe labels its passes; SQL jobs carry no usable call site in
-    // their properties, so the fallback is the result stage's name
-    // (the job's highest stage id)
-    val site = Option(e.properties)
-      .flatMap(p => Option(p.getProperty("spark.job.description")))
+    // Bpe labels its passes; a SQL job (AQE's query-stage jobs too)
+    // is labelled by the action that started its execution; the
+    // fallback is the result stage's name (the job's highest stage id)
+    val props = Option(e.properties)
+    val site = props.flatMap(p => Option(p.getProperty("spark.job.description")))
+      .orElse(props.flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+        .flatMap(id => executions.get(id.toLong)))
       .orElse(e.stageInfos.maxByOption(_.stageId).map(_.name)).getOrElse("?")
     running(e.jobId) = (e.time, site.take(120))
   }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = synchronized(e match {
+    case s: SparkListenerSQLExecutionStart => executions(s.executionId) = s.description
+    case s: SparkListenerSQLExecutionEnd => executions.remove(s.executionId)
+    case _ => ()
+  })
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
     running.remove(e.jobId).foreach { case (t0, site) =>

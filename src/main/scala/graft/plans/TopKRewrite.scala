@@ -35,8 +35,8 @@ object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
   /** Session kill-switch for the transparent rewrite (default on).
     * A rule that silently replaces the built-in plan for a ubiquitous
     * pattern needs an opt-out a user can flip without rebuilding —
-    * e.g. to A/B the two plans on their own data (tools/ScaleCheck
-    * does exactly that measurement).
+    * e.g. to A/B the two plans on their own data (SCALE.md §4.1
+    * records that measurement).
     */
   val EnabledKey = "spark.graft.topk.rewrite.enabled"
 

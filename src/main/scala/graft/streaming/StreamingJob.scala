@@ -1236,7 +1236,7 @@ object StreamingJob {
     * plus a cell-partition-PRUNED read of its nProbe probed cells —
     * O(batch × nProbe × corpus/nCells), which stays constant as the
     * corpus grows when nCells grows with it (the standard IVF scale
-    * contract; see the s24b ScaleCheck row). Brute force remains the
+    * contract; see the s24b row of SCALE.md §4.2). Brute force remains the
     * default: it is the exact baseline the recall of any ANN leg is
     * judged against.
     */

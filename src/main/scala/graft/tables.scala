@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.collection.concurrent.TrieMap
 
 /** Loaders for the driver-generated star schema (TESTDATA.md).
   *
@@ -15,8 +18,28 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaOf(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** Each table file's inferred schema, per session, keyed by path and
+    * modification time: inference is a one-task job, so it runs once per
+    * file and session, and again only when the file is rewritten. The
+    * session is held WEAKLY so a recycled or stopped session isn't
+    * pinned on the heap by its entries. A missing file has no schema
+    * (None), so its read raises as an uncached read would.
+    */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, TrieMap[(String, Long), StructType]]())
+  private def schemaOf(s: SparkSession, path: String): Option[StructType] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = try Some(p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime)
+    catch { case _: java.io.FileNotFoundException => None }
+    mtime.map(t => schemas.computeIfAbsent(s, _ => TrieMap.empty)
+      .getOrElseUpdate((path, t), s.read.parquet(path).schema))
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = load(s, d, "nation")
@@ -68,40 +91,21 @@ object Tables {
     * reader is applied, so stream and batch lineages produce identical
     * rows under either testdata encoding.
     *
-    * The footer sniff is cached per (session, dir) — call sites that
-    * build the stream twice pay the read once — and an unreadable drop
-    * location (e.g. still empty) falls back to the current-generation
-    * µs encoding WITHOUT caching, so the stream can be constructed
+    * The footer sniff reads [[load]]'s schema cache. An absent or
+    * unreadable drop file (e.g. the location is still empty) falls back
+    * to the current-generation µs encoding, so the stream can be built
     * over a dir files will only later land in (the documented S4
-    * contract) and a later call re-sniffs once files exist. The type
-    * is fixed from the first SUCCESSFUL sniff: a drop dir that mixes
-    * testdata generations (NANOS and MICROS files) would read later
-    * files under the wrong declared type — acceptable for the
-    * single-generation harness. The cache holds the session WEAKLY so
-    * a recycled/stopped session isn't pinned on the heap by its cache
-    * entries (Bench restarts the session every 20 queries precisely to
-    * bound heap).
+    * contract); the declared schema stays because an empty location
+    * cannot be inferred. A drop dir that mixes testdata generations
+    * would read some files under the wrong declared type — acceptable
+    * for the single-generation harness.
     */
-  private val eventsTsIsLong = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, Boolean]]())
   def eventsStream(s: SparkSession, d: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val perSession = eventsTsIsLong.synchronized {
-      val cur = eventsTsIsLong.get(s)
-      if (cur != null) cur else {
-        val m = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-        eventsTsIsLong.put(s, m)
-        m
-      }
-    }
-    val tsIsLong = perSession.get(d).getOrElse(
-      try {
-        val sniffed = load(s, d, "events").schema("ts").dataType ==
-          org.apache.spark.sql.types.LongType
-        perSession.putIfAbsent(d, sniffed)
-        sniffed
-      } catch { case _: org.apache.spark.sql.AnalysisException => false })
+    val tsIsLong =
+      try schemaOf(s, s"$d/events.parquet").exists(_("ts").dataType ==
+        org.apache.spark.sql.types.LongType)
+      catch { case _: org.apache.spark.sql.AnalysisException => false }
     val tsType: org.apache.spark.sql.types.DataType =
       if (tsIsLong) org.apache.spark.sql.types.LongType
       else org.apache.spark.sql.types.TimestampNTZType

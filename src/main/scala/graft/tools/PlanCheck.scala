@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev tool: print formatted physical plans for selected queries so

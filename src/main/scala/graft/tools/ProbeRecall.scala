@@ -12,8 +12,8 @@ import graft.similarity.Ann
 object ProbeRecall {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = graft.jobs.Jobs.localBuilder("graft-probe-recall", "8")
-      .getOrCreate()
+    val spark = graft.jobs.Jobs.localBuilder("graft-probe-recall",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val K = 5
     val emb = Tables.embeddings(spark, dir)

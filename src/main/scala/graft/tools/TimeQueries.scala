@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: time a comma-separated list of driver-contract queries in
   * one warm session, mirroring Bench's setup.
   * Usage: runMain graft.tools.TimeQueries <sfDir> <q1,q2,...> [reps]
@@ -12,10 +10,11 @@ object TimeQueries {
     val names = args.lift(1).map(_.split(",").toSeq)
       .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    // same deploy posture as Bench (extensions, Kryo, UTC) so a
-    // standalone re-time isolates sweep-order effects, not config
-    val spark = graft.jobs.Jobs.localBuilder("graft-time", "32")
-      .getOrCreate()
+    // same deploy posture and cores as Bench (extensions, Kryo, UTC,
+    // SPARK_GRAFT_CPUS) so a standalone re-time isolates sweep-order
+    // effects, not config
+    val spark = graft.jobs.Jobs.localBuilder("graft-time",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // warm-up, as Bench does
     graft.SparkEntry.queries("pipeline_score")(spark, dir).count()

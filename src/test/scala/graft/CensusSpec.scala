@@ -67,6 +67,15 @@ class CensusSpec extends SparkSpec {
     }
   }
 
+  test("SQL jobs, AQE's query-stage jobs too, are labelled by the action that ran them") {
+    withCensus { census =>
+      val r = census.run(eagerQuery())
+      val sites = r.longest.map(_.site)
+      assert(sites.nonEmpty && sites.forall(!_.contains("CompletableFuture")), sites)
+      assert(sites.exists(s => s.contains("localCheckpoint") || s.contains("count")), sites)
+    }
+  }
+
   test("GC ms never exceed the run's wall time") {
     withCensus { census =>
       // a forced collection inside the eager window makes the bound bite
