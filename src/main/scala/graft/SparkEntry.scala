@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.analytics.Dashboard
 import graft.etl.{ScoringPipeline, TestdataAdapter}
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -33,10 +35,11 @@ object SparkEntry {
       col("modalidade_pagamento"),
       date_trunc("second", col("data_horario")).as("data_horario"),
       col("valor_transacao"),
-      round(col("t5_score"), 6).as("t5_score"),
+      roundHalfAway(col("t5_score"), 6).as("t5_score"),
       col("t6_score"),
-      round(col("t7_score"), 6).as("t7_score"),
-      round(col("score_medio"), 6).as("score_medio"),
+      roundHalfAway(col("t7_score"), 6).as("t7_score"),
+      // + 0.0 as in the oracle's scored base: a -0.0 product reads +0.0
+      roundHalfAway(col("score_medio") + 0.0, 6).as("score_medio"),
       col("score_aprovado"), col("saldo_aprovado"), col("limite_aprovado"),
       col("transacao_aprovada"))
   }
@@ -81,21 +84,19 @@ object SparkEntry {
         .when(col("modalidade_pagamento") === "error", !(v > col("limite_Boleto")))
         .otherwise(!(v > col("limite_DOC")))
       enriched.select(col("id_transacao"),
-        round(sm, 6).as("score_medio_dev"),
+        roundHalfAway(sm, 6).as("score_medio_dev"),
         Scoring.scoreGate(sm).as("score_aprovado"),
         Scoring.balanceGate(col("saldo"), v).as("saldo_aprovado"),
         devLimit.as("limite_aprovado_dev"))
     }),
 
     // ---- A1: count by boolean flag ----
-    "a1_count_by_flag" -> ((s, dir) => {
-      val out = ScoringPipeline.runDeterministic(
+    "a1_count_by_flag" -> ((s, dir) =>
+      Dashboard.approvalCounts(ScoringPipeline.runDeterministic(
         TestdataAdapter.transactions(s, dir),
         TestdataAdapter.users(s, dir),
         TestdataAdapter.regions(s, dir),
-        eventLimitArms)
-      out.groupBy(col("transacao_aprovada")).agg(count(lit(1)).as("n"))
-    }),
+        eventLimitArms))),
 
     // ---- J2/A6-ish: star join + agg (lineitem⋈orders⋈customer⋈nation⋈region) ----
     "j2_star_join_agg" -> ((s, dir) => {
@@ -112,7 +113,7 @@ object SparkEntry {
         .agg(
           count(lit(1)).as("n_rows"),
           // exact decimal money math: reassociation-proof vs the oracle
-          round(sum(col("l_extendedprice").cast("decimal(18,2)") *
+          roundHalfAway(sum(col("l_extendedprice").cast("decimal(18,2)") *
             (lit(1).cast("decimal(18,2)") -
               col("l_discount").cast("decimal(18,2)"))), 2)
             .cast("double").as("revenue"))
@@ -120,9 +121,7 @@ object SparkEntry {
 
     // ---- A12/W3: hourly tumbling rollup on the event stream ----
     "a12_hourly_rollup" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(date_trunc("hour", col("ts")).as("hora"))
-        .agg(count(lit(1)).as("n"), round(avg(col("value")), 4).as("avg_value"))),
+      Dashboard.hourlyRollup(Tables.events(s, dir), col("ts"), col("value"))),
 
     // ---- K1/W4: top-N most recent events (recency view) ----
     "k1_topn_recent" -> ((s, dir) =>

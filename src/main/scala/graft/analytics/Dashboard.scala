@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.{Binning, Scoring}
+import graft.functions.Rounding.roundHalfAway
 
 /** The reference's analytic query surface — the ten dashboard analyses
   * (containers/dashboard/dashboard.py) and the two Postgres views
@@ -54,24 +55,22 @@ object Dashboard {
     */
   def userStats(scored: DataFrame): DataFrame =
     scored.groupBy(col("id_usuario_pagador")).agg(
-      round(avg(col("valor_transacao")), 4).as("valor_medio"),
-      round(nanToNull(stddev_samp(col("valor_transacao"))), 4).as("valor_std"))
+      roundHalfAway(avg(col("valor_transacao")), 4).as("valor_medio"),
+      roundHalfAway(nanToNull(stddev_samp(col("valor_transacao"))), 4).as("valor_std"))
 
   /** P18/W2 — z-score of value vs the payer's own distribution, as window
     * exprs attached to every row (no agg+re-join needed). SQL semantics
     * at the edges: a payer whose values are all equal (std 0) gets NULL,
     * as `x / 0.0` does in SQL, not an ANSI divide-by-zero; a negative z
-    * that rounds to zero stays -0.0, which a decimal `round` drops.
+    * that rounds to zero stays -0.0, as [[graft.functions.Rounding]]
+    * keeps the sign of a zero.
     */
   def zScorePerRow(scored: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("id_usuario_pagador"))
     val mu = avg(col("valor_transacao")).over(w)
     val sd = nanToNull(stddev_samp(col("valor_transacao")).over(w))
     val z = (col("valor_transacao") - mu) / when(sd =!= 0.0, sd)
-    val r = round(z, 4)
-    scored.select(
-      col("id_transacao"),
-      when(r === 0.0, r * signum(z)).otherwise(r).as("z_score"))
+    scored.select(col("id_transacao"), roundHalfAway(z, 4).as("z_score"))
   }
 
   /** A5 — mean time-score and approval rate per hour (dashboard.py:498). */
@@ -79,13 +78,13 @@ object Dashboard {
     scored
       .groupBy(hour(col("data_horario")).as("hora"))
       .agg(
-        round(avg(col("t7_score")), 6).as("t7_medio"),
-        round(rate(col("transacao_aprovada")), 6).as("taxa_aprovacao"))
+        roundHalfAway(avg(col("t7_score")), 6).as("t7_medio"),
+        roundHalfAway(rate(col("transacao_aprovada")), 6).as("taxa_aprovacao"))
 
   /** A6 — approval rate by region (dashboard.py:520-533). */
   def approvalRateByRegion(scored: DataFrame): DataFrame =
     scored.groupBy(col("id_regiao"))
-      .agg(round(rate(col("transacao_aprovada")), 6).as("taxa_aprovacao"),
+      .agg(roundHalfAway(rate(col("transacao_aprovada")), 6).as("taxa_aprovacao"),
         count(lit(1)).as("n"))
 
   /** P20+A7 — denial-reason totals (dashboard.py:211-214,574-577). */
@@ -127,22 +126,22 @@ object Dashboard {
     df.groupBy(col(modality).as("modalidade"))
       .agg(
         count(lit(1)).as("n"),
-        round(avg(col(metric)), 4).as("media"),
-        round(min(col(metric)), 4).as("minimo"),
-        round(max(col(metric)), 4).as("maximo"),
-        round(expr(s"percentile($metric, 0.95)"), 4).as("p95"))
+        roundHalfAway(avg(col(metric)), 4).as("media"),
+        roundHalfAway(min(col(metric)), 4).as("minimo"),
+        roundHalfAway(max(col(metric)), 4).as("maximo"),
+        roundHalfAway(expr(s"percentile($metric, 0.95)"), 4).as("p95"))
 
   /** A12/W3 — hourly tumbling rollup (historic_data_mock.py:102-112). */
   def hourlyRollup(df: DataFrame, ts: Column, metric: Column): DataFrame =
     df.groupBy(date_trunc("hour", ts).as("hora"))
-      .agg(count(lit(1)).as("n"), round(avg(metric), 4).as("media"))
+      .agg(count(lit(1)).as("n"), roundHalfAway(avg(metric), 4).as("avg_value"))
 
   /** A13+K1 — mean over the N most recent rows (dashboard.py:273-277). */
   def recentMean(scored: DataFrame, n: Int): DataFrame =
     scored
       .orderBy(col("data_horario").desc, col("id_transacao").desc)
       .limit(n)
-      .agg(round(avg(col("valor_transacao")), 4).as("valor_medio_recente"),
+      .agg(roundHalfAway(avg(col("valor_transacao")), 4).as("valor_medio_recente"),
         count(lit(1)).as("n"))
 
   /** A14/F2 — p99 outlier trim then aggregate (dashboard.py:373-374). */
@@ -152,14 +151,14 @@ object Dashboard {
     scored.join(broadcast(q99))
       .filter(col("valor_transacao") <= col("q"))
       .agg(count(lit(1)).as("n"),
-        round(avg(col("valor_transacao")), 4).as("valor_medio"))
+        roundHalfAway(avg(col("valor_transacao")), 4).as("valor_medio"))
   }
 
   /** A15 — min/max of the per-region approval rate (dashboard.py:536-537). */
   def regionRateBounds(scored: DataFrame): DataFrame =
     approvalRateByRegion(scored).agg(
-      round(min(col("taxa_aprovacao")), 6).as("taxa_min"),
-      round(max(col("taxa_aprovacao")), 6).as("taxa_max"))
+      roundHalfAway(min(col("taxa_aprovacao")), 6).as("taxa_min"),
+      roundHalfAway(max(col("taxa_aprovacao")), 6).as("taxa_max"))
 
   /** F1 — multiselect + hour-range filter (dashboard.py:245-248). */
   def multiselectFilter(scored: DataFrame, modalities: Seq[String],

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.etl.{ScoringPipeline, TestdataAdapter}
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver-contract registrations for the reference's analytic surface
   * (SURVEY.md §2.5–§2.7): every dashboard analysis / Postgres view as a
@@ -23,16 +24,6 @@ object DashboardQueries {
     */
   private val scoredCache =
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** Unpersist and drop all cached scored tables (e.g. between scale
-    * factors in a long-lived process — entries are otherwise retained
-    * for the session's lifetime).
-    */
-  def clearCache(): Unit = {
-    scoredCache.values.foreach(df =>
-      try df.unpersist() catch { case _: Throwable => () })
-    scoredCache.clear()
-  }
 
   private[analytics] def scored(s: SparkSession, dir: String): DataFrame =
     scoredCache.getOrElseUpdate((s, dir),
@@ -102,7 +93,7 @@ object DashboardQueries {
         .select(fs.as("freq_score"), col("transacao_aprovada"))
         .groupBy(col("freq_score"))
         .agg(count(lit(1)).as("n"),
-          round(avg(col("transacao_aprovada").cast("double")), 4)
+          roundHalfAway(avg(col("transacao_aprovada").cast("double")), 4)
             .as("approval_rate"))
     }))
 

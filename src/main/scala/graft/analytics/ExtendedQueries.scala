@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Skew
+import graft.functions.Rounding.roundHalfAway
 
 /** Windowing/aggregation capabilities beyond the reference's own
   * surface, still oracle-checked: session windows (gaps-and-islands in
@@ -47,8 +48,8 @@ object ExtendedQueries {
         .withColumn("__w", weight)
         .groupBy(col("user_id"))
         .agg(count(lit(1)).as("n_events"),
-          round(sum(col("__w") * col("value")), 6).as("ewma"),
-          round(avg(col("value")), 6).as("mean"))
+          roundHalfAway(sum(col("__w") * col("value")), 6).as("ewma"),
+          roundHalfAway(avg(col("value")), 6).as("mean"))
     }),
     // Z-order (Morton) clustering key — the write-side layout
     // expression behind multi-column file skipping (OPTIMIZE ZORDER):
@@ -78,8 +79,8 @@ object ExtendedQueries {
       ev.join(broadcast(mad), Seq("event_type"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
-          round(min(col("med")), 6).as("med"),
-          round(min(col("mad")), 6).as("mad"),
+          roundHalfAway(min(col("med")), 6).as("med"),
+          roundHalfAway(min(col("mad")), 6).as("mad"),
           sum(when(abs(col("value") - col("med")) >
             lit(3 * 1.4826) * col("mad"), 1L).otherwise(0L))
             .as("n_outliers"))
@@ -162,7 +163,7 @@ object ExtendedQueries {
           when(b < 80, "train").when(b < 90, "val").otherwise("test"))
         .groupBy(col("split"))
         .agg(count(lit(1)).as("n"),
-          round(avg(col("n_chars")), 4).as("avg_chars"),
+          roundHalfAway(avg(col("n_chars")), 4).as("avg_chars"),
           countDistinct(col("lang")).as("n_langs"))
     }),
     // MapType surface: per-user event-type→count maps built with
@@ -198,7 +199,7 @@ object ExtendedQueries {
           count(col("amt")).as("n_parsed"),
           sum(col("amt")).as("sum_amt"),
           count(col("per")).as("n_div"),
-          round(sum(col("per")), 4).as("sum_per"))
+          roundHalfAway(sum(col("per")), 4).as("sum_per"))
     }),
     // XML decode (crawl-corpus shape): doc fields serialized to XML
     // then parsed back with from_xml — the oracle reads the ORIGINAL
@@ -288,7 +289,7 @@ object ExtendedQueries {
         .filter(col("ts") >= lit(s"$d 00:00:00") &&
           col("ts") < lit(s"$next 00:00:00"))
         .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 4).as("val"))
+        .agg(count(lit(1)).as("n"), roundHalfAway(sum(col("value")), 4).as("val"))
       graft.operators.Cdc.snapshotDiff(
         day("2024-01-10", "2024-01-11"), day("2024-01-17", "2024-01-18"),
         Seq("user_id"))
@@ -373,12 +374,12 @@ object ExtendedQueries {
     "a18_cube" -> ((s, dir) =>
       Tables.events(s, dir)
         .cube(col("event_type"), hour(col("ts")).as("hora"))
-        .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total"))),
+        .agg(count(lit(1)).as("n"), roundHalfAway(sum(col("value")), 2).as("total"))),
     // hierarchical subtotals (type -> type x hour -> grand total)
     "a20_rollup" -> ((s, dir) =>
       Tables.events(s, dir)
         .rollup(col("event_type"), hour(col("ts")).as("hora"))
-        .agg(count(lit(1)).as("n"), round(avg(col("value")), 4).as("avg_v"))),
+        .agg(count(lit(1)).as("n"), roundHalfAway(avg(col("value")), 4).as("avg_v"))),
     // Full ranking/analytic window suite (the reference has NO ranking
     // functions at all — extension surface): one partition-sorted pass
     // computes every rank family member plus lag/lead deltas
@@ -392,8 +393,8 @@ object ExtendedQueries {
           rank().over(w).as("rnk"),
           dense_rank().over(w).as("drnk"),
           ntile(4).over(w).as("quartile"),
-          round(percent_rank().over(w), 6).as("prnk"),
-          round(cume_dist().over(w), 6).as("cdist"),
+          roundHalfAway(percent_rank().over(w), 6).as("prnk"),
+          roundHalfAway(cume_dist().over(w), 6).as("cdist"),
           (col("value") - lag(col("value"), 1).over(w)).as("gap_prev"),
           (lead(col("value"), 1).over(w) - col("value")).as("gap_next"))
         .filter(col("rnk") <= 50)
@@ -414,7 +415,7 @@ object ExtendedQueries {
           .when(col("value") <= col("q3"), 2).otherwise(3).as("bin"),
           col("value"))
         .groupBy(col("bin")).agg(count(lit(1)).as("n"),
-          round(sum(col("value").cast("decimal(18,2)")), 2).cast("double")
+          roundHalfAway(sum(col("value").cast("decimal(18,2)")), 2).cast("double")
             .as("total"))
     }),
     // Set ops over an even/odd event_id interleave: types present among
@@ -442,7 +443,7 @@ object ExtendedQueries {
           unix_micros(col("ts")) - unix_micros(lag(col("ts"), 1).over(w)))
         .groupBy(col("user_id"))
         .agg(count(col("gap_us")).as("n_gaps"),
-          round(avg(col("gap_us")), 4).as("avg_gap_us"),
+          roundHalfAway(avg(col("gap_us")), 4).as("avg_gap_us"),
           max(col("gap_us")).as("max_gap_us"))
     }),
     // forward as-of with tolerance: EARLIEST click at-or-after each
@@ -540,7 +541,7 @@ object ExtendedQueries {
         col("longitude").as("lon_b"))
       a.join(b, col("id_a") < col("id_b"))
         .select(col("id_a"), col("id_b"),
-          round(graft.functions.Scoring.haversineKm(col("lat_a"), col("lon_a"),
+          roundHalfAway(graft.functions.Scoring.haversineKm(col("lat_a"), col("lon_a"),
             col("lat_b"), col("lon_b")), 4).as("km"))
     }))
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.io.Scratch
 import graft.functions.Skew
+import graft.functions.Rounding.roundHalfAway
 
 /** Relational operator surface beyond the reference's inventory, all
   * DuckDB-oracle-checked: semi/anti joins (EXISTS / NOT EXISTS
@@ -30,7 +31,7 @@ object RelationalOpsQueries {
       c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_customers"),
-          round(sum(col("c_acctbal").cast("decimal(18,2)")), 2)
+          roundHalfAway(sum(col("c_acctbal").cast("decimal(18,2)")), 2)
             .cast("double").as("total_acctbal"))
     }),
     // LEFT ANTI: customers with no URGENT order (NOT EXISTS with a
@@ -43,7 +44,7 @@ object RelationalOpsQueries {
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("n_customers"),
-          round(sum(col("c_acctbal").cast("decimal(18,2)")), 2)
+          roundHalfAway(sum(col("c_acctbal").cast("decimal(18,2)")), 2)
             .cast("double").as("total_acctbal"))
     }),
     // Explicit window frames in one partition-sorted pass per user:
@@ -61,10 +62,10 @@ object RelationalOpsQueries {
         .rangeBetween(-3600L * 1000000L, 0)
       Tables.events(s, dir).select(
         col("event_id"), col("user_id"),
-        round(sum(col("value").cast("decimal(18,2)")).over(run), 2)
+        roundHalfAway(sum(col("value").cast("decimal(18,2)")).over(run), 2)
           .cast("double").as("running_total"),
-        round(avg(col("value")).over(mov3), 4).as("mov_avg3"),
-        round(sum(col("value").cast("decimal(18,2)")).over(hourRange), 2)
+        roundHalfAway(avg(col("value")).over(mov3), 4).as("mov_avg3"),
+        roundHalfAway(sum(col("value").cast("decimal(18,2)")).over(hourRange), 2)
           .cast("double").as("hour_total"),
         first(col("value")).over(run).as("first_v"),
         count(lit(1)).over(run).as("row_in_user"))
@@ -95,11 +96,11 @@ object RelationalOpsQueries {
     "p22_unpivot" -> ((s, dir) => {
       val sums = Tables.lineitem(s, dir).groupBy(col("l_returnflag"))
         .agg(
-          round(sum(col("l_quantity").cast("decimal(18,2)")), 2)
+          roundHalfAway(sum(col("l_quantity").cast("decimal(18,2)")), 2)
             .cast("double").as("quantity"),
-          round(sum(col("l_extendedprice").cast("decimal(18,2)")), 2)
+          roundHalfAway(sum(col("l_extendedprice").cast("decimal(18,2)")), 2)
             .cast("double").as("extendedprice"),
-          round(sum(col("l_discount").cast("decimal(18,2)")), 2)
+          roundHalfAway(sum(col("l_discount").cast("decimal(18,2)")), 2)
             .cast("double").as("discount"))
       sums.unpivot(Array(col("l_returnflag")),
         Array(col("quantity"), col("extendedprice"), col("discount")),
@@ -136,7 +137,7 @@ object RelationalOpsQueries {
         .select(
           substring_index(col("col_metric"), "__", 1).as("column"),
           substring_index(col("col_metric"), "__", -1).as("metric"),
-          round(col("value"), 6).as("value"))
+          roundHalfAway(col("value"), 6).as("value"))
     }),
     // Salted skew join == plain join: per-type mean joined back onto
     // the (skewed) fact stream with the dim replicated per salt, then
@@ -145,12 +146,12 @@ object RelationalOpsQueries {
       val ev = Tables.events(s, dir)
       val dim = ev.groupBy(col("event_type"))
         .agg(avg(col("value")).as("type_avg"))
-      // absolute deviations: plain deviations sum to ~±1e-9 ≈ 0, where
-      // Spark rounds to -0.0 and DuckDB to 0.0 — bitwise unequal
+      // absolute deviations: plain deviations sum to ~±1e-9 ≈ 0, whose
+      // summation-order-dependent sign would survive as a rounded ±0.0
       Skew.saltedJoin(ev, dim, "event_type", buckets = 32)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
-          round(sum(abs(col("value") - col("type_avg"))), 2).as("dev_total"))
+          roundHalfAway(sum(abs(col("value") - col("type_avg"))), 2).as("dev_total"))
     }),
     // Runtime Bloom-filter pruned join: the selective dim predicate
     // (p_size = 1) becomes a bloom_filter_agg over p_partkey whose
@@ -164,7 +165,7 @@ object RelationalOpsQueries {
       l.join(p, l("l_partkey") === p("p_partkey"))
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n"),
-          round(sum(col("l_extendedprice").cast("decimal(18,2)")), 2)
+          roundHalfAway(sum(col("l_extendedprice").cast("decimal(18,2)")), 2)
             .cast("double").as("revenue"))
     }),
     // Calendar/date function family over the star join: day-of-week
@@ -179,7 +180,7 @@ object RelationalOpsQueries {
         .groupBy(col("o_orderpriority"),
           dayofweek(col("o_orderdate")).as("dow"))
         .agg(count(lit(1)).as("n"),
-          round(avg(datediff(col("l_shipdate"), col("o_orderdate"))), 4)
+          roundHalfAway(avg(datediff(col("l_shipdate"), col("o_orderdate"))), 4)
             .as("avg_ship_days"),
           max(datediff(col("l_shipdate"), col("o_orderdate")))
             .as("max_ship_days"))
@@ -241,10 +242,10 @@ object RelationalOpsQueries {
       Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
-          round(median(col("l_quantity")), 4).as("med_qty"),
-          round(expr("percentile(l_quantity, 0.25)"), 4).as("p25"),
-          round(expr("percentile(l_quantity, 0.75)"), 4).as("p75"),
-          round(expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice)"), 2)
+          roundHalfAway(median(col("l_quantity")), 4).as("med_qty"),
+          roundHalfAway(expr("percentile(l_quantity, 0.25)"), 4).as("p25"),
+          roundHalfAway(expr("percentile(l_quantity, 0.75)"), 4).as("p75"),
+          roundHalfAway(expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice)"), 2)
             .as("p90_price_disc"))),
     // The AT-SCALE percentile path, exercised with its error contract
     // (a14/a21/a30/a35 compute exact percentiles and note
@@ -267,8 +268,8 @@ object RelationalOpsQueries {
       Tables.lineitem(s, dir)
         .groupBy(col("l_returnflag"))
         .agg(count(lit(1)).as("n"),
-          round(expr("percentile(l_extendedprice, 0.5)"), 2).as("p50_exact"),
-          round(expr("percentile(l_extendedprice, 0.95)"), 2).as("p95_exact"),
+          roundHalfAway(expr("percentile(l_extendedprice, 0.5)"), 2).as("p50_exact"),
+          roundHalfAway(expr("percentile(l_extendedprice, 0.95)"), 2).as("p95_exact"),
           ok(0.5, "l_extendedprice").as("ok_p50"),
           ok(0.95, "l_extendedprice").as("ok_p95"))
     }),
@@ -310,7 +311,7 @@ object RelationalOpsQueries {
       li.join(o, li("l_orderkey") === o("o_orderkey"))
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n_items"),
-          round(sum(col("l_extendedprice").cast("decimal(18,2)") *
+          roundHalfAway(sum(col("l_extendedprice").cast("decimal(18,2)") *
             (lit(1).cast("decimal(18,2)") -
               col("l_discount").cast("decimal(18,2)"))), 2)
             .cast("double").as("revenue"))

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Rounding.roundHalfAway
 
 /** Heavy star-schema analytics in the shape of the classic warehouse
   * queries (pricing summary, shipping priority, returned items) —
@@ -26,16 +27,16 @@ object StarQueries {
         .filter(col("l_shipdate") <= lit("1999-09-01"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
-          round(sum(col("l_quantity")), 2).as("sum_qty"),
-          round(sum(dec(col("l_extendedprice"))), 2).cast("double")
+          roundHalfAway(sum(col("l_quantity")), 2).as("sum_qty"),
+          roundHalfAway(sum(dec(col("l_extendedprice"))), 2).cast("double")
             .as("sum_base_price"),
-          round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
+          roundHalfAway(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
             .cast("double").as("sum_disc_price"),
-          round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))
+          roundHalfAway(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))
             * (one + dec(col("l_tax")))), 2).cast("double").as("sum_charge"),
-          round(avg(col("l_quantity")), 4).as("avg_qty"),
-          round(avg(col("l_extendedprice")), 4).as("avg_price"),
-          round(avg(col("l_discount")), 6).as("avg_disc"),
+          roundHalfAway(avg(col("l_quantity")), 4).as("avg_qty"),
+          roundHalfAway(avg(col("l_extendedprice")), 4).as("avg_price"),
+          roundHalfAway(avg(col("l_discount")), 6).as("avg_disc"),
           count(lit(1)).as("count_order"))),
     // Q3 shape: unshipped-revenue top-10 for one market segment
     "q3_shipping_priority" -> ((s, dir) => {
@@ -50,7 +51,7 @@ object StarQueries {
         .groupBy(col("l_orderkey"),
           date_trunc("second", col("o_orderdate")).as("o_orderdate"),
           col("o_orderpriority"))
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
+        .agg(roundHalfAway(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
           .cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("l_orderkey").asc)
         .limit(10)
@@ -67,7 +68,7 @@ object StarQueries {
         .join(c, o("o_custkey") === c("c_custkey"))
         .join(broadcast(n), c("c_nationkey") === n("n_nationkey"))
         .groupBy(col("c_custkey"), col("c_name"), col("n_name"))
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
+        .agg(roundHalfAway(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
           .cast("double").as("revenue"))
         .orderBy(col("revenue").desc, col("c_custkey").asc)
         .limit(20)
@@ -81,7 +82,7 @@ object StarQueries {
           col("l_shipdate") < lit("1997-01-01") &&
           col("l_discount").between(0.05, 0.07) &&
           col("l_quantity") < 24)
-        .agg(round(sum(dec(col("l_extendedprice")) * dec(col("l_discount"))), 2)
+        .agg(roundHalfAway(sum(dec(col("l_extendedprice")) * dec(col("l_discount"))), 2)
           .cast("double").as("revenue"))),
     // TPC-H Q12 shape: conditional counts split by a priority class
     // over a fact⋈fact join — count(when) compiles to a single-pass
@@ -108,12 +109,12 @@ object StarQueries {
       val disc = dec(col("l_extendedprice")) * (one - dec(col("l_discount")))
       l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
         .agg(
-          round(sum(when(col("p_type") === "PROMO", disc)
+          roundHalfAway(sum(when(col("p_type") === "PROMO", disc)
             .otherwise(lit(0).cast("decimal(18,2)"))), 2)
             .cast("double").as("promo_revenue"),
-          round(sum(disc), 2).cast("double").as("total_revenue"))
+          roundHalfAway(sum(disc), 2).cast("double").as("total_revenue"))
         .select(col("promo_revenue"), col("total_revenue"),
-          round(col("promo_revenue") / col("total_revenue") * 100, 4)
+          roundHalfAway(col("promo_revenue") / col("total_revenue") * 100, 4)
             .as("promo_pct"))
     }),
     // TPC-H Q5 shape: local-supplier volume — the 6-table star with a
@@ -137,7 +138,7 @@ object StarQueries {
         .join(broadcast(r), n("n_regionkey") === r("r_regionkey"))
         .filter(col("r_name") === "AMERICA")
         .groupBy(col("n_name"))
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
+        .agg(roundHalfAway(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
           .cast("double").as("revenue"))
     }),
     // TPC-H Q16 shape: distinct-supplier counts per part attribute
@@ -159,7 +160,7 @@ object StarQueries {
     "q18_large_orders" -> ((s, dir) => {
       val big = Tables.lineitemTs(s, dir)
         .groupBy(col("l_orderkey"))
-        .agg(round(sum(dec(col("l_quantity"))), 2).cast("double")
+        .agg(roundHalfAway(sum(dec(col("l_quantity"))), 2).cast("double")
           .as("total_qty"))
         .filter(col("total_qty") > 150)
       val o = Tables.ordersTs(s, dir)
@@ -168,7 +169,7 @@ object StarQueries {
         .join(c, o("o_custkey") === c("c_custkey"))
         .select(col("c_name"), col("c_custkey"), col("o_orderkey"),
           date_trunc("second", col("o_orderdate")).as("o_orderdate"),
-          round(dec(col("o_totalprice")), 2).cast("double").as("o_totalprice"),
+          roundHalfAway(dec(col("o_totalprice")), 2).cast("double").as("o_totalprice"),
           col("total_qty"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
         .limit(100)
@@ -197,7 +198,7 @@ object StarQueries {
         .filter(col("supp_nation") =!= col("cust_nation"))
         .groupBy(col("supp_nation"), col("cust_nation"),
           year(col("l_shipdate")).as("l_year"))
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
+        .agg(roundHalfAway(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
           .cast("double").as("revenue"))
     }),
     // TPC-H Q8 shape: national market share inside one region. Both
@@ -225,12 +226,12 @@ object StarQueries {
         .join(broadcast(n2), col("s_nationkey") === col("s_nk"))
         .groupBy(year(col("o_orderdate")).as("o_year"))
         .agg(
-          round(sum(when(col("supp_nation") === "NATION_9", volume)
+          roundHalfAway(sum(when(col("supp_nation") === "NATION_9", volume)
             .otherwise(lit(0).cast("decimal(18,2)"))), 2)
             .cast("double").as("nation_volume"),
-          round(sum(volume), 2).cast("double").as("total_volume"))
+          roundHalfAway(sum(volume), 2).cast("double").as("total_volume"))
         .select(col("o_year"), col("nation_volume"), col("total_volume"),
-          round(col("nation_volume") / col("total_volume"), 6).as("mkt_share"))
+          roundHalfAway(col("nation_volume") / col("total_volume"), 6).as("mkt_share"))
     }),
     // TPC-H Q13 shape: customer order-count distribution — LEFT join
     // with an extra non-key predicate (kept customers with zero
@@ -258,7 +259,7 @@ object StarQueries {
         .filter(col("l_shipdate") >= lit("1997-01-01") &&
           col("l_shipdate") < lit("1997-04-01"))
         .groupBy(col("l_suppkey"))
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
+        .agg(roundHalfAway(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
           .cast("double").as("total_revenue"))
         .localCheckpoint(true)
       val mx = rev.agg(max(col("total_revenue")).as("mx"))
@@ -281,7 +282,7 @@ object StarQueries {
       l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
         .join(perPart, l("l_partkey") === perPart("pk"))
         .filter(dec(col("l_quantity")) * lit(5) * col("qty_n") < col("qty_sum"))
-        .agg(round(sum(dec(col("l_extendedprice"))).cast("double") / 7.0, 2)
+        .agg(roundHalfAway(sum(dec(col("l_extendedprice"))).cast("double") / 7.0, 2)
           .as("avg_yearly"))
     }),
     // TPC-H Q19 shape: disjunction of brand/size/quantity conjunctions
@@ -299,7 +300,7 @@ object StarQueries {
         col("p_size").between(1, 15) && col("l_quantity").between(20, 30)
       l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
         .filter(arm1 || arm2 || arm3)
-        .agg(round(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
+        .agg(roundHalfAway(sum(dec(col("l_extendedprice")) * (one - dec(col("l_discount")))), 2)
           .cast("double").as("revenue"))
     }),
     // TPC-H Q22 shape: rich-but-dormant customers — scalar average
@@ -319,7 +320,7 @@ object StarQueries {
         .join(recent, c("c_custkey") === recent("o_custkey"), "left_anti")
         .groupBy(col("c_mktsegment"))
         .agg(count(lit(1)).as("numcust"),
-          round(sum(dec(col("c_acctbal"))), 2).cast("double").as("totacctbal"))
+          roundHalfAway(sum(dec(col("c_acctbal"))), 2).cast("double").as("totacctbal"))
     }),
     // TPC-H Q2 shape: min-cost supplier per part. The reference data
     // has no partsupp table, so the part–supplier catalog is DERIVED
@@ -349,9 +350,9 @@ object StarQueries {
       eur.join(mn, col("l_partkey") === col("mk") &&
           col("supply_cost") === col("min_cost"))
         .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .select(round(col("s_acctbal"), 2).as("s_acctbal"), col("s_name"),
+        .select(roundHalfAway(col("s_acctbal"), 2).as("s_acctbal"), col("s_name"),
           col("n_name"), col("p_partkey"),
-          round(col("supply_cost"), 4).as("supply_cost"))
+          roundHalfAway(col("supply_cost"), 4).as("supply_cost"))
     }),
     // TPC-H Q4 shape: order-priority checking — EXISTS becomes a LEFT
     // SEMI join whose condition mixes the equi key with a per-row time
@@ -388,7 +389,7 @@ object StarQueries {
         .join(broadcast(n), col("s_nationkey") === n("n_nationkey"))
         .groupBy(col("n_name").as("nation"),
           year(col("o_orderdate")).as("o_year"))
-        .agg(round(sum(profit), 2).cast("double").as("sum_profit"))
+        .agg(roundHalfAway(sum(profit), 2).cast("double").as("sum_profit"))
     }),
     // TPC-H Q11 shape: important stock — per-part value restricted to
     // two nations' suppliers, kept only where the part exceeds a
@@ -410,7 +411,7 @@ object StarQueries {
       val tot = value.agg(sum(col("v")).as("total"))
       value.crossJoin(broadcast(tot))
         .filter(col("v") * lit(1000) > col("total"))
-        .select(col("l_partkey"), round(col("v"), 2).cast("double").as("value"))
+        .select(col("l_partkey"), roundHalfAway(col("v"), 2).cast("double").as("value"))
     }),
     // TPC-H Q20 shape: part promotion — the nested IN subqueries
     // become aggregate + join + LEFT SEMI: suppliers who shipped more
@@ -434,7 +435,7 @@ object StarQueries {
         .select(col("l_suppkey"))
       Tables.supplier(s, dir)
         .join(promoSupp, col("s_suppkey") === col("l_suppkey"), "left_semi")
-        .select(col("s_name"), round(col("s_acctbal"), 2).as("s_acctbal"))
+        .select(col("s_name"), roundHalfAway(col("s_acctbal"), 2).as("s_acctbal"))
     }),
     // TPC-H Q21 shape: suppliers who kept orders waiting. The EXISTS
     // (another supplier shares the order) and NOT EXISTS (no OTHER

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{DataFrame}
 import org.apache.spark.sql.functions._
 import graft.io.PersistedTable
+import graft.functions.Rounding.roundHalfAway
 
 /** Substring-level boilerplate REMOVAL — the consumer of
   * [[Dedup.commonNgrams]]'s repeated-span signal. Mining tells you a
@@ -148,7 +149,7 @@ object Boilerplate {
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("__seen"), lit(0L))).as("n_seen"))
       .withColumn("novelty",
-        round(lit(1.0) - col("n_seen").cast("double") / col("n_grams"), 6))
+        roundHalfAway(lit(1.0) - col("n_seen").cast("double") / col("n_grams"), 6))
   }
 
   /** The boiler set at threshold `minDf`, folded from the stored

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.io.PersistedTable
+import graft.functions.Rounding.roundHalfAway
 
 /** Near-duplicate detection for document corpora, four ways:
   *
@@ -157,7 +158,7 @@ object Dedup {
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("__seen"), lit(0L))).as("n_seen"))
       .withColumn("novelty",
-        round(lit(1.0) - col("n_seen").cast("double") / col("n_grams"), 6))
+        roundHalfAway(lit(1.0) - col("n_seen").cast("double") / col("n_grams"), 6))
   }
 
   /** Exact Jaccard-similar pairs (ids a < b) above `threshold`, via

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.io.Scratch
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver-contract registrations for near-dup detection over
   * `documents`. The exact n-gram Jaccard query and the MinHash-LSH
@@ -34,11 +35,11 @@ object DedupQueries {
     "dedup_ngram_jaccard" -> ((s, dir) =>
       Dedup.jaccardPairs(Tables.documents(s, dir), "doc_id", "text", N, Threshold)
         .select(col("doc_a"), col("doc_b"),
-          round(col("jaccard"), 6).as("jaccard"))),
+          roundHalfAway(col("jaccard"), 6).as("jaccard"))),
     "dedup_minhash_lsh" -> ((s, dir) =>
       Dedup.minhashLshPairs(Tables.documents(s, dir), "doc_id", "text", N, Threshold)
         .select(col("doc_a"), col("doc_b"),
-          round(col("jaccard"), 6).as("jaccard"))),
+          roundHalfAway(col("jaccard"), 6).as("jaccard"))),
     // SimHash signatures have no cross-engine hash parity, so the
     // ORACLE checks the operator by CONTRACT (the a37/recall trick),
     // in simhash's own feature space (token bags, not shingles):
@@ -122,7 +123,7 @@ object DedupQueries {
       Dedup.containmentPairs(Tables.documents(s, dir), "doc_id", "text",
         N, 0.9)
         .select(col("doc_sub"), col("doc_super"),
-          round(col("containment"), 6).as("containment"))),
+          roundHalfAway(col("containment"), 6).as("containment"))),
     // Persisted band index (incremental corpus dedup): build on the
     // doc_id >= 300 slice, ingest 150 <= doc_id < 300 as an APPEND
     // (delta-only signature pass, existing rows untouched), then
@@ -150,7 +151,7 @@ object DedupQueries {
       Dedup.bandIndexProbe(docs.filter(col("doc_id") < 150),
         "doc_id", "text", N, ix, Threshold)
         .select(col("in_doc"), col("corpus_doc"),
-          round(col("jaccard"), 6).as("jaccard"))
+          roundHalfAway(col("jaccard"), 6).as("jaccard"))
     }),
     "dedup_index_persisted" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
@@ -163,7 +164,7 @@ object DedupQueries {
       Dedup.bandIndexProbe(docs.filter(col("doc_id") < 150),
         "doc_id", "text", N, ix, Threshold)
         .select(col("in_doc"), col("corpus_doc"),
-          round(col("jaccard"), 6).as("jaccard"))
+          roundHalfAway(col("jaccard"), 6).as("jaccard"))
     }),
     "dedup_components" -> ((s, dir) =>
       Dedup.connectedComponents(
@@ -291,7 +292,7 @@ object DedupQueries {
     // quality per split are order-free aggregates (no float-sum
     // association hazard a mean would carry).
     "pipeline_curation_v4" -> ((s, dir) => {
-      val q6 = round(graft.text.Text.qualityScore(col("text")), 6)
+      val q6 = roundHalfAway(graft.text.Text.qualityScore(col("text")), 6)
       val kept = Tables.documents(s, dir)
         .filter(graft.text.Text.qualityScore(col("text")) >= 0.45)
       val comp = Dedup.connectedComponents(
@@ -360,7 +361,7 @@ object DedupQueries {
         "doc_a", "doc_b")
       val delta = docs.filter(col("doc_id") < 150)
         .select(col("doc_id"),
-          round(graft.text.Text.qualityScore(col("text")), 6).as("q"))
+          roundHalfAway(graft.text.Text.qualityScore(col("text")), 6).as("q"))
       Dedup.canonicalAppend(canonicalOf(oldDocs, oldLabels), oldLabels,
         delta, "doc_id", "q",
         pairs.filter(col("doc_a") < 150 || col("doc_b") < 150),
@@ -374,7 +375,7 @@ object DedupQueries {
   private def canonicalOf(docs: DataFrame, comp: DataFrame): DataFrame =
     Dedup.canonicalTable(
       docs.select(col("doc_id"),
-        round(graft.text.Text.qualityScore(col("text")), 6).as("q")),
+        roundHalfAway(graft.text.Text.qualityScore(col("text")), 6).as("q")),
       comp, "doc_id", "q")
 
   /** The exact-Jaccard pair SQL over an arbitrary source relation
@@ -500,7 +501,7 @@ object DedupQueries {
        |WHERE inter::DOUBLE / (x.n + y.n - inter) >= $threshold""".stripMargin
 
   private val pagerankOracle = {
-    def round(prev: String, cur: String) =
+    def iteration(prev: String, cur: String) =
       s"""c$cur AS (
          |  SELECT e.v AS u, sum(r.rank / d.deg) AS inr
          |  FROM cedges e
@@ -521,9 +522,9 @@ object DedupQueries {
        |nodes AS (SELECT DISTINCT u FROM cedges),
        |nn AS (SELECT count(*)::DOUBLE AS n FROM nodes),
        |r0 AS (SELECT u, 1.0 / nn.n AS rank FROM nodes CROSS JOIN nn),
-       |${round("0", "1")},
-       |${round("1", "2")},
-       |${round("2", "3")}
+       |${iteration("0", "1")},
+       |${iteration("1", "2")},
+       |${iteration("2", "3")}
        |SELECT u AS node, round(rank, 8) AS rank FROM r3""".stripMargin
   }
 

@@ -87,8 +87,8 @@ object TestdataAdapter {
        |gated AS (
        |  SELECT *,
        |    -- + 0.0 normalizes IEEE -0.0 (t6=0 and t7<0 makes the product
-       |    -- -0.0; Spark's round() goes through BigDecimal and emits +0.0,
-       |    -- so an unnormalized oracle hash-mismatches on sign alone)
+       |    -- -0.0; round keeps the sign of a zero, so the Spark scored
+       |    -- projections add the same + 0.0 and both sides publish +0.0)
        |    (t5_score * t6_score * t7_score) / 3.0 + 0.0 AS score_medio,
        |    NOT ((t5_score * t6_score * t7_score) / 3.0 > 6.0) AS score_aprovado,
        |    saldo > valor_transacao AS saldo_aprovado,

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** Distribution-drift detection between a REFERENCE slice and a
   * CURRENT slice of the same feature — the production-ML data-quality
@@ -65,7 +66,7 @@ object Drift {
         ((q - p) * log(q / p)).as("term"))
       .groupBy(col("g"))
       .agg(max(col("n_ref")).as("n_ref"), max(col("n_cur")).as("n_cur"),
-        round(sum(col("term")), 6).as("psi"))
+        roundHalfAway(sum(col("term")), 6).as("psi"))
       .select(col("g").as(groupCol), col("n_ref"), col("n_cur"),
         col("psi"), (col("psi") > lit(threshold)).as("drifted"))
   }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** Declarative data-quality expectations evaluated in ONE scan — the
   * admission gate a training pipeline runs before a batch enters the
@@ -51,7 +52,7 @@ object Expectations {
     // column) must read as a FAILED check, not a NULL that slips
     // through `filter(pass === false)` on the admitting side
     stacked.select(col("expectation"),
-      round(col("metric"), 6).as("metric"),
+      roundHalfAway(col("metric"), 6).as("metric"),
       coalesce(col("metric").between(lo, hi), lit(false)).as("pass"))
   }
 }

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** Deterministic weighted sampling (Efraimidis–Spirakis A-ES).
   *
@@ -68,5 +69,5 @@ object Sampling {
       .withColumn("es_key", esKey(col(id), col(weight)))
       .orderBy(col("es_key").desc, col(id))
       .limit(k)
-      .withColumn("es_key", round(col("es_key"), 9))
+      .withColumn("es_key", roundHalfAway(col("es_key"), 9))
 }

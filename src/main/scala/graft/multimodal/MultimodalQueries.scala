@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver-contract registrations for the multimodal plumbing over
   * `documents` (payload = UTF-8 bytes as the opaque binary column).
@@ -81,7 +82,7 @@ object MultimodalQueries {
           (acc, x) => acc + x.cast("double")))
       f.select(col("media_id"), col("decoded"), col("format"),
         col("width"), col("height"), col("channels"),
-        (round(element_at(col("features"), 1) * 255) ===
+        (roundHalfAway(element_at(col("features"), 1) * 255) ===
           (col("media_id") * 31) % 255 + 1).as("px0_ok"),
         (col("fsum") > 0 &&
           col("fsum") <= col("width") * col("height")).as("mass_ok"))
@@ -109,9 +110,9 @@ object MultimodalQueries {
         .withColumn("fsum", aggregate(col("features"), lit(0.0),
           (acc, x) => acc + x.cast("double")))
       f.select(col("media_id"), col("decoded"), col("width"), col("height"),
-        (round(element_at(col("features"), 1) * 255) ===
+        (roundHalfAway(element_at(col("features"), 1) * 255) ===
           (col("media_id") * 31) % 255 + 1).as("px_ok"),
-        (round(col("fsum") * 255) ===
+        (roundHalfAway(col("fsum") * 255) ===
           ((col("media_id") * 31) % 255 + 1) * 6).as("mass_ok"))
     }),
     // REAL audio decode over generated WAV fixtures: each document
@@ -142,7 +143,7 @@ object MultimodalQueries {
       Multimodal.audioStats(media).toDF()
         .select(col("media_id"), col("decoded"), col("sample_rate"),
           col("channels"), col("n_samples"),
-          (round(col("rms")) === (col("media_id") % 512 + 1) * 32)
+          (roundHalfAway(col("rms")) === (col("media_id") % 512 + 1) * 32)
             .as("rms_ok"),
           (col("peak") === (col("media_id") % 512 + 1) * 32)
             .as("peak_ok"))
@@ -198,7 +199,7 @@ object MultimodalQueries {
       Multimodal.audioStats(s.createDataset(rows)).toDF()
         .select(col("media_id"), col("decoded"), col("sample_rate"),
           col("channels"), col("n_samples"),
-          round(col("rms"), 6).as("rms"), col("peak"))
+          roundHalfAway(col("rms"), 6).as("rms"), col("peak"))
     }),
     "mm_video_real" -> ((s, dir) => {
       import s.implicits._
@@ -219,9 +220,9 @@ object MultimodalQueries {
       Multimodal.videoStats(media).toDF()
         .select(col("media_id"), col("decoded"), col("n_frames"),
           col("frame_w"), col("frame_h"),
-          (round(col("first_lum") * 255) ===
+          (roundHalfAway(col("first_lum") * 255) ===
             (col("media_id") * 31) % 255 + 1).as("first_ok"),
-          (round(col("last_lum") * 255) ===
+          (roundHalfAway(col("last_lum") * 255) ===
             (col("media_id") * 31 + (col("media_id") % 4) * 17) % 255 + 1)
             .as("last_ok"))
     }),

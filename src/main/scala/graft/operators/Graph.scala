@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** Iterative graph analytics over an edge list, Spark-first: each
   * round is one join + one keyed aggregation, lineage truncated with
@@ -29,7 +30,7 @@ object Graph {
       .crossJoin(wedges.agg(count(lit(1)).as("n_wedges")))
       .crossJoin(closed.agg(count(lit(1)).as("n_triangles")))
       .select(col("n_edges"), col("n_wedges"), col("n_triangles"),
-        round(col("n_triangles").cast("double") / col("n_wedges"), 6)
+        roundHalfAway(col("n_triangles").cast("double") / col("n_wedges"), 6)
           .as("closure_rate"))
   }
 
@@ -51,7 +52,7 @@ object Graph {
       .join(deg.select(col("u").as("m"), col("d")), Seq("m"))
       .groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("cn"),
-        round(sum(lit(1.0) / log(col("d"))), 6).as("adamic_adar"))
+        roundHalfAway(sum(lit(1.0) / log(col("d"))), 6).as("adamic_adar"))
     feat.join(
         e.select(col("u").as("a"), col("v").as("b"), lit(true).as("lk")),
         Seq("a", "b"), "left")
@@ -100,6 +101,6 @@ object Graph {
       // plannable lineage — deep-iteration runs still get truncated
       if (i % 4 == 0 && i < iters) ranks = ranks.localCheckpoint(true)
     }
-    ranks.select(col("u").as("node"), round(col("rank"), 8).as("rank"))
+    ranks.select(col("u").as("node"), roundHalfAway(col("rank"), 8).as("rank"))
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.PersistedTable
 import scala.util.Random
+import graft.functions.Rounding.roundHalfAway
 
 /** Similarity search over an embedding column (`array<float>`):
   *
@@ -60,7 +61,7 @@ object Ann {
     val c = prepared(corpus, id, vec)
     val sims = c.join(broadcast(q), col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
+        roundHalfAway(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
           .as("sim"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("vid").asc)
@@ -97,7 +98,7 @@ object Ann {
       .join(broadcast(q.select(col("qid"), col("qp"), col("qpn"))),
         col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"),
-        round(dot(col("qp"), col("p")) / (col("qpn") * col("pn")), 6)
+        roundHalfAway(dot(col("qp"), col("p")) / (col("qpn") * col("pn")), 6)
           .as("psim"))
     val cand = graft.operators.TopK.topKPerKey(stage1, keys = Seq("qid"),
       orderCols = Seq("psim" -> false, "vid" -> true), k = candidates,
@@ -106,7 +107,7 @@ object Ann {
       .join(c.select(col("vid"), col("v"), col("nrm")), "vid")
       .join(broadcast(q.select(col("qid"), col("qv"), col("qn"))), "qid")
       .select(col("qid"), col("vid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
+        roundHalfAway(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
           .as("sim"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("vid").asc)
@@ -156,7 +157,7 @@ object Ann {
     // condition at most once, so (qid, vid) pairs are already unique
     val cand = cSig.join(broadcast(qSig), bandMatch && col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
+        roundHalfAway(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
           .as("sim"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("vid").asc)
@@ -348,7 +349,7 @@ object Ann {
     val cand = corpusSide.join(broadcast(q),
         Seq("cell")).filter(col("qid") =!= col("vid"))
       .select(col("qid"), col("vid"),
-        round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
+        roundHalfAway(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
           .as("sim"))
     val w = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("vid").asc)
@@ -597,7 +598,7 @@ object Ann {
           1, nProbe).getField("idx")).as("cell"))
     lA.join(rA, Seq("cell"))
       .select(col("lid"), col("rid"),
-        round(dot(col("lv"), col("rv")) / (col("ln") * col("rn")), 6)
+        roundHalfAway(dot(col("lv"), col("rv")) / (col("ln") * col("rn")), 6)
           .as("sim"))
   }
 
@@ -853,7 +854,7 @@ object Ann {
       element_at(col(s"qt_$s"), element_at(col("codes"), s + 1) + 1))
       .reduce(_ + _)
     val ranked = enc.join(broadcast(q), col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"), round(dist, 6).as("adc_dist"))
+      .select(col("qid"), col("vid"), roundHalfAway(dist, 6).as("adc_dist"))
     val win = Window.partitionBy(col("qid"))
       .orderBy(col("adc_dist").asc, col("vid").asc)
     ranked.withColumn("rank", row_number().over(win))
@@ -896,7 +897,7 @@ object Ann {
       .reduce(_ + _)
     val cand = enc.join(broadcast(q), Seq("cell"))
       .filter(col("qid") =!= col("vid"))
-      .select(col("qid"), col("vid"), round(dist, 6).as("adc_dist"))
+      .select(col("qid"), col("vid"), roundHalfAway(dist, 6).as("adc_dist"))
     val win = Window.partitionBy(col("qid"))
       .orderBy(col("adc_dist").asc, col("vid").asc)
     cand.withColumn("rank", row_number().over(win))
@@ -915,7 +916,7 @@ object Ann {
       .select(col("id_a"), col("id_b"),
         (dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cos"))
       .filter(col("cos") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cos"), 6).as("cosine"))
+      .select(col("id_a"), col("id_b"), roundHalfAway(col("cos"), 6).as("cosine"))
   }
 
   /** Semantic deduplication, SemDeDup-shaped (Abbas et al. 2023,
@@ -953,7 +954,7 @@ object Ann {
       col("v").as("vb"), col("nrm").as("nb"))
     a.join(b, Seq("cell")).filter(col("id_a") < col("id_b"))
       .select(col("cell"), col("id_a"), col("id_b"),
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
+        roundHalfAway(dot(col("va"), col("vb")) / (col("na") * col("nb")), 6)
           .as("cos"))
       .filter(col("cos") >= threshold)
       .groupBy(col("id_b").as("doc"))
@@ -990,7 +991,7 @@ object Ann {
       .withColumn("cell", cellOf(cents, col("iv")))
     inP.join(cIdx, Seq("cell"))
       .select(col("in_id"), col("corpus_id"), col("cell"),
-        round(dot(col("iv"), col("cv")) / (col("inrm") * col("cn")), 6)
+        roundHalfAway(dot(col("iv"), col("cv")) / (col("inrm") * col("cn")), 6)
           .as("cosine"))
       .filter(col("cosine") >= threshold)
   }

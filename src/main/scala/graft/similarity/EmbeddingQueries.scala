@@ -3,6 +3,7 @@ package graft.similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
+import graft.functions.Rounding.roundHalfAway
 
 /** Embedding-column transformations a training-data pipeline needs
   * beyond similarity search: per-group centroids (class prototypes /
@@ -25,7 +26,7 @@ object EmbeddingQueries {
           posexplode(col("embedding").cast("array<double>"))
             .as(Seq("pos", "x")))
         .groupBy(col("label"), col("pos"))
-        .agg(round(avg(col("x")), 4).as("c"))),
+        .agg(roundHalfAway(avg(col("x")), 4).as("c"))),
     // Per-vector min-max scalar quantization to [0, 255]; the output is
     // the integer checksum per vector (exact in both engines — no
     // float comparison at all). Degenerate constant vectors quantize
@@ -40,7 +41,7 @@ object EmbeddingQueries {
       ex.join(stats.hint("shuffle_hash"), Seq("vec_id"))
         .select(col("vec_id"),
           when(col("mx") > col("mn"),
-            round((col("x") - col("mn")) / (col("mx") - col("mn")) * 255)
+            roundHalfAway((col("x") - col("mn")) / (col("mx") - col("mn")) * 255)
               .cast("long"))
             .otherwise(0L).as("q"))
         .groupBy(col("vec_id"))
@@ -55,9 +56,9 @@ object EmbeddingQueries {
       Tables.embeddings(s, dir)
         .select(col("vec_id"),
           size(filter(v, x => x > 0)).as("n_pos"),
-          round(aggregate(v, lit(0.0), (acc, x) => acc + abs(x)), 4)
+          roundHalfAway(aggregate(v, lit(0.0), (acc, x) => acc + abs(x)), 4)
             .as("l1"),
-          round(array_max(transform(v, x => abs(x))), 4).as("max_abs"))
+          roundHalfAway(array_max(transform(v, x => abs(x))), 4).as("max_abs"))
     }),
     // Pairwise cosine between per-label centroids (class-prototype
     // confusion structure). Built on the ROUNDED centroid vectors —
@@ -72,7 +73,7 @@ object EmbeddingQueries {
           posexplode(col("embedding").cast("array<double>"))
             .as(Seq("pos", "x")))
         .groupBy(col("label"), col("pos"))
-        .agg(round(avg(col("x")), 4).as("c"))
+        .agg(roundHalfAway(avg(col("x")), 4).as("c"))
       val v = cent.groupBy(col("label"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("c")))),
           s => s.getField("c")).as("vec"))
@@ -80,7 +81,7 @@ object EmbeddingQueries {
       val b = v.select(col("label").as("label_b"), col("vec").as("vb"))
       a.join(b, col("label_a") < col("label_b"))
         .select(col("label_a"), col("label_b"),
-          round(Ann.cosine(col("va"), col("vb")), 6).as("cosine"))
+          roundHalfAway(Ann.cosine(col("va"), col("vb")), 6).as("cosine"))
     }),
     // Sparse random projection (Achlioptas '03 / Johnson–Lindenstrauss):
     // project 64-dim embeddings onto K=8 axes with entries drawn from
@@ -98,7 +99,7 @@ object EmbeddingQueries {
       val v = slice(col("embedding").cast("array<double>"), 1, D)
       val outs = (0 until K).map { k =>
         val signs = array((0 until D).map(j => lit(Jl.sign(j, k, K))): _*)
-        round(
+        roundHalfAway(
           aggregate(
             transform(v, (x, i) => x * element_at(signs, i + 1)),
             lit(0.0), (acc, x) => acc + x) * math.sqrt(3.0 / K),

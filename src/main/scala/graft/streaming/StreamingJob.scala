@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 import graft.io.Scratch
+import graft.functions.Rounding.roundHalfAway
 
 /** Structured-Streaming surface of the engine (SURVEY.md §2.8–§2.9).
   *
@@ -765,7 +766,7 @@ object StreamingJob {
       val delta = batch.select(lit(null).cast("long").as("a"),
         lit(null).cast("long").as("b"),
         longIdOrFail(col(id), "keeper-maintenance delta").as("doc"),
-        round(graft.text.Text.qualityScore(col(text)), 6).as("q"))
+        roundHalfAway(graft.text.Text.qualityScore(col(text)), 6).as("q"))
       edges.unionByName(delta)
     }
     // explicit schema: an all-empty stream leaves a keeper table with
@@ -897,7 +898,7 @@ object StreamingJob {
     s.read.format("statestore").load(s"$dir/ckpt")
       .select(col("key.value").as("id_usuario"),
         col("value.groupState._1").as("n_aprovadas"),
-        round(col("value.groupState._2"), 2).as("total_aprovado"))
+        roundHalfAway(col("value.groupState._2"), 2).as("total_aprovado"))
   }
 
   /** [[runningUserTotals]] re-expressed on the Spark 4 arbitrary-state

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.Tables
 import graft.etl.{ScoringPipeline, TestdataAdapter}
 import graft.io.Scratch
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver-contract registrations exercising the streaming engine
   * (S4, T1–T3, W3) and the JSON decode path (P2) — each checked
@@ -31,9 +32,10 @@ object StreamingQueries {
       col("modalidade_pagamento"),
       date_trunc("second", col("data_horario")).as("data_horario"),
       col("valor_transacao"),
-      round(col("t5_score"), 6).as("t5_score"), col("t6_score"),
-      round(col("t7_score"), 6).as("t7_score"),
-      round(col("score_medio"), 6).as("score_medio"),
+      roundHalfAway(col("t5_score"), 6).as("t5_score"), col("t6_score"),
+      roundHalfAway(col("t7_score"), 6).as("t7_score"),
+      // + 0.0 as in the oracle's scored base: a -0.0 product reads +0.0
+      roundHalfAway(col("score_medio") + 0.0, 6).as("score_medio"),
       col("score_aprovado"), col("saldo_aprovado"), col("limite_aprovado"),
       col("transacao_aprovada"))
     StreamingJob.runToParquet(shaped, Scratch.dir("s4_sink"))
@@ -46,7 +48,7 @@ object StreamingQueries {
   private def streamRollup(s: SparkSession, dir: String): DataFrame = {
     val agg = Tables.eventsStream(s, dir)
       .groupBy(window(col("ts"), "1 hour"))
-      .agg(count(lit(1)).as("n"), round(avg(col("value")), 4).as("avg_value"))
+      .agg(count(lit(1)).as("n"), roundHalfAway(avg(col("value")), 4).as("avg_value"))
     StreamingJob.runToMemory(agg, mode = "complete")
       .select(col("window.start").as("hora"), col("n"), col("avg_value"))
   }
@@ -108,7 +110,7 @@ object StreamingQueries {
     finals.orderBy(col("es_key").desc, col("doc_id")).limit(k)
       .join(Tables.documents(s, dir), Seq("doc_id"))
       .select(col("doc_id"), col("lang"), col("n_chars"),
-        round(col("es_key"), 9).as("es_key"))
+        roundHalfAway(col("es_key"), 9).as("es_key"))
   }
 
   /** Stream–stream inner interval join (beyond the reference's
@@ -183,13 +185,13 @@ object StreamingQueries {
     */
   private def streamHopping(s: SparkSession, dir: String): DataFrame = {
     // exact-DECIMAL sum, not avg: 2-decimal sums over counts like 40
-    // divide to true decimal half-boundaries (x.xxx75), where the two
-    // engines' double round() algorithms legitimately disagree —
+    // divide to true decimal half-boundaries (x.xxx75), which a double
+    // holds only approximately, so its last bit picks the rounding —
     // decimal money math is reassociation- AND rounding-proof
     val agg = Tables.eventsStream(s, dir)
       .groupBy(window(col("ts"), "2 hours", "1 hour"))
       .agg(count(lit(1)).as("n"),
-        round(sum(col("value").cast("decimal(18,2)")), 2).cast("double")
+        roundHalfAway(sum(col("value").cast("decimal(18,2)")), 2).cast("double")
           .as("total_value"))
     StreamingJob.runToMemory(agg, mode = "complete")
       .select(col("window.start").as("hora"), col("n"), col("total_value"))
@@ -269,7 +271,7 @@ object StreamingQueries {
       incoming, corpus, "doc_id", "text", n = 3, threshold = 0.8)
     StreamingJob.runToMemory(flagged, mode = "append")
       .select(col("in_doc"), col("corpus_doc"),
-        round(col("jaccard"), 6).as("jaccard"))
+        roundHalfAway(col("jaccard"), 6).as("jaccard"))
       .distinct()
   }
 
@@ -322,7 +324,7 @@ object StreamingQueries {
         docs.filter(col("doc_id") >= 200), docs.filter(col("doc_id") < 200),
         "doc_id", "text", n = 3, threshold = 0.8, Scratch.dir("s16"))
       .select(col("in_doc"), col("corpus_doc"),
-        round(col("jaccard"), 6).as("jaccard"))
+        roundHalfAway(col("jaccard"), 6).as("jaccard"))
   }
 
   /** The scored, approved-flag-filtered keyed transaction stream the
@@ -351,7 +353,7 @@ object StreamingQueries {
       .groupBy(col("id_usuario"))
       .agg(max(struct(col("n_aprovadas"), col("total_aprovado"))).as("m"))
       .select(col("id_usuario"), col("m.n_aprovadas").as("n_aprovadas"),
-        round(col("m.total_aprovado"), 2).as("total_aprovado"))
+        roundHalfAway(col("m.total_aprovado"), 2).as("total_aprovado"))
   }
 
   /** Streaming dedup with bounded state: the source is unioned with
@@ -372,7 +374,7 @@ object StreamingQueries {
     StreamingJob.runToMemory(deduped, mode = "append")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        round(sum(col("value").cast("decimal(18,2)")), 2).cast("double")
+        roundHalfAway(sum(col("value").cast("decimal(18,2)")), 2).cast("double")
           .as("total_value"))
   }
 
@@ -437,7 +439,7 @@ object StreamingQueries {
     // docs over the threshold pass; the drained admitted set equals
     // the batch filter, which is the oracle
     "s23_stream_quality_gate" -> ((s, dir) => {
-      val q6 = round(graft.text.QualityModel.score(col("text")), 6)
+      val q6 = roundHalfAway(graft.text.QualityModel.score(col("text")), 6)
       val admitted = Tables.documentsStream(s, dir)
         .select(col("doc_id"), q6.as("clf_quality"))
         .filter(col("clf_quality") > 0.5)
@@ -595,7 +597,7 @@ object StreamingQueries {
         .withColumn("k", from_json(col("props"),
           StructType(Seq(StructField("k", IntegerType)))).getField("k"))
         .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(avg(col("k")), 4).as("avg_k"))),
+        .agg(count(lit(1)).as("n"), roundHalfAway(avg(col("k")), 4).as("avg_k"))),
     // P2 through Spark 4's VARIANT type: parse once into the binary
     // semi-structured encoding, extract typed fields lazily — the
     // schema-on-read path for JSON payloads whose shape isn't known
@@ -607,7 +609,7 @@ object StreamingQueries {
         .select(col("event_type"),
           expr("variant_get(v, '$.k', 'int')").as("k"))
         .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), round(avg(col("k")), 4).as("avg_k"))))
+        .agg(count(lit(1)).as("n"), roundHalfAway(avg(col("k")), 4).as("avg_k"))))
 
   val oracleSql: Map[String, String] = Map(
     // replays semanticAdmission batch-side: corpus-seeded centroids

@@ -3,6 +3,7 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.io.PersistedTable
+import graft.functions.Rounding.roundHalfAway
 
 /** BM25 retrieval over the corpus: score documents against a query-term
   * set through an inverted-index join, top-k per term through the native
@@ -176,7 +177,7 @@ object Bm25 {
       .join(broadcast(df), "term")
       .withColumn("idf",
         log(lit(1.0) + (lit(n) - col("qdf") + lit(0.5)) / (col("qdf") + lit(0.5))))
-      .withColumn("score", round(
+      .withColumn("score", roundHalfAway(
         col("idf") * col("tf") * (lit(K1) + 1.0) /
           (col("tf") + lit(K1) * (lit(1.0) - lit(B) +
             lit(B) * col("dl") / lit(avgdl))), 6))
@@ -315,7 +316,7 @@ object Bm25 {
     val df = matched.groupBy("term").agg(count(lit(1)).as("qdf"))
     val contrib = matched
       .join(broadcast(df), "term")
-      .withColumn("c", round(
+      .withColumn("c", roundHalfAway(
         log(lit(1.0) + (lit(n) - col("qdf") + 0.5) / (col("qdf") + 0.5)) *
           col("tf") * (lit(K1) + 1.0) /
           (col("tf") + lit(K1) * (lit(1.0) - lit(B) +
@@ -329,7 +330,7 @@ object Bm25 {
     // (qid, doc) aggregate
     val scored = contrib.join(broadcast(qTerms), "term")
       .groupBy(col("qid"), col("doc_id"))
-      .agg(round(sum(col("c")), 6).as("score"),
+      .agg(roundHalfAway(sum(col("c")), 6).as("score"),
         count(lit(1)).as("n_shared"))
     // the native plan-node cut: identical semantics to
     // operators.TopK (differentially pinned there), but rows stay
@@ -356,7 +357,7 @@ object Bm25 {
       .join(broadcast(q), "term")
       .withColumn("idf",
         log(lit(1.0) + (lit(n) - col("qdf") + lit(0.5)) / (col("qdf") + lit(0.5))))
-      .withColumn("score", round(
+      .withColumn("score", roundHalfAway(
         col("idf") * col("tf") * (lit(K1) + 1.0) /
           (col("tf") + lit(K1) * (lit(1.0) - lit(B) +
             lit(B) * col("dl") / lit(avgdl))), 6))

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** DSIR — Data Selection via Importance Resampling (Xie et al.,
   * arXiv:2302.03169): pick pretraining documents whose n-gram
@@ -82,7 +83,7 @@ object Dsir {
     * `round(ln((c + α) / (T + α·B)) · 1e6)` as a long.
     */
   private def lqUnder(c: Column, total: Long): Column =
-    round(log((coalesce(c, lit(0L)) + Alpha) /
+    roundHalfAway(log((coalesce(c, lit(0L)) + Alpha) /
       (lit(total) + Alpha * Buckets)) * LangModel.Q, 0).cast("long")
 
   /** Importance weights for every pool doc: one row per doc with
@@ -114,7 +115,7 @@ object Dsir {
       .select(col("doc_id"), col("n_bigrams"),
         (col("sum_lq_t") - col("sum_lq_s")).as("w_q"))
       .withColumn("logratio", when(col("n_bigrams") > 0,
-        round((col("w_q") / col("n_bigrams")) / LangModel.Q, 6)))
+        roundHalfAway((col("w_q") / col("n_bigrams")) / LangModel.Q, 6)))
   }
 
   /** Derived-uniform grain for the Gumbel noise. */
@@ -128,7 +129,7 @@ object Dsir {
     val h = conv(substring(md5(col(idCol).cast("string")), 1, 8), 16, 10)
       .cast("long") % HashGrain
     val u = (h + 0.5) / HashGrain
-    round(col("w_q") / LangModel.Q + -log(-log(u)), 6)
+    roundHalfAway(col("w_q") / LangModel.Q + -log(-log(u)), 6)
   }
 
   /** Gumbel-top-k resample: `k` docs drawn (without replacement)

@@ -1,7 +1,8 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** The Gopher / MassiveText quality-rule battery (Rae et al.,
   * arXiv:2112.11446, table A1) — the de-facto standard heuristic
@@ -36,8 +37,6 @@ object Gopher {
   val StopWords = Seq("the", "be", "to", "of", "and", "that", "have", "with")
   val MinStopHits = 2
 
-  private def r6(c: Column): Column = round(c, 6)
-
   /** Per-doc rule report: the measured statistics (ratios rounded to
     * 6), one boolean per rule, and the conjunction `keep`. Totality:
     * token-free docs fail the word-count, mean-length, alpha and
@@ -67,11 +66,11 @@ object Gopher {
       array(StopWords.map(lit): _*), w => array_contains(ltoks, w)))
       .cast("long")
 
-    val meanLen = when(words > 0, r6(chars / words))
-    val symbolRatio = when(words > 0, r6(symbols / words))
-    val bulletRatio = r6(bulletLines / nLines) // nLines ≥ 1 always
-    val ellipsisRatio = r6(ellipsisLines / nLines)
-    val alphaRatio = when(words > 0, r6(alphaWords / words))
+    val meanLen = when(words > 0, roundHalfAway(chars / words, 6))
+    val symbolRatio = when(words > 0, roundHalfAway(symbols / words, 6))
+    val bulletRatio = roundHalfAway(bulletLines / nLines, 6) // nLines ≥ 1 always
+    val ellipsisRatio = roundHalfAway(ellipsisLines / nLines, 6)
+    val alphaRatio = when(words > 0, roundHalfAway(alphaWords / words, 6))
 
     val passWords = words >= MinWords && words <= MaxWords
     val passMeanLen = coalesce(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.io.Scratch
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver-contract registrations for the round-7 retrieval/cleaning/
   * training extensions:
@@ -159,7 +160,7 @@ object HybridQueries {
       val (w0, b0) = QualityModel.train(docs, "text", TrainSteps, TrainLr)
       QualityModel.saveModel(s, w0, b0, m)
       val (w, b) = QualityModel.loadModel(s, m)
-      val q6 = round(QualityModel.scoreWith(col("text"), w, b), 6)
+      val q6 = roundHalfAway(QualityModel.scoreWith(col("text"), w, b), 6)
       docs.select(col("doc_id"), q6.as("clf_quality"),
         (q6 > 0.5).as("clf_keep"))
     }),

@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** CCNet-style n-gram language-model perplexity filtering: train a
   * bigram LM with add-one smoothing on a REFERENCE corpus, persist it
@@ -108,9 +109,9 @@ object LangModel {
     * expression.
     */
   private[text] def termMicroNats(c12: Column, c1: Column, v: Column): Column = {
-    val seen = round(log((c12 + 1.0) / (c1 + v)) * Q, 0).cast("long")
-    val ctxOnly = round(log(lit(1.0) / (c1 + v)) * Q, 0).cast("long")
-    val unseen = round(log(lit(1.0) / v) * Q, 0).cast("long")
+    val seen = roundHalfAway(log((c12 + 1.0) / (c1 + v)) * Q, 0).cast("long")
+    val ctxOnly = roundHalfAway(log(lit(1.0) / (c1 + v)) * Q, 0).cast("long")
+    val unseen = roundHalfAway(log(lit(1.0) / v) * Q, 0).cast("long")
     when(c12.isNotNull, seen).when(c1.isNotNull, ctxOnly).otherwise(unseen)
   }
 
@@ -136,7 +137,7 @@ object LangModel {
                  contextTotals: Option[DataFrame] = None): DataFrame =
     logLikelihood(docs, idCol, textCol, bigrams, v, contextTotals)
       .withColumn("nll", when(col("n_bigrams") > 0,
-        round((-col("sum_lq") / col("n_bigrams")) / Q, 6)))
+        roundHalfAway((-col("sum_lq") / col("n_bigrams")) / Q, 6)))
       .withColumn("admit", coalesce(col("nll") < threshold, lit(false)))
 
   /** The scoring core: one row PER INPUT DOC of `(doc_id, n_bigrams,

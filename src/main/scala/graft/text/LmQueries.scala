@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.io.Scratch
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver-contract registrations for the [[LangModel]] perplexity
   * family — CCNet-style LM quality filtering (train a bigram LM on a
@@ -148,7 +149,7 @@ object LmQueries {
           sum(col("chars")).cast("long").as("chars_total"))
         .crossJoin(broadcast(tot))
         .select(col("bucket"), col("n_docs"), col("chars_total"),
-          round(col("chars_total") / col("t"), 6).as("share"))
+          roundHalfAway(col("chars_total") / col("t"), 6).as("share"))
     }))
 
   /** Shared DSIR weighting: target model fitted on the `lang = 'en'`

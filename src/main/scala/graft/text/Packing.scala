@@ -4,6 +4,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** Sequence packing and token-budget dataset assembly — the step between
   * a curated corpus and a training run. The reference has no counterpart
@@ -234,7 +235,7 @@ object Packing {
     * Spark and the oracle (tx_quality's hash-match pins round(q, 6)
     * parity on this corpus).
     */
-  private def qKey(q: Column): Column = round(round(q, 6) * 1e6).cast("long")
+  private def qKey(q: Column): Column = roundHalfAway(roundHalfAway(q, 6) * 1e6).cast("long")
 
   /** Per-source token-budget selection, best-quality-first with doc_id
     * tiebreak — equals `filter(cum <= budget)` over
@@ -253,7 +254,7 @@ object Packing {
     // once so the quality/token expressions — typically regex-heavy —
     // run ONE corpus pass, not three. ~40 bytes/row, disk-spillable.
     val base = docs.select(col(srcCol).as("source"), col(idCol).as("doc_id"),
-      round(quality, 6).as("q6"), col(tokCol).cast("long").as("n_tokens"))
+      roundHalfAway(quality, 6).as("q6"), col(tokCol).cast("long").as("n_tokens"))
       .withColumn("qk", qKey(col("q6")))
       .localCheckpoint()
 

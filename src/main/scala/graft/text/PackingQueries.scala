@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.io.Scratch
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver-contract registrations for the assembly layer between a
   * curated corpus and a training run: sequence packing, token-budget
@@ -127,7 +128,7 @@ object PackingQueries {
 
     // Model-based quality scoring: hashed-linear classifier, map-only
     "tx_quality_model" -> ((s, dir) => {
-      val q6 = round(QualityModel.score(col("text")), 6)
+      val q6 = roundHalfAway(QualityModel.score(col("text")), 6)
       Tables.documents(s, dir).select(col("doc_id"),
         q6.as("clf_quality"), (q6 > 0.5).as("clf_keep"))
     }))

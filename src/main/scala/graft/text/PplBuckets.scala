@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** CCNet-style perplexity bucketing: split a scored corpus into
   * head / middle / tail by cumulative CHARACTER share of the
@@ -44,7 +45,7 @@ object PplBuckets {
   /** Quantize `nll` to its clamped milli-nat bin (null-preserving). */
   def binned(scored: DataFrame): DataFrame =
     scored.withColumn("bin", when(col("nll").isNotNull,
-      least(greatest(round(col("nll") * BinPerNat, 0), lit(0.0)),
+      least(greatest(roundHalfAway(col("nll") * BinPerNat, 0), lit(0.0)),
         lit(MaxBin.toDouble)).cast("int")))
 
   /** The two cutoff bins `(b1, b2)`: smallest bins whose cumulative

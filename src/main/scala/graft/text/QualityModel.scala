@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** Model-based quality scoring: a fastText-shaped linear classifier
   * over a hashed bag-of-words — the shape of the "quality classifier"
@@ -69,9 +70,6 @@ object QualityModel {
     val z = when(size(toks) > 0, lit(bias) + pooled).otherwise(lit(bias))
     lit(1.0) / (lit(1.0) + exp(-z))
   }
-
-  private def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Persist a trained model — the classifier ARTIFACT the curation
     * pipeline ships from the train job to every scoring job (the
@@ -183,7 +181,7 @@ object QualityModel {
         transform(col("tk"), s => element_at(wLit, s + 1)),
         lit(0.0), (acc, x) => acc + x) / size(col("tk"))
       val stepped = base.select(col("tk"), size(col("tk")).as("n"),
-        (round(lit(1.0) / (lit(1.0) + exp(-z)), 6) - col("y")).as("err"))
+        (roundHalfAway(lit(1.0) / (lit(1.0) + exp(-z)), 6) - col("y")).as("err"))
       // ONE action per step: the bias gradient rides the slot-keyed
       // aggregate as sentinel slot -1 (one per-doc row, g =
       // round(err, 6) — exactly the former separate bias aggregate).
@@ -192,16 +190,16 @@ object QualityModel {
       // the two-action form the oracle replays.
       val grads = stepped
         .select(explode(col("tk")).as("slot"),
-          round(col("err") / col("n"), 6).as("g"))
+          roundHalfAway(col("err") / col("n"), 6).as("g"))
         .unionByName(stepped.select(lit(-1).as("slot"),
-          round(col("err"), 6).as("g")))
+          roundHalfAway(col("err"), 6).as("g")))
         .groupBy(col("slot"))
         .agg(sum(col("g")).as("grad"))
         .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
       val bGrad = grads.getOrElse(-1, 0.0)
       w = w.indices.map(j =>
-        round6(w(j) - lr * grads.getOrElse(j, 0.0) / nDocs))
-      b = round6(b - lr * bGrad / nDocs)
+        roundHalfAway(w(j) - lr * grads.getOrElse(j, 0.0) / nDocs, 6))
+      b = roundHalfAway(b - lr * bGrad / nDocs, 6)
     }
     (w, b)
   }

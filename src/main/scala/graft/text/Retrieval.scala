@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** Hybrid retrieval — fusing a lexical ranking (BM25) with a vector
   * ranking (embedding cosine) by Reciprocal Rank Fusion (Cormack,
@@ -62,6 +63,6 @@ object Retrieval {
     graft.operators.TopK.topKPerKey(fused, keys = Seq("qid"),
         orderCols = Seq("rrf_raw" -> false, "doc" -> true), k = k)
       .select(col("qid"), col("doc"), col("lex_rank"), col("vec_rank"),
-        round(col("rrf_raw"), 6).as("rrf"), col("rank"))
+        roundHalfAway(col("rrf_raw"), 6).as("rrf"), col("rank"))
   }
 }

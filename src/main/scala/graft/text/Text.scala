@@ -2,6 +2,7 @@ package graft.text
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.Rounding.roundHalfAway
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * tokenization, language-ID (stopword-marker heuristic), quality
@@ -166,7 +167,7 @@ object Text {
       .join(org.apache.spark.sql.functions.broadcast(vocab))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_bigrams"),
-        round(avg(log((col("c12") + 1.0) / (col("c1") + col("v")))), 6)
+        roundHalfAway(avg(log((col("c12") + 1.0) / (col("c1") + col("v")))), 6)
           .as("avg_logp"))
   }
 
@@ -201,7 +202,7 @@ object Text {
       .join(broadcast(uni.select(col("w").as("b"), col("cw").as("cb"))), Seq("b"))
       .join(broadcast(tot))
       .select(concat_ws(" ", col("a"), col("b")).as("bigram"), col("n"),
-        round(log((col("n").cast("double") / col("bt")) /
+        roundHalfAway(log((col("n").cast("double") / col("bt")) /
           ((col("ca") / col("t")) * (col("cb") / col("t")))), 4).as("pmi"))
       .orderBy(col("pmi").desc, col("bigram").asc)
       .limit(topN)
@@ -264,7 +265,7 @@ object Text {
     val scored = tf.join(dfT, "term")
       .join(org.apache.spark.sql.functions.broadcast(n))
       .select(col("doc_id"), col("term"),
-        round(col("tf") * (log((col("n_docs") + 1.0) / (col("df_t") + 1.0))
+        roundHalfAway(col("tf") * (log((col("n_docs") + 1.0) / (col("df_t") + 1.0))
           + 1.0), 6).as("tfidf"))
     graft.operators.TopK.topKPerKey(scored, Seq("doc_id"),
       Seq("tfidf" -> false, "term" -> true), k)
@@ -296,10 +297,10 @@ object Text {
       .select(col(idCol),
         size(col("__toks")).as("n_tokens"),
         when(triTotal > 0,
-          round((triTotal - triDistinct).cast("double") / triTotal, 6))
+          roundHalfAway((triTotal - triDistinct).cast("double") / triTotal, 6))
           .otherwise(0.0).as("dup_trigram_frac"),
         when(size(col("__toks")) > 0,
-          round(topCount.cast("double") / size(col("__toks")), 6))
+          roundHalfAway(topCount.cast("double") / size(col("__toks")), 6))
           .otherwise(0.0).as("top_word_frac"))
   }
 

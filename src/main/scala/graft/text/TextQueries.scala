@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.io.Scratch
+import graft.functions.Rounding.roundHalfAway
 
 /** Driver-contract registrations for the text-analysis operators over
   * the `documents` table, each with a DuckDB oracle that re-derives the
@@ -20,8 +21,8 @@ object TextQueries {
       d.select(
         col("doc_id"),
         Text.tokenCount(col("text")).as("n_tokens"),
-        round(Text.punctRatio(col("text")), 6).as("punct_ratio"),
-        round(Text.stopwordRatio(col("text")), 6).as("stopword_ratio"))
+        roundHalfAway(Text.punctRatio(col("text")), 6).as("punct_ratio"),
+        roundHalfAway(Text.stopwordRatio(col("text")), 6).as("stopword_ratio"))
     }),
     "tx_lang_id" -> ((s, dir) => {
       val d = Tables.documents(s, dir)
@@ -33,7 +34,7 @@ object TextQueries {
     "tx_quality" -> ((s, dir) =>
       Tables.documents(s, dir).select(
         col("doc_id"),
-        round(Text.qualityScore(col("text")), 6).as("quality"))),
+        roundHalfAway(Text.qualityScore(col("text")), 6).as("quality"))),
     "tx_fingerprint" -> ((s, dir) =>
       Tables.documents(s, dir).select(
         col("doc_id"), Text.fingerprint(col("text")).as("fp"))),
@@ -49,7 +50,7 @@ object TextQueries {
         .select(col("doc_id"), posexplode(Text.tokens(col("text")))
           .as(Seq("pos", "w")))
         .groupBy(col("w"))
-        .agg(count(lit(1)).as("n"), round(avg(col("pos")), 4).as("avg_pos"))),
+        .agg(count(lit(1)).as("n"), roundHalfAway(avg(col("pos")), 4).as("avg_pos"))),
     // Suffix-stripping stem frequencies (lowercased tokens)
     "tx_stem_freq" -> ((s, dir) =>
       Tables.documents(s, dir)
@@ -84,10 +85,10 @@ object TextQueries {
       wf.withColumn("rank",
           row_number().over(Window.orderBy(col("n").desc, col("w").asc)))
         .agg(count(lit(1)).as("n_words"),
-          round(regr_slope(log(col("n")), log(col("rank"))), 4).as("slope"),
-          round(regr_intercept(log(col("n")), log(col("rank"))), 4)
+          roundHalfAway(regr_slope(log(col("n")), log(col("rank"))), 4).as("slope"),
+          roundHalfAway(regr_intercept(log(col("n")), log(col("rank"))), 4)
             .as("intercept"),
-          round(corr(log(col("n")), log(col("rank"))), 4).as("r"))
+          roundHalfAway(corr(log(col("n")), log(col("rank"))), 4).as("r"))
     }),
     // Gopher-style repetition filters: duplicate-trigram fraction and
     // top-word mass per document, map-only (no shuffle at any scale)
@@ -100,7 +101,7 @@ object TextQueries {
         Text.tokenCount(col("text")).as("n_ws"),
         Text.bpeTokenCount(col("text")).as("n_bpe"),
         when(Text.tokenCount(col("text")) > 0,
-          round(Text.bpeTokenCount(col("text")).cast("double") /
+          roundHalfAway(Text.bpeTokenCount(col("text")).cast("double") /
             Text.tokenCount(col("text")), 6)).otherwise(0.0)
           .as("bpe_per_word"))),
     // Quality-weighted downsampling — the data-mixing step: keep each
@@ -117,7 +118,7 @@ object TextQueries {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_total"),
           sum(col("keep").cast("long")).as("n_kept"),
-          round(avg(when(col("keep"), q)), 6).as("kept_avg_quality"))
+          roundHalfAway(avg(when(col("keep"), q)), 6).as("kept_avg_quality"))
     }),
     // Temperature-scaled source mixing (T=2, the multilingual
     // sqrt-scaling rebalance): target proportions ∝ share^(1/T), so
@@ -141,7 +142,7 @@ object TextQueries {
         .groupBy(col("source"))
         .agg(count(lit(1)).as("n_total"),
           sum(col("keep").cast("long")).as("n_kept"),
-          round(max(col("acc")), 6).as("acc_rate"))
+          roundHalfAway(max(col("acc")), 6).as("acc_rate"))
     }),
     // Per-slice epoch materialization — the upsampling dual of
     // sample_temperature_mix: that query SUBSAMPLES big slices toward
@@ -270,8 +271,8 @@ object TextQueries {
             .as("clean_docs"),
           sum(col("repl")).as("repl_chars"),
           sum(col("ctrl")).as("ctrl_chars"),
-          round(avg(col("na")), 6).as("avg_nonascii"),
-          round(avg(col("dg")), 6).as("avg_digit"))
+          roundHalfAway(avg(col("na")), 6).as("avg_nonascii"),
+          roundHalfAway(avg(col("dg")), 6).as("avg_digit"))
     }),
     // BPE tokenizer TRAINING: learn the merge table from the corpus
     // (one corpus pass builds the weighted word vocabulary; merge
@@ -434,7 +435,7 @@ object TextQueries {
         .groupBy(col("split"), col("lang"))
         .agg(count(lit(1)).as("n_tokens"),
           sum(when(col("in_vocab").isNull, 1L).otherwise(0L)).as("n_oov"),
-          round(sum(when(col("in_vocab").isNull, 1.0).otherwise(0.0)) /
+          roundHalfAway(sum(when(col("in_vocab").isNull, 1.0).otherwise(0.0)) /
             count(lit(1)), 6).as("oov_rate"),
           countDistinct(when(col("in_vocab").isNull, col("w")))
             .as("oov_types"))

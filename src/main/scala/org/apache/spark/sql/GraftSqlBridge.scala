@@ -1,15 +1,17 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the `private[sql]` Dataset constructor so the graft
   * library can materialize a DataFrame from a custom [[LogicalPlan]]
   * node (the (c)-tier extension path: logical node + planner strategy +
-  * physical exec), and into the `private[spark]` listener bus for
-  * [[graft.Census]]. This is the standard technique Spark-extension
-  * libraries use — one object in `org.apache.spark.sql`, nothing else
-  * reaches into internals.
+  * physical exec), into the column/expression conversions for the
+  * native expressions of `graft.functions`, and into the
+  * `private[spark]` listener bus for [[graft.Census]]. This is the
+  * standard technique Spark-extension libraries use — one object in
+  * `org.apache.spark.sql`, nothing else reaches into internals.
   */
 object GraftSqlBridge {
 
@@ -34,6 +36,10 @@ object GraftSqlBridge {
     */
   def reRoot(spark: SparkSession, df: DataFrame): DataFrame =
     ofRows(spark, df.queryExecution.logical)
+
+  /** A Column over a native Catalyst expression, and back. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Wait until the listener bus has delivered every event posted so
     * far; false if `timeoutMs` passed first.

@@ -6,9 +6,10 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One session builder ([[graft.jobs.Jobs]]) and one scratch owner
-  * ([[graft.io.Scratch]], the only reader of the process id): a second
-  * site of either, or a hard-coded temp path, fails here.
+/** One session builder ([[graft.jobs.Jobs]]), one scratch owner
+  * ([[graft.io.Scratch]], the only reader of the process id) and one
+  * rounding rule ([[graft.functions.Rounding]]): a second site of any,
+  * or a hard-coded temp path, fails here.
   */
 class SourceShapeSpec extends AnyFunSuite {
 
@@ -17,6 +18,18 @@ class SourceShapeSpec extends AnyFunSuite {
     .map((p: Path) => root.relativize(p).toString -> Files.readString(p)).toSeq
   private def sitesOf(needle: String): Set[String] =
     sources.collect { case (f, text) if text.contains(needle) => f }.toSet
+
+  /** The Scala code of a source: char and string literals (SQL text,
+    * `expr(...)` arguments) and comments blanked out.
+    */
+  private def codeOnly(text: String): String = text
+    .replaceAll("'(?:\\\\.|[^'\\\\\n])'", "' '")
+    .replaceAll("(?s)\"\"\".*?\"\"\"+", "\"\"")
+    .replaceAll("\"(?:\\\\.|[^\"\\\\\n])*\"", "\"\"")
+    .replaceAll("//[^\n]*", "")
+    .replaceAll("(?s)/\\*.*?\\*/", "")
+  private def codeSites(call: scala.util.matching.Regex): Set[String] =
+    sources.collect { case (f, text) if call.findFirstIn(codeOnly(text)).isDefined => f }.toSet
 
   // also shows the scan found the library: a scan of nothing finds no builder
   test("SparkSession.builder() is called only in Jobs") {
@@ -29,5 +42,13 @@ class SourceShapeSpec extends AnyFunSuite {
 
   test("only Scratch reads the process id") {
     assert(sitesOf("ProcessHandle.current") == Set("graft/io/Scratch.scala"))
+  }
+
+  test("Spark's round and bround are called only through Rounding") {
+    // `round(`, `functions.round(`, `bround(`; not `math.round(`
+    val sparkRound = "(?<![\\w.])b?round\\(|(?<![Mm]ath)\\.b?round\\(".r
+    assert(codeSites(sparkRound) == Set.empty)
+    // the scan sees code: the helper's call sites are found
+    assert(codeSites("roundHalfAway\\(".r).size > 20)
   }
 }

@@ -6,9 +6,14 @@ columns sorted by name, rows sorted, values normalized, then hashed.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [name,name,...]
 """
-import sys, json, glob, os, hashlib
+import sys, json, glob, os, hashlib, threading
 import duckdb
 import pandas as pd
+
+# Wall cap per oracle query, in seconds: about 4x the slowest sf0.1
+# oracle, so only a query that would stall the whole check hits it. A
+# capped query is a failure, never a pass.
+CAP_S = 1200
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
           "orders", "lineitem", "events", "documents", "embeddings"]
@@ -46,11 +51,17 @@ def main(sf_dir, out_dir, only=None):
         files = glob.glob(f"{res_dir}/*.parquet")
         if not files:
             print(f"FAIL {name}: no result parquet"); n_fail += 1; continue
+        timer = threading.Timer(CAP_S, con.interrupt)
         try:
             got = norm(pd.concat([pd.read_parquet(f) for f in files]))
+            timer.start()
             want = norm(con.execute(sql).df())
+        except duckdb.InterruptException:
+            print(f"FAIL {name}: capped after {CAP_S} s (not checked)"); n_fail += 1; continue
         except Exception as e:
             print(f"FAIL {name}: {e}"); n_fail += 1; continue
+        finally:
+            timer.cancel()
         if list(got.columns) != list(want.columns):
             print(f"FAIL {name}: columns {list(got.columns)} != {list(want.columns)}")
             n_fail += 1; continue
