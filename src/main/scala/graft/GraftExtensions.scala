@@ -2,16 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{DotProductDouble, MinhashBandsExpr, MisraGries, MisraGriesAgg, NgramHashesExpr, NormalizeWsExpr, SimHash64Expr, TextHashing, VectorExprs}
 
-/** Catalyst extension point: installs the engine's native expressions
-  * into every session built with
-  * `spark.sql.extensions=graft.GraftExtensions`, making them available
-  * to pure-SQL users (`SELECT graft_dot_d(a, b) ...`) without any
-  * per-session registration call. The library also self-registers
-  * lazily at call sites, so programmatic use works either way.
+/** Catalyst extension point, and the only writer of the function
+  * registry: installs six of the engine's native expressions under SQL
+  * names into every session built with
+  * `spark.sql.extensions=graft.GraftExtensions`, for pure-SQL users
+  * (`SELECT graft_dot_d(a, b) ...`). Programmatic use never needs it:
+  * the Column helpers in `graft.functions` build their expressions
+  * directly (through `GraftSqlBridge.column`), so they work in any
+  * session, and the other native expressions have no SQL name.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -142,7 +142,6 @@ object SketchQueries {
     * "non-trivial overlap", the exact join names the pairs.
     */
   private def decontamOverlap(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextHashing.register(s)
     // one kernel pass: the exploded gram stream feeds BOTH the sketch
     // row and the exact rollup (self-referenced plans get no exchange
     // reuse — same localCheckpoint convention as dedup/Dedup.scala)
@@ -190,7 +189,6 @@ object SketchQueries {
     * partitioning/order-insensitive.
     */
   private def cmsFreq(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.Cms.register(s)
     import graft.functions.Cms
     val ev = Tables.events(s, dir).select(col("event_type"), col("user_id"))
     val sks = ev.agg(

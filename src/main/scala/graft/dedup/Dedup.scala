@@ -104,7 +104,6 @@ object Dedup {
     */
   def decontaminate(df: DataFrame, id: String, text: String,
                     n: Int, maxDf: Option[Int] = None): DataFrame = {
-    graft.functions.TextHashing.register(df.sparkSession)
     val grams = df.select(col(id),
       graft.functions.Binning.knuthBucket(col(id)).as("__b"),
       explode(graft.functions.TextHashing.ngramHashes(col(text), n)).as("g"))
@@ -145,7 +144,6 @@ object Dedup {
     */
   def noveltyProfile(df: DataFrame, id: String, text: String,
                      n: Int): DataFrame = {
-    graft.functions.TextHashing.register(df.sparkSession)
     val grams = df.select(col(id),
       graft.functions.Binning.knuthBucket(col(id)).as("__b"),
       explode(graft.functions.TextHashing.ngramHashes(col(text), n)).as("g"))
@@ -172,7 +170,6 @@ object Dedup {
     */
   private def hashedShingles(df: DataFrame, id: String, text: String,
                              n: Int): DataFrame = {
-    graft.functions.TextHashing.register(df.sparkSession)
     df.select(col(id).as("doc"),
       graft.functions.TextHashing.ngramHashes(col(text), n).as("hs"))
   }
@@ -363,7 +360,6 @@ object Dedup {
                       text: String, n: Int, threshold: Double,
                       numHashes: Int = 128, bands: Int = 32): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    graft.functions.TextHashing.register(corpus.sparkSession)
     val cSh = hashedShingles(corpus, id, text, n).localCheckpoint(true)
     val cIndex = cSh.filter(size(col("hs")) > 0)
       .select(col("doc").as("corpus_doc"),
@@ -688,7 +684,6 @@ object Dedup {
                      bands: Int = 32): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     checkIndexParams(dir, n, numHashes, bands)
-    graft.functions.TextHashing.register(incoming.sparkSession)
     probeSignatures(incoming
       .select(col(id).as("doc"),
         graft.functions.TextHashing.ngramHashes(col(text), n).as("hs"))
@@ -746,7 +741,6 @@ object Dedup {
     require(numHashes % bands == 0, "bands must divide numHashes")
     writeIndexParams(dir, n, numHashes, bands, createOnly = true)
     checkIndexParams(dir, n, numHashes, bands)
-    graft.functions.TextHashing.register(delta.sparkSession)
     val (sh, w) = signedBands(delta, id, text, n, numHashes, bands)
     writeSignedKernel(sh, w, bands,
       s"$dir/shingles/ingest=$batchId", s"$dir/bands/ingest=$batchId",
@@ -1306,7 +1300,6 @@ object Dedup {
     * explode, no shuffle.
     */
   def simhash(df: DataFrame, id: String, text: String): DataFrame = {
-    graft.functions.TextHashing.register(df.sparkSession)
     df.select(col(id).as("doc"),
       graft.functions.TextHashing.simhash64(col(text)).as("simhash"))
   }

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -33,13 +32,6 @@ object BpeMerge {
   val FuncName = "graft_bpe_merge"
   val PairCountsName = "graft_bpe_pair_counts"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FuncName, exprs => BpeMergeExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      PairCountsName, exprs => BpePairCountsExpr(exprs(0)), "built-in")
-  }
-
   /** Column API: adjacent-pair occurrence counts of a symbol array —
     * (a, b, cnt) structs, one per DISTINCT adjacent pair, counted in
     * one JVM pass. The composable form — `arrays_zip` of two `slice`
@@ -48,10 +40,10 @@ object BpeMerge {
     * the aggregate; this emits pre-counted pairs straight from the row
     * (r10: the train loop's per-pass candidate scan is the hot path,
     * and on ~300-symbol piece streams occurrences outnumber distinct
-    * pairs severalfold). Requires [[register]].
+    * pairs severalfold).
     */
   def pairCounts(syms: Column): Column =
-    call_function(PairCountsName, syms)
+    GraftSqlBridge.column(BpePairCountsExpr(GraftSqlBridge.expression(syms)))
 
   /** The counting kernel behind [[pairCounts]]. */
   def countPairs(syms: ArrayData): ArrayData = {
@@ -85,14 +77,14 @@ object BpeMerge {
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  /** Column API; requires [[register]] on the session. `pairsFlat`
-    * must be a LITERAL array column of interleaved
+  /** Column API. `pairsFlat` must be a LITERAL array column of interleaved
     * `[l1, r1, l2, r2, …]` strings (an array, not a map — several
     * pairs may share a left symbol, which a map literal would reject
     * as duplicate keys).
     */
   def mergeBatch(syms: Column, pairsFlat: Column): Column =
-    call_function(FuncName, syms, pairsFlat)
+    GraftSqlBridge.column(BpeMergeExpr(
+      GraftSqlBridge.expression(syms), GraftSqlBridge.expression(pairsFlat)))
 
   /** The scan kernel: one pass, a bounded stack, a rights-set lookup
     * on the running top symbol. Shared by interpreted eval and
@@ -142,15 +134,12 @@ object BpeEncode {
 
   val FuncName = "graft_bpe_encode"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FuncName, exprs => BpeEncodeExpr(exprs(0), exprs(1)), "built-in")
-
-  /** Column API; requires [[register]]. `mergesFlat` must be a LITERAL
-    * interleaved `[l1, r1, l2, r2, …]` array in RANK order.
+  /** Column API. `mergesFlat` must be a LITERAL interleaved
+    * `[l1, r1, l2, r2, …]` array in RANK order.
     */
   def encodeRanked(syms: Column, mergesFlat: Column): Column =
-    call_function(FuncName, syms, mergesFlat)
+    GraftSqlBridge.column(BpeEncodeExpr(
+      GraftSqlBridge.expression(syms), GraftSqlBridge.expression(mergesFlat)))
 
   /** The replay kernel: for each merge in rank order, one greedy
     * left-to-right fusing pass — exactly [[graft.text.Bpe.mergePair]]
@@ -271,10 +260,9 @@ case class BpeMergeExpr(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = BpeMerge.FuncName
 
-  // fail at ANALYSIS, not executor-side: the function is registered in
-  // the session registry, so a stray SQL call with a non-array or
-  // non-literal table must raise an AnalysisException, not a
-  // ClassCastException inside a retried task
+  // fail at ANALYSIS, not executor-side: a non-array or non-literal
+  // table must raise an AnalysisException, not a ClassCastException
+  // inside a retried task
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
     BpeMergeExpr.checkSymsAndTable(prettyName, left, right)

@@ -1,10 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{BinaryType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.sketch.CountMinSketch
@@ -18,18 +17,18 @@ import org.apache.spark.util.sketch.CountMinSketch
   * sketch: stored per-shard/per-day summaries answer later frequency
   * questions without rescanning the fact table.
   *
-  * `graft_cms_estimate(sketch, item)` — estimated occurrence count of
-  * `item`. CMS guarantees estimate ≥ true count ALWAYS (hash
-  * collisions only ever add), and estimate ≤ true + eps·N with
-  * probability ≥ confidence; for a fixed seed the estimate is fully
+  * `estimate(sketch, item)` (`graft_cms_estimate`) — estimated
+  * occurrence count of `item`. CMS guarantees estimate ≥ true count
+  * ALWAYS (hash collisions only ever add), and estimate ≤ true + eps·N
+  * with probability ≥ confidence; for a fixed seed the estimate is fully
   * deterministic and order/partitioning-insensitive (counter matrices
   * are commutative sums), so error-contract booleans are stable
   * run-over-run — the same oracle design as the other sk_* queries.
   *
-  * `graft_cms_merge(a, b)` — the combined sketch (cell-wise counter
-  * sum; requires identical eps/confidence/seed). Merge-then-probe
-  * equals probe-of-whole exactly, which is what makes per-shard
-  * sketches composable after the fact.
+  * `merge(a, b)` (`graft_cms_merge`) — the combined sketch (cell-wise
+  * counter sum; requires identical eps/confidence/seed).
+  * Merge-then-probe equals probe-of-whole exactly, which is what makes
+  * per-shard sketches composable after the fact.
   *
   * Both deserialize per evaluated row (CodegenFallback), which is
   * correct for their contract: probes run on the few-row READ-OUT side
@@ -94,19 +93,11 @@ case class CmsMergeExpr(left: Expression, right: Expression)
 }
 
 object Cms {
-  val EstimateName = "graft_cms_estimate"
-  val MergeName = "graft_cms_merge"
-
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      EstimateName, exprs => CmsEstimateExpr(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MergeName, exprs => CmsMergeExpr(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Column API; requires [[register]] on the session. */
   def estimate(sketch: Column, item: Column): Column =
-    call_function(EstimateName, sketch, item)
+    GraftSqlBridge.column(CmsEstimateExpr(
+      GraftSqlBridge.expression(sketch), GraftSqlBridge.expression(item)))
 
-  def merge(a: Column, b: Column): Column = call_function(MergeName, a, b)
+  def merge(a: Column, b: Column): Column =
+    GraftSqlBridge.column(CmsMergeExpr(
+      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 }

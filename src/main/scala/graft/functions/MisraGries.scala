@@ -4,7 +4,7 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -132,20 +132,13 @@ case class MisraGriesAgg(child: Expression, capacity: Int,
 object MisraGries {
   val FuncName = "graft_misra_gries"
 
-  /** Registry entry (same lazy self-registration pattern as
-    * [[VectorExprs]]); the analyzer wraps the returned
-    * AggregateFunction in an AggregateExpression automatically.
+  /** Sketch column: array<struct<item,lb>> of ≤ capacity candidates.
+    * Built as the aggregate expression itself (the wrapping the
+    * analyzer adds for a SQL call), so it works in any session.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FuncName,
-      exprs => MisraGriesAgg(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-
-  /** Sketch column: array<struct<item,lb>> of ≤ capacity candidates. */
   def sketch(c: Column, capacity: Int): Column =
-    call_function(FuncName, c, lit(capacity))
+    GraftSqlBridge.column(
+      MisraGriesAgg(GraftSqlBridge.expression(c), capacity).toAggregateExpression())
 }
 
 /** Exact heavy hitters at scale: Misra–Gries candidates (one shuffle
@@ -168,7 +161,6 @@ object HeavyHitters {
     */
   def heavyHitters(df: DataFrame, itemCol: String, phi: Double): DataFrame = {
     require(phi >= 1e-4 && phi <= 1, "phi must be in [1e-4, 1]")
-    MisraGries.register(df.sparkSession)
     val capacity = math.max(1, math.ceil(2.0 / phi)).toInt
     val items = df.select(col(itemCol).cast("string").as("item"))
       .filter(col("item").isNotNull)

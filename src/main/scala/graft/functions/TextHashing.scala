@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{call_function, lit}
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -245,40 +244,22 @@ object TextHashing {
   val NormalizeName = "graft_normalize_ws"
   val TermCountsName = "graft_term_counts"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FuncName,
-      exprs => NgramHashesExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      SimhashName, exprs => SimHash64Expr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      MinhashBandsName,
-      exprs => MinhashBandsExpr(exprs(0),
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue(),
-        exprs(3).eval().asInstanceOf[Number].longValue()),
-      "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      NormalizeName, exprs => NormalizeWsExpr(exprs(0)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      TermCountsName, exprs => TermCountsExpr(exprs(0)), "built-in")
-  }
-
-  /** Column API; requires [[register]] on the session. */
   def ngramHashes(text: Column, n: Int): Column =
-    call_function(FuncName, text, lit(n))
+    GraftSqlBridge.column(NgramHashesExpr(GraftSqlBridge.expression(text), n))
 
-  def simhash64(text: Column): Column = call_function(SimhashName, text)
+  def simhash64(text: Column): Column =
+    GraftSqlBridge.column(SimHash64Expr(GraftSqlBridge.expression(text)))
 
   def minhashBands(hashes: Column, numHashes: Int, bands: Int,
                    seed: Long): Column =
-    call_function(MinhashBandsName, hashes, lit(numHashes), lit(bands), lit(seed))
+    GraftSqlBridge.column(MinhashBandsExpr(GraftSqlBridge.expression(hashes),
+      numHashes, bands, seed))
 
-  def normalizeWs(text: Column): Column = call_function(NormalizeName, text)
+  def normalizeWs(text: Column): Column =
+    GraftSqlBridge.column(NormalizeWsExpr(GraftSqlBridge.expression(text)))
 
-  def termCounts(toks: Column): Column = call_function(TermCountsName, toks)
+  def termCounts(toks: Column): Column =
+    GraftSqlBridge.column(TermCountsExpr(GraftSqlBridge.expression(toks)))
 }
 
 /** Expression wrapper for [[TextHashing.termCounts]]. */

@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.unsafe.types.UTF8String
@@ -44,12 +43,8 @@ object UnicodeNorm {
 
   val FuncName = "graft_nfc"
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FuncName, exprs => NfcNormalizeExpr(exprs(0)), "built-in")
-
-  /** Column API; requires [[register]] on the session. */
-  def nfc(text: Column): Column = call_function(FuncName, text)
+  def nfc(text: Column): Column =
+    GraftSqlBridge.column(NfcNormalizeExpr(GraftSqlBridge.expression(text)))
 }
 
 /** Expression wrapper for [[UnicodeNorm.nfc]]. */

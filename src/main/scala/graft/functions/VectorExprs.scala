@@ -1,7 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.{Column, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -150,26 +149,21 @@ case class CosineArgmaxCell(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session registration + Column-API surface for the native vector
-  * expressions (registered in the temp function registry; idempotent).
+/** Column-API surface for the native vector expressions: each helper
+  * builds its expression directly, so it works in any session.
   */
 object VectorExprs {
   val DotName = "graft_dot_d"
-  val ArgmaxName = "graft_argmax_cos"
 
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      DotName, exprs => DotProductDouble(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      ArgmaxName, exprs => CosineArgmaxCell(exprs(0), exprs(1)), "built-in")
-  }
-
-  /** Codegen'd dot product; requires [[register]] on the session. */
-  def dot(a: Column, b: Column): Column = call_function(DotName, a, b)
+  /** Codegen'd dot product. */
+  def dot(a: Column, b: Column): Column =
+    GraftSqlBridge.column(DotProductDouble(
+      GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
   /** Native max-cosine cell id of `v` against a literal centroid
-    * table; requires [[register]] on the session.
+    * table.
     */
   def argmaxCell(v: Column, cents: Column): Column =
-    call_function(ArgmaxName, v, cents)
+    GraftSqlBridge.column(CosineArgmaxCell(
+      GraftSqlBridge.expression(v), GraftSqlBridge.expression(cents)))
 }

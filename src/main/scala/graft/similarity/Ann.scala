@@ -42,7 +42,6 @@ object Ann {
     * once (avoids recomputing norms inside the pairwise kernel).
     */
   private def prepared(corpus: DataFrame, id: String, vec: String): DataFrame = {
-    graft.functions.VectorExprs.register(corpus.sparkSession)
     corpus.select(col(id).as("vid"),
       col(vec).cast("array<double>").as("v"))
       .withColumn("nrm", norm(col("v")))

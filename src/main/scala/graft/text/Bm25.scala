@@ -39,7 +39,6 @@ object Bm25 {
     * the canonical Catalyst chain so terms are byte-identical.
     */
   def postings(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.TextHashing.register(docs.sparkSession)
     docs.select(col(idCol).as("doc_id"),
         Text.tokens(lower(col(textCol))).as("__toks"))
       .withColumn("dl", size(col("__toks")).cast("long"))

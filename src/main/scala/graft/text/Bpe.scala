@@ -68,8 +68,6 @@ object Bpe {
     * expression (O(len) per row; the `aggregate` HOF rebuilds its
     * accumulator array per step — O(len²), measured ~80 s per train
     * on 300-char piece streams where the native walk takes ~1 s).
-    * Callers must [[graft.functions.BpeMerge.register]] the session
-    * ([[trainBatchedFrom]] does).
     */
   def mergePairs(syms: Column, pairs: Seq[(String, String)]): Column = {
     require(pairs.nonEmpty, "empty merge batch")
@@ -103,7 +101,6 @@ object Bpe {
   def train(docs: DataFrame, textCol: String, merges: Int,
             checkpointEvery: Int = 4): (Seq[Merge], DataFrame) = {
     require(merges >= 0, "merges must be non-negative")
-    graft.functions.BpeMerge.register(docs.sparkSession)
     var vocab = wordVocab(docs, textCol)
       .withColumn("syms", initialSymbols(col("w")))
       .localCheckpoint()
@@ -218,7 +215,6 @@ object Bpe {
                        checkpointEvery: Int = 4): (Seq[Merge], DataFrame) = {
     require(merges >= 0, "merges must be non-negative")
     require(batch >= 1, "batch must be positive")
-    graft.functions.BpeMerge.register(units.sparkSession)
     // The loop is sequential-by-nature (each pass's counts depend on
     // the last pass's rewrite), so its wall time is pass-count ×
     // per-pass fixed cost. AQE splits the tiny per-pass aggregate
@@ -228,8 +224,8 @@ object Bpe {
     // SQLConf is isolated (r9 — the previous mutate-and-restore on
     // the shared session raced queries on other threads and
     // interleaved scopes could restore the wrong value), while the
-    // SparkContext, cache and the cloned function registry are
-    // shared, so nothing else about execution changes.
+    // SparkContext and cache are shared, so nothing else about
+    // execution changes.
     val caller = units.sparkSession
     val session = org.apache.spark.sql.GraftSqlBridge.cloneSession(caller)
     session.conf.set("spark.sql.adaptive.enabled", "false")
@@ -382,7 +378,6 @@ object Bpe {
     * depth grows with the merge count. Takes the symbol column
     * directly (callers pick [[initialSymbols]] for word units or
     * [[pieceVocab]]'s marked character stream for piece units).
-    * Callers must [[graft.functions.BpeEncode.register]] the session.
     */
   def encodeRanked(syms: Column, merges: Seq[Merge]): Column = {
     val ordered = merges.sortBy(_.rank)

@@ -217,17 +217,7 @@ object Text {
     * including the leading-tab and VT/\f edges.
     */
   def normalized(text: Column): Column =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      // lazy registration binds to the thread's active session; a
-      // GraftExtensions-built session (incl. its newSession children)
-      // has the function injected regardless. With no active session
-      // to register on, fall back to the composable chain rather than
-      // emit a call that might not resolve at analysis time.
-      case Some(s) =>
-        graft.functions.TextHashing.register(s)
-        graft.functions.TextHashing.normalizeWs(text)
-      case None => normalizedComposable(text)
-    }
+    graft.functions.TextHashing.normalizeWs(text)
 
   /** The composable reference formulation of [[normalized]]. */
   def normalizedComposable(text: Column): Column =

@@ -231,7 +231,6 @@ object TextQueries {
     // agree byte-for-byte (compared as md5, so UTF-16 vs code-point
     // length conventions never enter).
     "tx_unicode_clean" -> ((s, dir) => {
-      graft.functions.UnicodeNorm.register(s)
       val aug = unicodeAugmented
       val cleaned = graft.functions.UnicodeNorm.nfc(
         regexp_replace(aug, CtrlClass, ""))
@@ -363,7 +362,6 @@ object TextQueries {
       require(merges.length == 512,
         s"tx_bpe_encode_full: corpus exhausted merges at " +
           s"${merges.length}/512 — see tx_bpe_train")
-      graft.functions.BpeEncode.register(s)
       val marked = translate(lower(col("text")), " ", Bpe.SpaceMark)
       Tables.documents(s, dir)
         .select(col("doc_id"),

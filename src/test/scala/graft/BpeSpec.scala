@@ -157,7 +157,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("native pairCounts ≡ arrays_zip-of-slices explode, weighted") {
-    graft.functions.BpeMerge.register(spark)
     // repeated pairs within a row ("aaa": (a,a)×2), single-symbol and
     // empty arrays (zero pairs), and unit weights n > 1
     val vocab = Seq(
@@ -195,8 +194,6 @@ class BpeSpec extends SparkSpec {
     // both kernels declare containsNull=false output; a null element
     // flowing through UTF8String.concat would corrupt that silently —
     // the guard turns it into a typed, positioned error at the row
-    graft.functions.BpeMerge.register(spark)
-    graft.functions.BpeEncode.register(spark)
     val nullSyms = Seq(Seq("a", null, "a")).toDF("s")
     val e1 = intercept[Exception] {
       nullSyms.select(Bpe.mergePairs(col("s"), Seq(("a", "a")))).collect()
@@ -221,7 +218,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("mergePairs: one native scan applies a junction-free batch exactly") {
-    graft.functions.BpeMerge.register(spark)
     // self-pair stays greedy; left-shared pairs both fire; an
     // untouched symbol passes through
     val batch = Seq(("a", "a"), ("c", "x"), ("c", "y"))
@@ -258,7 +254,6 @@ class BpeSpec extends SparkSpec {
   }
 
   test("encodeRanked: the native rank-replay equals the nested-fold encode") {
-    graft.functions.BpeEncode.register(spark)
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     // word units at a fold-able table size: the two encodes must agree
     // symbol-for-symbol on every corpus word

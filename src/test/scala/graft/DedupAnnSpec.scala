@@ -83,7 +83,6 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("ngramHashes matches string-shingle formulation (set sizes + overlap)") {
-    TextHashing.register(spark)
     val viaKernel = corpus.select(col("doc_id"),
       size(TextHashing.ngramHashes(col("text"), 3)).as("n"))
       .as[(Long, Int)].collect().toMap
@@ -102,7 +101,6 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("minhashBands kernel: deterministic, band-count sized, empty-safe") {
-    TextHashing.register(spark)
     val df = corpus.select(col("doc_id"),
       TextHashing.minhashBands(
         TextHashing.ngramHashes(col("text"), 3), 128, 32, 7L).as("bh"))
@@ -164,7 +162,6 @@ class DedupAnnSpec extends SparkSpec {
   ).toDF("vec_id", "embedding")
 
   test("native dot product equals fold formulation bit-for-bit") {
-    VectorExprs.register(spark)
     val r = new scala.util.Random(7)
     val data = Seq.fill(50)(
       (Array.fill(64)(r.nextDouble() - 0.5), Array.fill(64)(r.nextDouble() - 0.5)))
@@ -176,7 +173,6 @@ class DedupAnnSpec extends SparkSpec {
   }
 
   test("native argmax cell equals array_max over centSims, ties and NaNs") {
-    VectorExprs.register(spark)
     val r = new scala.util.Random(11)
     val cents: Seq[Seq[Double]] =
       Seq.fill(16)(Seq.fill(8)(r.nextDouble() - 0.5)) ++

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.functions.Skew
+import graft.functions.{BpeEncode, BpeMerge, Cms, MisraGries, Skew, TextHashing, UnicodeNorm, VectorExprs}
 
 /** SparkSessionExtensions-based SQL registration of the native
   * expressions, skew-salting equality, and bucketed co-located joins
@@ -28,6 +28,9 @@ class ExtensionsSpec extends SparkSpec {
       "SELECT size(graft_minhash_bands(graft_ngram_hashes('a b c d e', 2), 128, 32, 7))")
       .collect()(0).getInt(0)
     assert(nBands == 32)
+    val norm = spark.sql("SELECT graft_normalize_ws('  A\tb  C ')")
+      .collect()(0).getString(0)
+    assert(norm == "a b c")
     // injected AGGREGATE function: analyzer wraps it automatically
     val hh = spark.sql(
       """SELECT c.item FROM (
@@ -35,6 +38,45 @@ class ExtensionsSpec extends SparkSpec {
         |  FROM VALUES ('a'),('a'),('a'),('b'),('b'),('z') AS t(w))""".stripMargin)
       .as[String].collect().toSet
     assert(Set("a", "b").subsetOf(hh))
+  }
+
+  test("Column helpers reach their expressions without the function registry") {
+    val row = Seq(("A  b c", Seq(1.0, 2.0), Seq("a", "b", "a", "b")))
+      .toDF("t", "v", "syms")
+    val pairs = typedLit(Seq("a", "b"))
+    val scalars = row.select(
+      VectorExprs.dot(col("v"), col("v")).as("dot"),
+      VectorExprs.argmaxCell(col("v"), typedLit(Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))))
+        .as("cell"),
+      size(TextHashing.ngramHashes(col("t"), 2)).as("grams"),
+      TextHashing.simhash64(col("t")).isNotNull.as("sim"),
+      size(TextHashing.minhashBands(TextHashing.ngramHashes(col("t"), 2), 8, 4, 7L))
+        .as("bands"),
+      TextHashing.normalizeWs(col("t")).as("norm"),
+      size(TextHashing.termCounts(col("syms"))).as("terms"),
+      size(BpeMerge.pairCounts(col("syms"))).as("pc"),
+      BpeMerge.mergeBatch(col("syms"), pairs).as("merged"),
+      BpeEncode.encodeRanked(col("syms"), pairs).as("encoded"),
+      UnicodeNorm.nfc(lit("cafe\u0301")).as("nfc"))
+      .collect()(0)
+    assert(scalars.getDouble(0) == 5.0 && scalars.getInt(1) == 1)
+    assert(scalars.getInt(2) == 2 && scalars.getBoolean(3) && scalars.getInt(4) == 4)
+    assert(scalars.getString(5) == "a b c" && scalars.getInt(6) == 2 &&
+      scalars.getInt(7) == 2)
+    assert(scalars.getSeq[String](8) == Seq("ab", "ab") &&
+      scalars.getSeq[String](9) == Seq("ab", "ab"))
+    assert(scalars.getString(10) == "caf\u00e9")
+    val sketch = row.agg(MisraGries.sketch(col("t"), 2).as("mg"),
+      expr("count_min_sketch(t, 0.01d, 0.99d, 7)").as("cms"))
+    val probes = sketch.select(size(col("mg")),
+      Cms.estimate(Cms.merge(col("cms"), col("cms")), lit("A  b c")))
+      .as[(Int, Long)].collect()(0)
+    assert(probes == ((1, 2L)))
+    // GraftExtensions is the only writer of the function registry
+    val names = spark.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_")).toSet
+    assert(names == Set("graft_dot_d", "graft_ngram_hashes", "graft_simhash64",
+      "graft_minhash_bands", "graft_normalize_ws", "graft_misra_gries"))
   }
 
   test("salted count/avg equal plain groupBy results") {

@@ -16,7 +16,6 @@ class MisraGriesSpec extends SparkSpec {
     val rows = Seq.fill(400)("a") ++ Seq.fill(300)("b") ++
       Seq.fill(200)("c") ++ (0 until 100).map(i => s"r$i")
     for (parts <- Seq(1, 7, 32)) {
-      MisraGries.register(spark)
       val got = scala.util.Random.shuffle(rows).toDF("w").repartition(parts)
         .agg(MisraGries.sketch(col("w"), 5).as("sk"))
         .select(explode(col("sk")).as("c"))
@@ -30,7 +29,6 @@ class MisraGriesSpec extends SparkSpec {
   test("sketch lower bounds never exceed true counts") {
     val rows = Seq.fill(50)("x") ++ Seq.fill(30)("y") ++
       (0 until 40).map(i => s"z$i")
-    MisraGries.register(spark)
     val lbs = rows.toDF("w").repartition(5)
       .agg(MisraGries.sketch(col("w"), 4).as("sk"))
       .select(explode(col("sk")).as("c"))

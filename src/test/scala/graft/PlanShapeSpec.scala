@@ -432,7 +432,6 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("BPE batch rewrite is one codegen'd native projection") {
-    graft.functions.BpeMerge.register(spark)
     import org.apache.spark.sql.functions.col
     // a real scan input — a local literal constant-folds the whole
     // projection away and there would be no plan to guard

@@ -70,7 +70,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("ngramHashes cardinality == distinct sliding n-grams") {
-    TextHashing.register(spark)
     val word = Gen.oneOf("aa", "bb", "cc", "dd")
     val cases = samples(for {
       k <- Gen.choose(0, 12)
@@ -93,7 +92,6 @@ class PropertySpec extends SparkSpec {
   test("simhash64 invariant under extra whitespace") {
     val cases = samples(Gen.listOfN(6, Gen.identifier.suchThat(_.nonEmpty))
       .map(ws => (ws.mkString(" "), ws.mkString("   "))), n = 50)
-    TextHashing.register(spark)
     val got = cases.toDF("a", "b")
       .select(TextHashing.simhash64(col("a")) ===
         TextHashing.simhash64(col("b"))).as[Boolean].collect()
@@ -101,7 +99,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("native dot product: symmetric, non-negative on self, exact model") {
-    graft.functions.VectorExprs.register(spark)
     val vec = Gen.listOfN(8, Gen.chooseNum(-10.0, 10.0)).map(_.toArray)
     val cases = samples(Gen.zip(vec, vec), n = 100)
     val got = cases.toDF("a", "b").select(
@@ -301,7 +298,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("Misra-Gries superset guarantee on random skewed streams") {
-    graft.functions.MisraGries.register(spark)
     for (seed <- 0 until 3) {
       // zipf-ish: item i drawn with weight ~ 1/(i+1)
       val items = samples(Gen.frequency(

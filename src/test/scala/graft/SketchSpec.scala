@@ -107,7 +107,6 @@ class SketchSpec extends SparkSpec {
 
   test("cms expressions: merge-then-probe equals one-pass probe, " +
     "string hashing matches the aggregate") {
-    graft.functions.Cms.register(spark)
     import graft.functions.Cms
     val df = (1 to 2000)
       .map(i => (i.toLong, if (i % 3 == 0) "fee" else if (i % 3 == 1) "fie" else "foe"))
@@ -135,7 +134,6 @@ class SketchSpec extends SparkSpec {
   }
 
   test("cms expression probes integral items (agg addLong parity)") {
-    graft.functions.Cms.register(spark)
     import graft.functions.Cms
     val sk = (1L to 100L).toDF("v")
       .agg(expr("count_min_sketch(v, 0.001d, 0.99d, 7)").as("sk"))

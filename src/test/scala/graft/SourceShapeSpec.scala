@@ -7,8 +7,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One session builder ([[graft.jobs.Jobs]]), one scratch owner
-  * ([[graft.io.Scratch]], the only reader of the process id) and one
-  * rounding rule ([[graft.functions.Rounding]]): a second site of any,
+  * ([[graft.io.Scratch]], the only reader of the process id), one
+  * rounding rule ([[graft.functions.Rounding]]) and one writer of the
+  * function registry ([[graft.GraftExtensions]]): a second site of any,
   * or a hard-coded temp path, fails here.
   */
 class SourceShapeSpec extends AnyFunSuite {
@@ -50,5 +51,13 @@ class SourceShapeSpec extends AnyFunSuite {
     assert(codeSites(sparkRound) == Set.empty)
     // the scan sees code: the helper's call sites are found
     assert(codeSites("roundHalfAway\\(".r).size > 20)
+  }
+
+  test("native expressions are built directly; only GraftExtensions names them") {
+    val lookup = "createOrReplaceTempFunction|registerFunction|call_function\\(".r
+    assert(codeSites(lookup) == Set.empty)
+    assert(codeSites("injectFunction\\(".r) == Set("graft/GraftExtensions.scala"))
+    // the scan sees code: the Column helpers' files are found
+    assert(codeSites("GraftSqlBridge\\.column\\(".r).size >= 7)
   }
 }

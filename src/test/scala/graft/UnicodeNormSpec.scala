@@ -29,7 +29,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("expression matches java.text.Normalizer row-for-row (codegen)") {
-    UnicodeNorm.register(spark)
     val rows = Seq(deacute, "A\u030Angstro\u0308m", "ascii", "",
       "mix\u00e9d x\u0323")
     val df = rows.toDF("s")
@@ -52,7 +51,6 @@ class UnicodeNormSpec extends SparkSpec {
   }
 
   test("null in, null out") {
-    UnicodeNorm.register(spark)
     val df = Seq(Some(deacute), None).toDF("s")
     val got = df.select(UnicodeNorm.nfc(col("s")).as("n")).collect()
     assert(got.count(_.isNullAt(0)) == 1)

@@ -44,6 +44,9 @@ def main(sf_dir, out_dir, only=None):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    # a mistyped filter name checks nothing: a failure, not a skip
+    for name in sorted((only or set()) - oracle.keys()):
+        print(f"FAIL {name}: no oracle SQL"); n_fail += 1
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
@@ -88,7 +91,8 @@ def main(sf_dir, out_dir, only=None):
                 print("  want:\n", want[bad].head(3))
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
-    return 1 if n_fail else 0
+    # a run that checked no query shows nothing
+    return 1 if n_fail or not n_pass else 0
 
 if __name__ == "__main__":
     only = set(sys.argv[3].split(",")) if len(sys.argv) > 3 else None
