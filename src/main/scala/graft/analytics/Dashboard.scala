@@ -168,16 +168,16 @@ object Dashboard {
       hour(col("data_horario")).between(hourLo, hourHi))
 
   /** W4/K1 — top-N recency with positions. Formulated through the
-    * map-side-pruned [[graft.operators.TopK]] operator under a constant
+    * map-side-pruned [[graft.plans.TopKPlan]] node under a constant
     * key rather than `row_number() over (ORDER BY ...)`: the bare
     * global window moves EVERY row to one partition before ranking,
     * whereas TopK's bounded per-partition heaps ship only ≤ n rows per
     * input partition to the single reducer — the global-order analog of
     * `orderBy().limit(n)` (TakeOrderedAndProject), but with the rank
-    * column the dashboard needs.
+    * column the dashboard needs. Rows stay UnsafeRow through the cut.
     */
   def recencyTopN(scored: DataFrame, n: Int): DataFrame =
-    graft.operators.TopK.topKPerKey(
+    graft.plans.TopKPlan.topKPerKey(
       scored.select(col("id_transacao"), col("data_horario"))
         .withColumn("__g", lit(1)),
       Seq("__g"),

@@ -143,7 +143,7 @@ object ExtendedQueries {
     // map-side, so at corpus scale the shuffle carries k rows per
     // stratum per partition, not the corpus
     "sample_k_per_stratum" -> ((s, dir) =>
-      graft.operators.TopK.topKPerKey(
+      graft.plans.TopKPlan.topKPerKey(
         Tables.documents(s, dir)
           .select(col("doc_id"), col("lang"),
             md5(col("doc_id").cast("string")).as("h")),
@@ -462,15 +462,16 @@ object ExtendedQueries {
           date_trunc("second", col("ts")).as("ts_s"), col("value"),
           col("asof_click_value"))
     }),
-    // K2': per-key top-k via the two-phase bounded-heap operator
+    // K2': per-key top-k through the TopKNode plan node on a
+    // low-cardinality key (5 event types)
     "k2_topk_per_key" -> ((s, dir) =>
-      graft.operators.TopK.topKPerKey(
+      graft.plans.TopKPlan.topKPerKey(
         Tables.events(s, dir).select(col("event_id"), col("event_type"),
           col("value")),
         keys = Seq("event_type"),
         orderCols = Seq("value" -> false, "event_id" -> true), k = 3)),
-    // K2'': same operator as a Catalyst plan node (TopKNode → strategy
-    // → partial-prune/exchange/rank execs), on a high-cardinality key
+    // K2'': the same node (TopKNode → strategy → partial-prune/
+    // exchange/rank execs) on a high-cardinality key
     "k3_topk_plan" -> ((s, dir) =>
       graft.plans.TopKPlan.topKPerKey(
         Tables.events(s, dir).select(col("event_id"), col("user_id"),

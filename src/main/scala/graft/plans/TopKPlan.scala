@@ -18,14 +18,25 @@ import org.apache.spark.sql.types.IntegerType
   * ([[TopKPartialExec]] → exchange/sort inserted by Spark's
   * EnsureRequirements → [[TopKFinalExec]]).
   *
-  * Semantics are identical to [[graft.operators.TopK.topKPerKey]]
-  * (and to `row_number() over (partition by keys order by ... nulls
-  * last) <= k`) — tested differentially. Relative to Spark's own
-  * WindowGroupLimit plan for the window formulation, phase 1 prunes
-  * with bounded heaps (O(n log k), no full per-partition sort) instead
-  * of sorting the whole input partition first; see
-  * [[graft.operators.TopK]] for the full comparison. What the
-  * plan-node formulation adds over the `mapPartitions` one:
+  * Results are identical to the window formulation with explicit
+  * nulls-LAST ordering (`row_number() over (partition by keys order by
+  * ... nulls last) <= k`, i.e. `desc` / `asc_nulls_last`) — tested
+  * differentially; note Spark's bare `asc` defaults to nulls FIRST,
+  * which this operator deliberately does not reproduce. Pass tiebreak
+  * columns for a total order, as you would for a deterministic window.
+  *
+  * Honest comparison with the built-in formulation: since 3.5, Spark
+  * plans `row_number().over(Window.partitionBy(keys).orderBy(...)) <= k`
+  * as Sort → WindowGroupLimit(Partial) → Exchange → Sort →
+  * WindowGroupLimit(Final) → Window → Filter — i.e. it ALSO prunes to
+  * ≤ k·keys·partitions rows before the shuffle, but only after FULLY
+  * SORTING each input partition (O(n log n) per partition,
+  * spill-eligible). Phase 1 here replaces that pre-shuffle sort with
+  * bounded per-key heaps: O(n log k) work, O(heapKeys·k) memory, no
+  * sort buffer over the input — the same shuffle volume for strictly
+  * less map-side work. Post-shuffle both sort only the pruned
+  * survivors. What the plan-node formulation adds over a
+  * `mapPartitions` over `Row`:
   *
   *  - the partial prune declares `outputPartitioning = child's`, and
   *    the final node declares `requiredChildDistribution =

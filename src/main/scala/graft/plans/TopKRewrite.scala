@@ -27,18 +27,13 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * Installed by [[graft.GraftExtensions]] alongside [[TopKStrategy]]
   * (the rule must never run in a session that cannot plan the node).
+  * Spark's own `spark.sql.optimizer.excludedRules=graft.plans.TopKRewriteRule`
+  * switches it off for a session, e.g. to A/B the two plans on one's
+  * own data.
   */
 object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
 
   private val MaxHeapKeys = 100000
-
-  /** Session kill-switch for the transparent rewrite (default on).
-    * A rule that silently replaces the built-in plan for a ubiquitous
-    * pattern needs an opt-out a user can flip without rebuilding —
-    * e.g. to A/B the two plans on their own data (SCALE.md §4.1
-    * records that measurement).
-    */
-  val EnabledKey = "spark.graft.topk.rewrite.enabled"
 
   /** Largest row_number bound implied by a conjunct of `cond`. */
   private def bound(cond: Expression, rn: Attribute): Option[Int] =
@@ -51,9 +46,7 @@ object TopKRewriteRule extends Rule[LogicalPlan] with PredicateHelper {
       case EqualTo(IntegerLiteral(v), a: Attribute) if a.semanticEquals(rn) => v
     }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!conf.getConfString(EnabledKey, "true").toBoolean) plan
-    else plan.transformUp {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     // the whole ranking family plans onto the one operator:
     // row_number() -> exact-k mode, rank() -> with-ties mode (tie
     // groups straddle the cut intact), dense_rank() -> top-k-distinct-

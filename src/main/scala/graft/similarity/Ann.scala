@@ -99,7 +99,7 @@ object Ann {
       .select(col("qid"), col("vid"),
         roundHalfAway(dot(col("qp"), col("p")) / (col("qpn") * col("pn")), 6)
           .as("psim"))
-    val cand = graft.operators.TopK.topKPerKey(stage1, keys = Seq("qid"),
+    val cand = graft.plans.TopKPlan.topKPerKey(stage1, keys = Seq("qid"),
       orderCols = Seq("psim" -> false, "vid" -> true), k = candidates,
       rankCol = "prank")
     val reranked = cand.select(col("qid"), col("vid"))

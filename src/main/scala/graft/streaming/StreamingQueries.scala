@@ -242,9 +242,8 @@ object StreamingQueries {
     val snap = StreamingJob.runToMemory(sketch.toDF(), mode = "update",
       extraConfs = Map("spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
-    val last = snap.groupBy(col("shard")).agg(max(col("seen")).as("mx"))
-    val cand = snap.join(broadcast(last),
-        snap("shard") === last("shard") && snap("seen") === last("mx"))
+    val last = snap.groupBy(col("shard")).agg(max(col("seen")).as("seen"))
+    val cand = snap.join(broadcast(last), Seq("shard", "seen"))
       .select(col("item")).distinct()
     val items = Tables.documents(s, dir)
       .select(explode(graft.text.Text.tokens(col("text"))).as("item"))

@@ -182,7 +182,7 @@ object Bm25 {
             lit(B) * col("dl") / lit(avgdl))), 6))
       .select(col("term"), col("doc_id"), col("score"),
         col("tf").cast("long").as("tf"), col("dl"))
-    graft.operators.TopK.topKPerKey(scored, keys = Seq("term"),
+    graft.plans.TopKPlan.topKPerKey(scored, keys = Seq("term"),
       orderCols = Seq("score" -> false, "doc_id" -> true), k = k)
   }
 
@@ -331,12 +331,6 @@ object Bm25 {
       .groupBy(col("qid"), col("doc_id"))
       .agg(roundHalfAway(sum(col("c")), 6).as("score"),
         count(lit(1)).as("n_shared"))
-    // the native plan-node cut: identical semantics to
-    // operators.TopK (differentially pinned there), but rows stay
-    // UnsafeRow end-to-end and the partial heap's qid distribution is
-    // satisfied by the aggregate's own exchange — one fewer
-    // encode/decode boundary per probe, which at streaming cadence is
-    // per-trigger floor
     graft.plans.TopKPlan.topKPerKey(scored, keys = Seq("qid"),
       orderCols = Seq("score" -> false, "doc_id" -> true), k = k)
   }
@@ -362,7 +356,7 @@ object Bm25 {
             lit(B) * col("dl") / lit(avgdl))), 6))
       .select(col("term"), col("doc_id"), col("score"),
         col("tf").cast("long").as("tf"), col("dl"))
-    graft.operators.TopK.topKPerKey(scored, keys = Seq("term"),
+    graft.plans.TopKPlan.topKPerKey(scored, keys = Seq("term"),
       orderCols = Seq("score" -> false, "doc_id" -> true), k = k)
   }
 }

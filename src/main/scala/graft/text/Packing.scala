@@ -269,7 +269,7 @@ object Packing {
     // boundary bucket = first (desc) key whose inclusive total crosses
     val boundary = cumHist
       .filter($"cum_before" < budget && $"cum_before" + $"tok" > budget)
-      .select($"source", $"qk".as("bqk"), (lit(budget) - $"cum_before").as("remaining"))
+      .select($"source", $"qk", (lit(budget) - $"cum_before").as("remaining"))
     // keys fully inside the budget
     val fullKeys = cumHist.filter($"cum_before" + $"tok" <= budget)
       .select($"source", $"qk")
@@ -280,9 +280,7 @@ object Packing {
     val wb = Window.partitionBy($"source").orderBy($"doc_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val keptBoundary = base
-      .join(broadcast(boundary), base("source") === boundary("source") &&
-        $"qk" === $"bqk")
-      .drop(boundary("source"))
+      .join(broadcast(boundary), Seq("source", "qk"))
       .withColumn("cumw", sum($"n_tokens").over(wb))
       .filter($"cumw" <= $"remaining")
       .select($"source", $"doc_id", $"q6", $"n_tokens", $"qk")

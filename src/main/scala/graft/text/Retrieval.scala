@@ -58,9 +58,7 @@ object Retrieval {
         (coalesce(lit(1.0) / (col("lex_rank") + lit(c)), lit(0.0)) +
           coalesce(lit(1.0) / (col("vec_rank") + lit(c)), lit(0.0)))
           .as("rrf_raw"))
-    // the fused frame is k-rows-per-query small: the mapPartitions cut
-    // is fine here (swapping in the TopKPlan node measured as noise)
-    graft.operators.TopK.topKPerKey(fused, keys = Seq("qid"),
+    graft.plans.TopKPlan.topKPerKey(fused, keys = Seq("qid"),
         orderCols = Seq("rrf_raw" -> false, "doc" -> true), k = k)
       .select(col("qid"), col("doc"), col("lex_rank"), col("vec_rank"),
         roundHalfAway(col("rrf_raw"), 6).as("rrf"), col("rank"))

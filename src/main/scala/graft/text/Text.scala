@@ -241,7 +241,7 @@ object Text {
     * tiebreak) so ordering is reproducible across engines. Three
     * shuffles total — (doc,term) counts, per-term document frequency,
     * and the final per-doc top-k via the map-side-pruned
-    * [[graft.operators.TopK]] operator; the corpus size joins in as a
+    * [[graft.plans.TopKPlan]] node; the corpus size joins in as a
     * broadcast scalar, never a driver-side constant.
     */
   def tfIdfTopTerms(docs: org.apache.spark.sql.DataFrame, idCol: String,
@@ -257,7 +257,7 @@ object Text {
       .select(col("doc_id"), col("term"),
         roundHalfAway(col("tf") * (log((col("n_docs") + 1.0) / (col("df_t") + 1.0))
           + 1.0), 6).as("tfidf"))
-    graft.operators.TopK.topKPerKey(scored, Seq("doc_id"),
+    graft.plans.TopKPlan.topKPerKey(scored, Seq("doc_id"),
       Seq("tfidf" -> false, "term" -> true), k)
   }
 

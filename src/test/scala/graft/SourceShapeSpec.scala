@@ -8,9 +8,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One session builder ([[graft.jobs.Jobs]]), one scratch owner
   * ([[graft.io.Scratch]], the only reader of the process id), one
-  * rounding rule ([[graft.functions.Rounding]]) and one writer of the
-  * function registry ([[graft.GraftExtensions]]): a second site of any,
-  * or a hard-coded temp path, fails here.
+  * rounding rule ([[graft.functions.Rounding]]), one writer of the
+  * function registry ([[graft.GraftExtensions]]) and one per-key top-k
+  * ([[graft.plans.TopKPlan]]): a second site of any, or a hard-coded
+  * temp path, fails here.
   */
 class SourceShapeSpec extends AnyFunSuite {
 
@@ -59,5 +60,12 @@ class SourceShapeSpec extends AnyFunSuite {
     assert(codeSites("injectFunction\\(".r) == Set("graft/GraftExtensions.scala"))
     // the scan sees code: the Column helpers' files are found
     assert(codeSites("GraftSqlBridge\\.column\\(".r).size >= 7)
+  }
+
+  test("per-key top-k has one operator: TopKPlan") {
+    // raw text: a conf key lives in a string literal, which codeOnly blanks
+    assert(sitesOf("operators.TopK") ++ sitesOf("spark.graft.topk") == Set.empty)
+    // the scan sees code: the operator's call sites are found
+    assert(codeSites("TopKPlan\\.topKPerKey\\(".r).size >= 6)
   }
 }
