@@ -1,11 +1,16 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
+import scala.collection.{AbstractMapView, MapView}
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{StructType, TimestampType}
 
 import graft.io.Scratch
 import graft.functions.Rounding.roundHalfAway
@@ -199,26 +204,97 @@ object StreamingJob {
   // O1–O5: foreachBatch fan-out.
   // ---------------------------------------------------------------------
 
-  /** Hermetic stand-ins for the reference's Redis sinks (O4/O5): a
-    * keyed snapshot (hash per id) and a recency index (score = epoch
-    * millis). In local mode executors share the JVM so tests can
-    * assert; a production deployment swaps in a connector-backed
-    * implementation with the same per-partition client pattern.
+  /** Hermetic stand-in for the reference's Redis sinks (O4/O5): one
+    * compact [[KeyedStore.Record]] per id in one TrieMap, holding the
+    * batch row as an `UnsafeRow` copy (values by ordinal, Spark's
+    * binary row format), its schema (held once per distinct schema)
+    * and its event-time millis as a primitive. The keyed snapshot
+    * (O4, `hashes`) and the recency index (O5, `recency`, score =
+    * epoch millis) are read views over those records; the only writer
+    * is [[startFanout]]. In local mode executors share the JVM so
+    * tests can assert; a production deployment swaps in a
+    * connector-backed implementation with the same per-partition
+    * client pattern.
     */
   object KeyedStore {
-    val hashes: TrieMap[String, Map[String, String]] = TrieMap.empty
-    val recency: TrieMap[String, Long] = TrieMap.empty
-    def clear(): Unit = { hashes.clear(); recency.clear() }
+    /** One id's stored row; `tsMillis` is `NoTs` when its event
+      * time is null (no timestamp floors to Long.MinValue millis).
+      */
+    private[graft] final class Record(val row: UnsafeRow,
+                                      val schema: StructType,
+                                      val tsMillis: Long) {
+      /** The id's Redis hash: `String.valueOf` of each non-null field's
+        * external value, by field name. Values convert under the
+        * caller's session conf, as the batch's `Row` did under the
+        * batch's (a java8-API session reads `Instant`s). A null-valued
+        * field is ABSENT (a map entry "null" would be
+        * indistinguishable from the string "null").
+        */
+      def fields: Map[String, String] = {
+        val r = CatalystTypeConverters.createToScalaConverter(schema)(row)
+          .asInstanceOf[Row]
+        schema.fieldNames.indices.flatMap(i =>
+          Option(r.get(i)).map(v => schema.fieldNames(i) -> String.valueOf(v))).toMap
+      }
+    }
+
+    private val NoTs = Long.MinValue
+    // package-visible for the size guard in JobsSpec
+    private[graft] val records = TrieMap.empty[String, Record]
+    private[graft] val schemas = TrieMap.empty[StructType, StructType]
+
+    /** O4: id → its hash, converted on read. */
+    val hashes: MapView[String, Map[String, String]] =
+      new AbstractMapView[String, Map[String, String]] {
+        def get(id: String): Option[Map[String, String]] = records.get(id).map(_.fields)
+        def iterator: Iterator[(String, Map[String, String])] =
+          records.iterator.map { case (id, r) => id -> r.fields }
+        override def size: Int = records.size
+      }
+
+    /** O5: id → event-time millis; an id whose timestamp is null is absent. */
+    val recency: MapView[String, Long] = new AbstractMapView[String, Long] {
+      def get(id: String): Option[Long] =
+        records.get(id).map(_.tsMillis).filter(_ != NoTs)
+      def iterator: Iterator[(String, Long)] =
+        records.iterator.collect { case (id, r) if r.tsMillis != NoTs => id -> r.tsMillis }
+    }
+
+    def clear(): Unit = { records.clear(); schemas.clear() }
+
+    /** The `n` most recent ids, newest first, ties broken by id. */
     def topN(n: Int): Seq[String] =
       recency.toSeq.sortBy { case (id, ts) => (-ts, id) }.take(n).map(_._1)
+
+    /** Store every row of one batch partition under its key (rows with
+      * a null key are skipped); `key` and `ts` are ordinals of
+      * `schema`, `ts` a TimestampType column. A put replaces the id's
+      * record, so a replayed batch leaves the store as it was.
+      */
+    private[streaming] def putAll(rows: Iterator[InternalRow],
+                                  batchSchema: StructType,
+                                  key: Int, ts: Int): Unit = {
+      val schema = schemas.getOrElseUpdate(batchSchema, batchSchema)
+      val keyType = schema(key).dataType
+      val keyOf = CatalystTypeConverters.createToScalaConverter(keyType)
+      // the projection reuses its buffer: each stored row is a copy
+      val toUnsafe = UnsafeProjection.create(schema)
+      rows.foreach { r =>
+        if (!r.isNullAt(key))
+          records.put(String.valueOf(keyOf(r.get(key, keyType))),
+            new Record(toUnsafe(r).copy(), schema,
+              if (r.isNullAt(ts)) NoTs else DateTimeUtils.microsToMillis(r.getLong(ts))))
+      }
+    }
   }
 
   /** O1 fan-out: per micro-batch, persist once and write all sinks —
     * facts (O2) and scores (O3) land in per-batch overwrite partitions
     * ([[graft.io.IdempotentBatchSink]] pattern) so an at-least-once
     * redelivery after a mid-fanout crash replaces rather than
-    * duplicates; keyed snapshot (O4) and recency index (O5) are
-    * id-keyed, hence naturally idempotent.
+    * duplicates; the [[KeyedStore]] put (O4/O5) reads the persisted
+    * batch's internal rows in one `foreachPartition` and keys one
+    * record per id, hence is naturally idempotent.
     * streaming_etl.py:179-263 re-expressed.
     */
   def startFanout(scored: DataFrame, factsDir: String, scoresDir: String,
@@ -234,27 +310,15 @@ object StreamingJob {
           graft.io.IdempotentBatchSink(scoresDir).write(
             df.select(col(keyCol), col("t5_score"), col("t6_score"),
               col("t7_score")), batchId)
-          val key = keyCol
-          val ts = tsCol
-          val fields = df.columns
-          df.foreachPartition { (rows: Iterator[Row]) =>
-            // connection-per-partition pattern (the reference's comment
-            // on client non-serializability applies identically here)
-            rows.foreach { r =>
-              val id = r.getAs[Any](key)
-              if (id != null) {
-                // null-valued fields are ABSENT from the hash (a map
-                // entry "null" would be indistinguishable from the
-                // string "null")
-                KeyedStore.hashes.put(String.valueOf(id),
-                  fields.flatMap(f => Option(r.getAs[Any](f))
-                    .map(v => f -> String.valueOf(v))).toMap)
-                val t = r.getAs[java.sql.Timestamp](ts)
-                if (t != null)
-                  KeyedStore.recency.put(String.valueOf(id), t.getTime)
-              }
-            }
-          }
+          val schema = df.schema
+          val key = schema.fieldIndex(keyCol)
+          val ts = schema.fieldIndex(tsCol)
+          require(schema(ts).dataType == TimestampType,
+            s"fan-out event time $tsCol is ${schema(ts).dataType}, not a timestamp")
+          // connection-per-partition pattern (the reference's comment
+          // on client non-serializability applies identically here)
+          df.queryExecution.toRdd.foreachPartition(
+            (rows: Iterator[InternalRow]) => KeyedStore.putAll(rows, schema, key, ts))
         } finally df.unpersist()
         ()
       }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SizeEstimator
 import graft.etl.TestdataAdapter
 import graft.jobs.Jobs
 import graft.streaming.StreamingJob
@@ -62,6 +63,26 @@ class JobsSpec extends SparkSpec {
       scores.columns.length == 5) // 4 score cols + batch partition
     assert(StreamingJob.KeyedStore.hashes.size == 1000)
     assert(StreamingJob.KeyedStore.topN(5).size == 5)
+
+    // view parity: every id's hash is exactly the map a by-name put of
+    // the batch Row built, String.valueOf of each non-null field (so
+    // timestamps, doubles and -0.0 compare as the same strings)
+    val fields = facts.columns.filterNot(_ == "batch")
+    val want = facts.select(fields.map(col).toSeq: _*).collect().map { r =>
+      r.getAs[String]("id_transacao") -> fields.flatMap(f =>
+        Option(r.getAs[Any](f)).map(v => f -> String.valueOf(v))).toMap
+    }
+    assert(want.length == 1000 && want.map(_._2.size).max == fields.length)
+    for ((id, hash) <- want)
+      assert(StreamingJob.KeyedStore.hashes.get(id).contains(hash), id)
+
+    // size guard: the store's retained bytes per id, at most half the
+    // 2,254.8 B/id that SizeEstimator gave the per-id string Maps plus
+    // the recency map on this same fan-out
+    val perId = SizeEstimator.estimate(Array[AnyRef](
+      StreamingJob.KeyedStore.records, StreamingJob.KeyedStore.schemas)) / 1000.0
+    info(f"keyed store: $perId%.1f B/id")
+    assert(perId <= 2254.8 / 2, s"$perId B/id")
   }
 
   test("pivot crosstab (A10 .pivot form) matches conditional-agg form") {

@@ -84,6 +84,89 @@ class StreamingSpec extends SparkSpec {
     assert(StreamingJob.KeyedStore.topN(1) == Seq("x2")) // most recent first
   }
 
+  /** Drains the fan-out over `rows` (id, event time, t5–t7 scores),
+    * with its facts and scores sinks and its checkpoint `ckpt` under
+    * `tmp`.
+    */
+  private def fanout(rows: Seq[(String, Timestamp, Double, Option[Double], Double)],
+                     tmp: String, ckpt: String = "ckpt"): Unit = {
+    implicit val ctx = spark.sqlContext
+    val ms = MemoryStream[(String, Timestamp, Double, Option[Double], Double)]
+    ms.addData(rows: _*)
+    val df = ms.toDF().toDF("id_transacao", "data_horario", "t5_score",
+      "t6_score", "t7_score")
+    val q = StreamingJob.startFanout(df, s"$tmp/facts", s"$tmp/scores",
+      s"$tmp/$ckpt")
+    q.processAllAvailable(); q.stop()
+  }
+
+  test("keyed store: a null field is absent from its hash, a null key stores nothing") {
+    import StreamingJob.KeyedStore
+    KeyedStore.clear()
+    fanout(Seq(("n1", ts("2024-01-01 10:00:00"), 1.0, None, 0.5),
+      (null, ts("2024-01-01 12:00:00"), 2.0, Some(1.0), 0.5),
+      ("n2", null, -0.0, Some(1.0), 0.5)), Scratch.dir("fanout-nulls"))
+    assert(KeyedStore.hashes.size == 2)
+    assert(KeyedStore.hashes.get("n1").contains(Map("id_transacao" -> "n1",
+      "data_horario" -> String.valueOf(ts("2024-01-01 10:00:00")),
+      "t5_score" -> "1.0", "t7_score" -> "0.5")))
+    // a null event time is absent from the hash and from recency
+    assert(KeyedStore.hashes.get("n2").contains(Map("id_transacao" -> "n2",
+      "t5_score" -> "-0.0", "t6_score" -> "1.0", "t7_score" -> "0.5")))
+    assert(KeyedStore.recency.toMap ==
+      Map("n1" -> ts("2024-01-01 10:00:00").getTime))
+    assert(KeyedStore.topN(5) == Seq("n1"))
+  }
+
+  test("keyed store: a replayed batch leaves the size and every record unchanged") {
+    import StreamingJob.KeyedStore
+    KeyedStore.clear()
+    val tmp = Scratch.dir("fanout-replay")
+    val rows = Seq(("r1", ts("2024-01-01 10:00:00"), 1.0, None, 0.5),
+      ("r2", ts("2024-01-01 11:00:00"), 2.0, Some(1.0), 0.5))
+    fanout(rows, tmp)
+    val before = KeyedStore.hashes.toMap
+    val recency = KeyedStore.recency.toMap
+    // batch 0 redelivered into the same sinks, as after a crash
+    // between the sinks and the commit
+    fanout(rows, tmp, "ckpt-replay")
+    assert(KeyedStore.hashes.size == 2)
+    assert(KeyedStore.hashes.toMap == before && KeyedStore.recency.toMap == recency)
+    assert(spark.read.parquet(s"$tmp/facts").count() == 2)
+  }
+
+  test("keyed store: topN puts the newest first and breaks timestamp ties by id") {
+    import StreamingJob.KeyedStore
+    KeyedStore.clear()
+    val t = ts("2024-01-01 10:00:00")
+    fanout(Seq(("c", t, 1.0, None, 0.5), ("a", t, 1.0, None, 0.5),
+      ("d", ts("2024-01-01 09:00:00"), 1.0, None, 0.5),
+      ("b", t, 1.0, None, 0.5)), Scratch.dir("fanout-ties"))
+    assert(KeyedStore.topN(4) == Seq("a", "b", "c", "d"))
+    assert(KeyedStore.topN(2) == Seq("a", "b"))
+  }
+
+  test("keyed store: the java8 datetime API gives the same recency millis") {
+    import StreamingJob.KeyedStore
+    val key = "spark.sql.datetime.java8API.enabled"
+    def run(): (Map[String, Long], Seq[String], Option[Map[String, String]]) = {
+      KeyedStore.clear()
+      fanout(Seq(("j1", ts("2024-01-01 10:00:00"), 1.0, None, 0.5),
+        ("j2", ts("2024-01-01 11:00:00.123"), 2.0, Some(1.0), 0.5)),
+        Scratch.dir("fanout-java8"))
+      (KeyedStore.recency.toMap, KeyedStore.topN(2), KeyedStore.hashes.get("j1"))
+    }
+    val (unset, topUnset, _) = run()
+    val (set, topSet, hash) =
+      try { spark.conf.set(key, "true"); run() } finally spark.conf.unset(key)
+    assert(unset == Map("j1" -> ts("2024-01-01 10:00:00").getTime,
+      "j2" -> ts("2024-01-01 11:00:00.123").getTime))
+    assert(set == unset && topSet == topUnset && topSet == Seq("j2", "j1"))
+    // read under that conf, the hash holds the Instant's string
+    assert(hash.exists(_("data_horario") ==
+      ts("2024-01-01 10:00:00").toInstant.toString))
+  }
+
   test("stateful late-drop keeps events at/after last approved per user") {
     implicit val ctx = spark.sqlContext
     val ms = MemoryStream[TxKeyed]
